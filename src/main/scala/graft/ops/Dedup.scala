@@ -1636,7 +1636,8 @@ object Dedup {
     // joins, sizes); DISK_ONLY persist materializes the shingling
     // flatMap once (the round-12 localCheckpoint motive) AND — unlike
     // localCheckpoint, which degrades to Scan ExistingRDD and loses
-    // its partitioning (measured, tools/CkptShapeProbe) — retains the
+    // its partitioning (pinned by PlanQualitySpec's "q160/q171
+    // pre-partitioned persisted edge frames" test) — retains the
     // HashPartitioning + ordering, so every verification join below
     // is exchange-free and sort-free on the sh side. The round-14
     // stage-attributed 1000× dump showed the old checkpointed frame's

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -85,25 +85,25 @@ object Graph {
    *  with the rounds' execution memory (the measured 100× 16g OOM) —
    *  DISK_ONLY exactly as before. Same plan, same partitioning, same
    *  results either tier. */
-  private[ops] def edgeLevel(s: SparkSession, d: String): StorageLevel =
+  private def edgeLevel(s: SparkSession, d: String): StorageLevel =
     if (liCountCache.getOrElseUpdate(d, Tables.lineitem(s, d).count())
         <= 10000000L) StorageLevel.MEMORY_AND_DISK
     else StorageLevel.DISK_ONLY
 
   /** Delete corpus `d`'s chunk-built edge parquet (and its `.done`
-   *  marker) NOW. The PageRank family persists a (src, dst, deg|wdeg)
-   *  frame DISK_ONLY that duplicates the chunk parquet byte-for-byte
-   *  in information content; at 1000× holding both filled this
-   *  container's scratch to 97% and killed the q148 probe (the
-   *  round-13 disclosed boundary). Callers invoke this through the
-   *  `afterEdges` hook exactly once their persisted frame is
+   *  marker) NOW. A loop that holds its own materialized copy of the
+   *  edges (the persisted PageRank frame, BFS's checkpoint) duplicates
+   *  the chunk parquet byte-for-byte in information content; at 1000×
+   *  holding both filled a ~60 GiB single-host scratch volume to 97%
+   *  and killed the q148 probe (the round-13 disclosed boundary).
+   *  Fired through [[EdgeTier.evict]] exactly once that copy is
    *  MATERIALIZED — after eviction the persisted blocks are the sole
    *  copy, so a lost block can no longer recompute through lineage.
-   *  That is safe in local mode (blocks live in the one surviving
-   *  JVM) and moot on a real cluster (per-executor scratch is ~1000×
-   *  this container's, so the chunk path itself never engages). A
-   *  later coPurchaseStrength call finds no marker and rebuilds. */
-  private[ops] def evictEdgeChunks(d: String): Unit =
+   *  That is safe in local mode (blocks live in the one surviving JVM)
+   *  and moot on a real cluster (per-executor scratch is ~1000× a
+   *  single host's, so the chunk path itself never engages). A later
+   *  coPurchaseStrength call finds no marker and rebuilds. */
+  private def evictEdgeChunks(d: String): Unit =
     chunkDirOf.remove(d).foreach { dir =>
       InferOps.deleteDir(s"$dir.done")
       InferOps.deleteDir(dir)
@@ -115,13 +115,90 @@ object Graph {
       System.err.println(s"[graph] evicted edge-chunk parquet $dir")
     }
 
-  /** True while corpus `d`'s edge frame came from the chunked build —
-   *  the callers' cue that the corpus is 1000×-class and the iterative
-   *  loops should GC-nudge per round (shuffle-file reclaim is
-   *  ContextCleaner-async; ten un-reclaimed iteration exchanges was
-   *  most of the round-13 scratch death). Never true at ≤100×, so the
-   *  bench octaves keep a gc-free loop. */
-  private[ops] def chunkedBuild(d: String): Boolean = chunkDirOf.contains(d)
+  /** Vertex-count ceiling for broadcasting a vertex-sized side (ranks,
+   *  labels, frontiers, degrees) into the round joins: the hashed
+   *  relation costs ~50 B/vertex, so 20 M vertices ≈ 1 GB — affordable
+   *  at the ≥48 g heaps that chunk-built corpora already require. Past
+   *  it the loops fall back to SMJ rounds over an edge frame
+   *  pre-partitioned and sorted by src. The 1000× co-purchase graph
+   *  has ~6.5 M vertices (20 k parts × 1000 shifted copies) — a
+   *  first-cut 5 M ceiling silently fell back to the SMJ shape and
+   *  re-died on scratch, which is why the rank core logs its tier. */
+  private[ops] val BroadcastMaxVertices = 20000000L
+
+  /** The per-corpus edge tier: everything a graph loop needs to know
+   *  about its corpus's size class, computed from the corpus by
+   *  [[edgeTier]] and passed to every loop as one value. Tests build
+   *  one directly to select a tier.
+   *   - `level`: storage level of the persisted/checkpointed edge
+   *     frames ([[edgeLevel]]).
+   *   - `chunked`: the edge build came from the chunked assembly, the
+   *     1000×-class cue. The rank core then re-scans the chunk parquet
+   *     each round instead of persisting a copy (the rescan tier), and
+   *     the rank core and BFS reclaim scratch after every round
+   *     ([[afterRound]]).
+   *     Never true at ≤100×, so the bench octaves keep a gc-free loop.
+   *   - `evict`: deletes the chunk parquet ([[evictEdgeChunks]]). The
+   *     rank core (outside its rescan tier) and BFS fire it once their
+   *     own copy of the edges is materialized; the other loops leave
+   *     the parquet to the queries after them.
+   *   - `vertexCeiling`: the broadcast ceiling ([[BroadcastMaxVertices]]);
+   *     0 forces the SMJ shapes. */
+  final case class EdgeTier(level: StorageLevel = StorageLevel.DISK_ONLY,
+      chunked: Boolean = false, evict: () => Unit = () => (),
+      vertexCeiling: Long = BroadcastMaxVertices) {
+    /** Reclaim the finished round's shuffle files and dropped
+     *  checkpoint blocks NOW at chunked-build scale: ContextCleaner is
+     *  GC-driven AND async — the gc queues the dead references, the
+     *  pause lets the cleaner thread unlink them (twelve unreclaimed
+     *  ~GiB round exchanges was the round-14 1000× scratch death). */
+    def afterRound(loop: String, round: Int, of: Int): Unit =
+      if (chunked) {
+        System.gc()
+        Thread.sleep(2000)
+        System.err.println(s"[graph] $loop round $round/$of done")
+      }
+  }
+
+  /** Corpus `d`'s [[EdgeTier]]. Call it AFTER [[coPurchaseStrength]]:
+   *  the build is what records whether the corpus was chunked. */
+  def edgeTier(s: SparkSession, d: String): EdgeTier =
+    EdgeTier(edgeLevel(s, d), chunkDirOf.contains(d), () => evictEdgeChunks(d))
+
+  /** The edge frame a round loop joins against: the persisted BARE
+   *  frame while the loop's vertex side broadcasts, else a copy
+   *  repartitioned + sorted by src and persisted DISK_ONLY (materialized
+   *  here, the bare frame released), so each SMJ round exchanges and
+   *  sorts only the vertex side. persist, not localCheckpoint: a
+   *  checkpoint forgets the layout — PlanQualitySpec's "q160/q171
+   *  pre-partitioned persisted edge frames" test pins both halves. */
+  private def roundEdges(bare: DataFrame, bcast: Boolean): DataFrame =
+    if (bcast) bare
+    else {
+      val prepped = bare.repartition(col("src")).sortWithinPartitions(col("src"))
+        .persist(StorageLevel.DISK_ONLY)
+      prepped.count()
+      bare.unpersist()
+      prepped
+    }
+
+  /** The checkpoint rule of every round loop, stated once. Each round
+   *  frame is localCheckpointed so the next round plans on a leaf, not
+   *  on the whole chain. Eager (the default) runs one job per round,
+   *  right here. LAZY drops that job and is allowed only at the
+   *  broadcast tier, and only when exactly ONE action consumes the
+   *  round frame — a second consumer would compute the round again
+   *  before its blocks land (LPA's round frame has two; measured 2×
+   *  slower lazy). What lazy means for lineage: `broadcast()` is a plan
+   *  hint, not an action, so a lazy loop runs no job inside itself.
+   *  The next action materializes the whole chain, each round's
+   *  checkpoint computing through the nested broadcast builds of the
+   *  rounds before it — value-identical, and its depth is the round
+   *  count (4-12 in this file), so raising a round count deepens
+   *  that first compute. */
+  private def cutRound(round: DataFrame, broadcastTier: Boolean,
+      consumers: Int = 1): DataFrame =
+    round.localCheckpoint(eager = !(broadcastTier && consumers == 1))
 
   /** Symmetric co-purchase edge frame with tie strength: (src, dst, c)
    *  where c = number of distinct orders containing both parts. One
@@ -198,204 +275,129 @@ object Graph {
     }
   }
 
-  /** Vertex-count ceiling for the broadcast-ranks PageRank tier: the
-   *  hashed relation costs ~50 B/vertex, so 20 M vertices ≈ 1 GB —
-   *  affordable at the ≥48 g heaps that chunk-built corpora already
-   *  require, refused past it (the persisted-layout tier takes over,
-   *  as it must on a graph whose VERTEX set is data-sized). The 1000×
-   *  co-purchase graph has ~6.5 M vertices (20 k parts × 1000 shifted
-   *  copies, Brand#1% alone was 1.31 M at q160's pass) — a first-cut
-   *  5 M ceiling silently fell back to the persisted shape and
-   *  re-died on scratch, which is why the decision now logs. */
-  private[ops] val RescanTierMaxVertices: Long =
-    sys.env.get("SPARK_GRAFT_PR_BCAST_MAX_V").map(_.toLong)
-      .getOrElse(20000000L)
+  /** What varies between the PageRank variants besides the teleport
+   *  term: the round-invariant per-src degree (column `deg`, computed
+   *  by `agg` over the src group) and the per-edge contribution that
+   *  divides by it. */
+  private[ops] final case class Push(deg: String, agg: Column, contrib: String)
+  private[ops] val UniformPush = Push("deg", count(lit(1)), s"r * $Damp div (100 * deg)")
+  private[ops] val WeightedPush = Push("wdeg", sum(col("c")), s"r * $Damp * c div (100 * wdeg)")
 
-  /** Integer PageRank over a directed edge list (src, dst) — callers
-   *  pass a symmetrized frame for undirected graphs. Returns
-   *  (node, deg, rank_units, share). `afterEdges` fires once the
-   *  persisted edge frame is materialized — the hook the co-purchase
-   *  callers use to evict the chunk parquet that fed it (see
-   *  [[evictEdgeChunks]]). Round 15: the persisted frame is the BARE
-   *  (src, dst) edge list and the rounds run the broadcast-ranks
-   *  shape ([[pageRankRescan]]) whenever the vertex set fits
-   *  [[RescanTierMaxVertices]] — deg rides the broadcast side, so the
-   *  edge frame never exchanges or sorts after its build.
-   *
-   *  `rescanTier` selects the small-vertex/huge-edge shape the 1000×
-   *  octave needs (and a 1000-executor cluster would pick for any
-   *  catalog-keyed graph): the co-purchase VERTEX set is parts-sized
-   *  (1.3 M at 1000×) while the edge frame is ~10⁹ rows — so instead
-   *  of persisting a corpus-sized (src, dst, deg) copy NEXT TO the
-   *  chunk parquet that built it (47 GiB of blockmgr beside 12 GiB of
-   *  parquet — the round-14 ENOSPC, twice), each round re-scans the
-   *  edge source and joins a BROADCAST vertex frame: the edge side
-   *  never shuffles at all, and the only exchange is the dst partial
-   *  aggregate (~vertex-bounded per task). Peak scratch falls from
-   *  parquet+persist+join-shuffle to parquet+one aggregate. Engaged
-   *  only when the caller asks (chunked-build corpora) AND the vertex
-   *  count fits [[RescanTierMaxVertices]]; identical integer
-   *  arithmetic, bit-identical ranks. */
-  def pageRank(edges: DataFrame, iterations: Int = Iterations,
-      afterEdges: () => Unit = () => (),
-      gcPerRound: Boolean = false,
-      rescanTier: Boolean = false,
-      level: StorageLevel = StorageLevel.DISK_ONLY): DataFrame = {
-    if (rescanTier) {
-      // coalesce before the aggregate for the same map-side-combine
-      // reason as pageRankRescan's per-round scans
-      val deg0 = edges.coalesce(64)
-        .groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .localCheckpoint()
-      val nv = deg0.count()
-      System.err.println(s"[graph] pageRank tier: vertices=$nv " +
-        s"ceiling=$RescanTierMaxVertices -> " +
-        (if (nv > 0 && nv <= RescanTierMaxVertices) "rescan" else "persisted"))
-      if (nv > 0 && nv <= RescanTierMaxVertices)
-        return pageRankRescan(edges, deg0, nv, iterations, gcPerRound)
-      // vertex set too large to broadcast: fall through to the
-      // persisted-layout shape (deg recomputed there — this fallback
-      // is the rare path and correctness beats one saved aggregate)
+  /** Teleport share of `k` vertices: floor(M·15 / (100·k)). */
+  private def teleShare(k: Long): Long = (M * (100L - Damp)) / (100L * k)
+
+  /** The edge frame a PageRank variant starts from. At chunked-build
+   *  corpora it is the source itself — the zstd chunk parquet, which
+   *  the rescan tier re-reads every round instead of persisting a
+   *  corpus-sized copy next to it (47 GiB of blockmgr beside 12 GiB of
+   *  parquet was the round-14 ENOSPC, twice); coalesced, because the
+   *  dst partial aggregate's exchange volume is (map tasks)×(vertex
+   *  count) rows and fewer, larger map tasks make the map-side combine
+   *  actually combine. Elsewhere: the BARE frame persisted at the
+   *  tier's level — the degree and the seed flag ride other sides, so
+   *  the frame never exchanges or sorts after its build. */
+  private def pushEdges(edges: DataFrame, tier: EdgeTier): DataFrame =
+    if (tier.chunked) edges.coalesce(64) else edges.persist(tier.level)
+
+  /** The mass-push core shared by [[pageRank]], [[weightedPageRank]]
+   *  and [[personalizedPageRank]]: `iterations` rounds of
+   *  [[pushRound]] from `ranks0` over `e` (from [[pushEdges]]), whose
+   *  checkpointed per-src degree frame `deg` has `n` rows. Returns the
+   *  final (node, r). Three tiers, each exactly once:
+   *   - attach (memory-backed corpora under the vertex ceiling): the
+   *     round-invariant degree is attached to the persisted edge side
+   *     ONCE through a broadcast join (no exchange of e — BHJ streams
+   *     the cached blocks) and persisted; each round then broadcasts
+   *     only the vertex-sized (node, r) frame and checkpoints lazily.
+   *     The degree subplan is the deterministic aggregate, not the
+   *     checkpointed copy, so the attached frame plan-matches across
+   *     invocations in one JVM and min-of-N reuses it like the bare
+   *     frame.
+   *   - broadcast (rescan at chunked corpora, else the persisted
+   *     DISK_ONLY frame): each round broadcasts (node, r, deg); the
+   *     edge side never shuffles, the only exchange is the dst partial
+   *     aggregate. Checkpoints stay eager so the per-round reclaim sees
+   *     each round's blocks released on a fixed schedule.
+   *   - SMJ (past the vertex ceiling): rounds join a deg-joined frame
+   *     pre-partitioned + sorted by src ([[roundEdges]]), so each round
+   *     exchanges and sorts only the ranks side.
+   *  Arithmetic is the identical exact-integer protocol in every tier —
+   *  long sums are order-free, so no tier can move a rank unit. */
+  private def massPush(e: DataFrame, deg: DataFrame, n: Long,
+      ranks0: DataFrame, push: Push, teleport: Column, tier: EdgeTier,
+      iterations: Int): DataFrame = {
+    val bcast = n <= tier.vertexCeiling
+    val attach = bcast && !tier.chunked &&
+      tier.level == StorageLevel.MEMORY_AND_DISK
+    if (tier.chunked)
+      System.err.println(s"[graph] mass-push tier: vertices=$n ceiling=" +
+        s"${tier.vertexCeiling} -> ${if (bcast) "rescan" else "smj"}")
+    val degSide = deg.select(col("src"), col(push.deg))
+    val re =
+      if (attach)
+        e.coalesce(64).join(broadcast(
+            e.groupBy(col("src")).agg(push.agg.as(push.deg))), "src")
+          .persist(tier.level)
+      else if (bcast) e.coalesce(64)
+      else roundEdges(e.join(degSide, "src"), bcast = false)
+    // every tier but the rescan one holds its own materialized copy of
+    // the edges by now; the source bytes can go
+    if (!(bcast && tier.chunked)) tier.evict()
+    var ranks = ranks0
+    for (i <- 1 to iterations) {
+      val side =
+        if (attach) broadcast(ranks)
+        else if (bcast) broadcast(ranks.join(degSide, col("node") === col("src"))
+          .select(col("node"), col("r"), col(push.deg)))
+        else ranks
+      ranks = cutRound(pushRound(re, side, push.contrib, teleport),
+        broadcastTier = attach)
+      tier.afterRound("mass-push", i, iterations)
     }
-    // Persist the BARE edge frame (round 15, guide §2.3/§2.4/§3.1):
-    // the old shape persisted edges.join(deg) — which paid the deg
-    // aggregate's exchange PLUS a data-sized hash(src) exchange for
-    // the join layout, and then re-sorted the frame inside every
-    // round's SMJ (the checkpointed ranks side has UnknownPartitioning
-    // so the joins never planned broadcast). The rounds never needed
-    // deg ON the edge rows: the rescan tier's round shape carries
-    // (node, r, deg) on the BROADCAST side. Persisting bare edges and
-    // routing the rounds through [[pageRankRescan]] removes BOTH
-    // data-sized exchanges and every per-round sort of e — measured
-    // at sf0.1: 6.2e6 → ~3.6e6 shuffle rows/run. deg comes from ONE
-    // pass over the persisted frame (vertex-sized checkpoint), which
-    // also materializes e. DISK_ONLY above ~10⁷ lineitem rows,
-    // memory-backed below ([[edgeLevel]]). Arithmetic is the identical
-    // exact-integer protocol — ranks are bit-identical either way.
-    val e = edges.persist(level)
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    val n = deg.count()
-    afterEdges() // e's blocks are cached; the source bytes can go
-    if (n == 0)
-      return deg.select(col("src").as("node"), lit(0L).as("deg"),
-        lit(0L).as("rank_units"), lit(0.0).as("share"))
-    if (n <= RescanTierMaxVertices)
-      // small-corpus tier (memory-backed edge frame): attach the
-      // round-invariant deg to the persisted edge side once — see
-      // pageRankRescan's attachDeg note (round 16)
-      return pageRankRescan(e, deg, n, iterations, gcPerRound,
-        attachDeg = level == StorageLevel.MEMORY_AND_DISK, attachLevel = level)
-    // vertex set past the broadcast ceiling: SMJ rounds over a
-    // deg-joined frame pre-partitioned + sorted by src (the persisted-
-    // layout shape — each round exchanges/sorts only the ranks side)
-    val tele = (M * (100L - Damp)) / (100L * n)
-    val ej = e.join(deg, "src")
-      .repartition(col("src")).sortWithinPartitions(col("src"))
-      .persist(StorageLevel.DISK_ONLY)
-    var ranks = deg.select(col("src").as("node"), lit(M / n).as("r"))
-    var i = 0
-    while (i < iterations) {
-      ranks = ej.join(ranks, col("src") === col("node"))
-        .select(col("dst"), expr(s"r * $Damp div (100 * deg)").as("c"))
-        .groupBy(col("dst"))
-        .agg((sum(col("c")) + lit(tele)).as("r"))
-        .select(col("dst").as("node"), col("r"))
-        // cut lineage each round: the plan stays one join+agg deep
-        // instead of compounding 10 shuffle stages into one DAG
-        .localCheckpoint()
-      // at chunked-build scale, reclaim the finished round's shuffle
-      // files + dropped checkpoint blocks NOW (ContextCleaner is
-      // GC-driven; ten lingering ~4 GiB exchanges are scratch the
-      // 1000× octave does not have)
-      if (gcPerRound) System.gc()
-      i += 1
-    }
-    ranks.join(deg, col("node") === col("src"))
-      .select(col("node"), col("deg"), col("r").as("rank_units"),
+    ranks
+  }
+
+  /** One mass-push round, the round body of every variant and tier:
+   *  `ranks` (node, r[, deg]) equi-joins the edge frame on src, each
+   *  edge carries its floor'd `contrib`, and the contributions sum per
+   *  dst plus the variant's `teleport` term. Exposed for the plan
+   *  gate. */
+  private[ops] def pushRound(e: DataFrame, ranks: DataFrame, contrib: String,
+      teleport: Column): DataFrame =
+    e.join(ranks, col("src") === col("node"))
+      .groupBy(col("dst"))
+      .agg((sum(expr(contrib)) + teleport).as("r"))
+      .select(col("dst").as("node"), col("r"))
+
+  /** (node, <deg>, rank_units, share) ordered by node. */
+  private def rankReadout(ranks: DataFrame, deg: DataFrame, degCol: String,
+      bcast: Boolean): DataFrame = {
+    val side = deg.select(col("src"), col(degCol))
+    ranks.join(if (bcast) broadcast(side) else side, col("node") === col("src"))
+      .select(col("node"), col(degCol), col("r").as("rank_units"),
         // raw division of exact longs by a constant — bit-identical
         (col("r") / (M * 1.0)).as("share"))
       .orderBy(col("node"))
   }
 
-  /** The broadcast-ranks iteration body of [[pageRank]]'s rescan
-   *  tier. Each round: re-scan `edges` (the zstd chunk parquet at
-   *  1000× — IO, no shuffle), broadcast-hash-join the vertex-sized
-   *  (node, r, deg) frame, floor'd contributions partial-aggregate on
-   *  dst map-side (per-task state ≤ vertex count) and exchange only
-   *  the combined partials. Arithmetic is the identical exact-integer
-   *  mass protocol — long sums are order-free, so the tier change
-   *  cannot move a single rank unit. */
-  private def pageRankRescan(edges: DataFrame, deg: DataFrame, n: Long,
-      iterations: Int, gcPerRound: Boolean,
-      attachDeg: Boolean = false,
-      attachLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
-    val tele = (M * (100L - Damp)) / (100L * n)
-    // coalesce the scan: the dst partial aggregate's exchange volume is
-    // (map tasks)×(vertex count) rows — ~140 parquet-split tasks of the
-    // chunk dir each emit up to the full 1.3 M-key state. Fewer, larger
-    // map tasks make the map-side combine actually combine (the whole
-    // point of this tier); 64 still saturates 32 threads.
-    val e0 = edges.coalesce(64)
-    // attachDeg (round 16, verdict ask 3): deg is ROUND-INVARIANT, yet
-    // every round rebuilt broadcast(ranks ⋈ deg) — an inner vertex
-    // join whose own broadcast build is one more driver-serialized job
-    // per round, and at sf0.1 the whole family is job-floor-bound (no
-    // graph query scaled past 1.34× at 4× the cores). At the memory-
-    // backed small-corpus tier, attach deg to the persisted edge side
-    // ONCE via a broadcast join (no exchange of e — BHJ streams the
-    // cached blocks) and persist; each round then broadcasts ONLY the
-    // vertex-sized (node, r) frame. The deg subplan is the
-    // deterministic aggregate (not the checkpointed copy), so the
-    // attached frame plan-matches across invocations in one JVM and
-    // min-of-N reuses it like the bare frame. The rescan tier keeps
-    // the join-per-round shape verbatim: there the edge frame is
-    // data-sized and deliberately UNPERSISTED (re-scanned parquet),
-    // and a second edge-sized copy is exactly the round-14 ENOSPC.
-    // Identical integer arithmetic either way — deg values come from
-    // the same aggregate over the same rows.
-    val e =
-      if (attachDeg)
-        e0.join(broadcast(
-            edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))), "src")
-          .persist(attachLevel)
-      else e0
-    var ranks = deg.select(col("src").as("node"), lit(M / n).as("r"))
-    var i = 0
-    while (i < iterations) {
-      val rw =
-        if (attachDeg) broadcast(ranks)
-        else broadcast(ranks.join(deg, col("node") === col("src"))
-          .select(col("node"), col("r"), col("deg")))
-      ranks = e.join(rw, col("src") === col("node"))
-        .select(col("dst"), expr(s"r * $Damp div (100 * deg)").as("c"))
-        .groupBy(col("dst"))
-        .agg((sum(col("c")) + lit(tele)).as("r"))
-        .select(col("dst").as("node"), col("r"))
-        // cut lineage each round (vertex-sized). At the attached small
-        // tier the checkpoint is LAZY (round 16, the job-floor attack):
-        // the next round's broadcast build materializes it as a side
-        // effect, so the separate final-stage job per round disappears;
-        // the RDD still checkpoints on first compute, so lineage depth
-        // stays O(1). The rescan tier keeps the eager checkpoint — its
-        // per-round System.gc() must see the finished round's blocks
-        // released on a deterministic schedule (the 1000× scratch
-        // story).
-        .localCheckpoint(eager = !attachDeg)
-      if (gcPerRound) {
-        // the finished round's ~GiB-scale agg exchange is dead the
-        // moment the checkpoint truncates lineage — but ContextCleaner
-        // is async; 12 unreclaimed rounds was the round-14 run-4 death
-        System.gc()
-        Thread.sleep(2000)
-        System.err.println(s"[graph] rescan round ${i + 1}/$iterations done")
-      }
-      i += 1
-    }
-    ranks.join(broadcast(deg), col("node") === col("src"))
-      .select(col("node"), col("deg"), col("r").as("rank_units"),
-        (col("r") / (M * 1.0)).as("share"))
-      .orderBy(col("node"))
+  /** Integer PageRank over a directed edge list (src, dst) — callers
+   *  pass a symmetrized frame for undirected graphs. Returns
+   *  (node, deg, rank_units, share); the rounds run on [[massPush]] in
+   *  the tier `tier` selects. */
+  def pageRank(edges: DataFrame, iterations: Int = Iterations,
+      tier: EdgeTier = EdgeTier()): DataFrame = {
+    val e = pushEdges(edges, tier)
+    // one vertex-sized pass yields deg and materializes a persisted e
+    val deg = e.groupBy(col("src")).agg(UniformPush.agg.as("deg"))
+      .localCheckpoint()
+    val n = deg.count()
+    if (n == 0)
+      return deg.select(col("src").as("node"), lit(0L).as("deg"),
+        lit(0L).as("rank_units"), lit(0.0).as("share"))
+    val ranks = massPush(e, deg, n,
+      deg.select(col("src").as("node"), lit(M / n).as("r")),
+      UniformPush, lit(teleShare(n)), tier, iterations)
+    rankReadout(ranks, deg, "deg", n <= tier.vertexCeiling)
   }
 
   /** q148: PageRank over the co-purchase part graph (10 integer
@@ -411,12 +413,7 @@ object Graph {
    *  the rescan-tier spec pins. */
   def q148PageRank(s: SparkSession, d: String): DataFrame = {
     val edges = coPurchaseStrength(s, d).select(col("src"), col("dst"))
-    // chunked-build corpora take the rescan tier (the chunk parquet is
-    // then re-read per round, so the eviction hook must NOT fire — it
-    // only does from the persisted shape, which the tier replaces)
-    pageRank(edges, afterEdges = () => evictEdgeChunks(d),
-      gcPerRound = chunkedBuild(d), rescanTier = chunkedBuild(d),
-      level = edgeLevel(s, d))
+    pageRank(edges, tier = edgeTier(s, d))
       .select(col("node").as("part_id"), col("deg"), col("rank_units"), col("share"))
   }
 
@@ -466,12 +463,9 @@ object Graph {
    *  along every out-edge, so a part co-purchased with another in 50
    *  orders pulls 50× the mass of a one-order tie — the centrality
    *  signal q148 deliberately discards (`coPurchaseStrength` computes
-   *  `c`, q148 drops it). Same shuffle pair per iteration as
-   *  [[pageRank]] (ranks⋈edges on src + dst hash agg over the
-   *  once-persisted DISK_ONLY edge frame — persist, not checkpoint,
-   *  keeps the build join's src partitioning, see CkptShapeProbe)
-   *  plus the weighted-degree aggregate (Σc per src) the suite
-   *  otherwise lacks.
+   *  `c`, q148 drops it). The same [[massPush]] rounds as
+   *  [[pageRank]], with the weighted degree (Σc per src) in place of
+   *  the edge count.
    *
    *  Exactness: all-integer like q148 — floor per edge, order-free
    *  long sums, so 10 iterations are bit-identical to the oracle's
@@ -485,22 +479,15 @@ object Graph {
    *  fails loudly with a pre-scale-by-GCD hint instead of silently
    *  wrapping in non-ANSI mode while the int128 oracle stays exact.
    *  Returns (node, wdeg, rank_units, share). */
-  def weightedPageRank(edges: DataFrame,
-      iterations: Int = Iterations,
-      afterEdges: () => Unit = () => (),
-      gcPerRound: Boolean = false,
-      level: StorageLevel = StorageLevel.DISK_ONLY): DataFrame = {
-    // persist the BARE (src, dst, c) frame; wdeg rides the broadcast
-    // side of each round (the q148 round-15 shape — no data-sized
-    // wdeg join, no per-round sort/exchange of e). One vertex-sized
-    // aggregate materializes the frame, yields wdeg AND checks the
-    // int64 overflow bound on the per-edge product r*Damp*c (r <= M).
-    val e = edges.persist(level)
+  def weightedPageRank(edges: DataFrame, iterations: Int = Iterations,
+      tier: EdgeTier = EdgeTier()): DataFrame = {
+    // one vertex-sized aggregate materializes a persisted e, yields
+    // wdeg AND checks the int64 bound on the per-edge product r*Damp*c
+    val e = pushEdges(edges, tier)
     val wdeg = e.groupBy(col("src"))
-      .agg(sum(col("c")).as("wdeg"), max(col("c")).as("cmax"))
+      .agg(WeightedPush.agg.as("wdeg"), max(col("c")).as("cmax"))
       .localCheckpoint()
     val head = wdeg.agg(count(lit(1)), max(col("cmax"))).head()
-    afterEdges() // e's blocks are cached; the source bytes can go
     val n = head.getLong(0)
     if (n == 0)
       return wdeg.select(col("src").as("node"), lit(0L).as("wdeg"),
@@ -511,81 +498,17 @@ object Graph {
         s"bound $MaxSafeEdgeStrength for the per-edge product r*$Damp*c " +
         "(r can reach the 1e12 mass scale); pre-scale c by its GCD or " +
         "carry contributions in decimal(38,0)")
-    val tele = (M * (100L - Damp)) / (100L * n)
-    val bcastRounds = n <= RescanTierMaxVertices
-    // attach the round-invariant wdeg to the persisted edge side once
-    // at the memory-backed tier (round 16 — see pageRankRescan's
-    // attachDeg note; identical floor'd integer contributions)
-    val attach = bcastRounds && level == StorageLevel.MEMORY_AND_DISK
-    val eA =
-      if (!attach) null
-      else e.join(broadcast(
-          e.groupBy(col("src")).agg(sum(col("c")).as("wdeg"))), "src")
-        .persist(level)
-    // past the vertex ceiling: SMJ rounds over a wdeg-joined frame
-    // pre-partitioned + sorted by src, materialized ONCE (the
-    // pre-round-15 shape — each round exchanges/sorts only ranks)
-    val ejFallback =
-      if (bcastRounds) null
-      else e.join(wdeg.select(col("src"), col("wdeg")), "src")
-        .repartition(col("src")).sortWithinPartitions(col("src"))
-        .persist(StorageLevel.DISK_ONLY)
-    var ranks = wdeg.select(col("src").as("node"), lit(M / n).as("r"))
-    var i = 0
-    while (i < iterations) {
-      // broadcast-ranks round (the pageRankRescan shape, weighted):
-      // the vertex-sized rank frame broadcasts, e streams untouched,
-      // floor'd c-proportional contributions partial-aggregate on dst.
-      val next =
-        if (attach) {
-          eA.join(broadcast(ranks), col("src") === col("node"))
-            .select(col("dst"),
-              expr(s"r * $Damp * c div (100 * wdeg)").as("contrib"))
-            .groupBy(col("dst"))
-            .agg((sum(col("contrib")) + lit(tele)).as("r"))
-            .select(col("dst").as("node"), col("r"))
-        } else if (bcastRounds) {
-          val rw = broadcast(ranks.join(wdeg, col("node") === col("src"))
-            .select(col("node"), col("r"), col("wdeg")))
-          e.join(rw, col("src") === col("node"))
-            .select(col("dst"),
-              expr(s"r * $Damp * c div (100 * wdeg)").as("contrib"))
-            .groupBy(col("dst"))
-            .agg((sum(col("contrib")) + lit(tele)).as("r"))
-            .select(col("dst").as("node"), col("r"))
-        } else weightedRankRound(ejFallback, ranks, tele)
-      // cut lineage each round (the q148 shape); LAZY at the attached
-      // tier — the next round's broadcast build materializes it (see
-      // pageRankRescan's round-16 note), eager elsewhere
-      ranks = next.localCheckpoint(eager = !attach)
-      if (gcPerRound) System.gc() // see pageRank: async shuffle reclaim
-      i += 1
-    }
-    val wdegSide = wdeg.select(col("src"), col("wdeg"))
-    ranks.join(if (bcastRounds) broadcast(wdegSide) else wdegSide,
-        col("node") === col("src"))
-      .select(col("node"), col("wdeg"), col("r").as("rank_units"),
-        (col("r") / (M * 1.0)).as("share"))
-      .orderBy(col("node"))
+    val ranks = massPush(e, wdeg, n,
+      wdeg.select(col("src").as("node"), lit(M / n).as("r")),
+      WeightedPush, lit(teleShare(n)), tier, iterations)
+    rankReadout(ranks, wdeg, "wdeg", n <= tier.vertexCeiling)
   }
-
-  /** One weighted mass-push round: ranks equi-join the checkpointed
-   *  (src, dst, c, wdeg) edge frame on src, floor'd c-proportional
-   *  contributions hash-aggregate on dst. Exposed for the plan gate. */
-  private[ops] def weightedRankRound(e: DataFrame, ranks: DataFrame,
-      tele: Long): DataFrame =
-    e.join(ranks, col("src") === col("node"))
-      .select(col("dst"), expr(s"r * $Damp * c div (100 * wdeg)").as("contrib"))
-      .groupBy(col("dst"))
-      .agg((sum(col("contrib")) + lit(tele)).as("r"))
-      .select(col("dst").as("node"), col("r"))
 
   /** q165: strength-weighted PageRank over the co-purchase graph —
    *  the full (src, dst, c) frame q148 truncates. */
   def q165WeightedPageRank(s: SparkSession, d: String): DataFrame = {
     val edges = coPurchaseStrength(s, d)
-    weightedPageRank(edges, afterEdges = () => evictEdgeChunks(d),
-        gcPerRound = chunkedBuild(d), level = edgeLevel(s, d))
+    weightedPageRank(edges, tier = edgeTier(s, d))
       .select(col("node").as("part_id"), col("wdeg"), col("rank_units"),
         col("share"))
   }
@@ -635,22 +558,17 @@ object Graph {
    *  at 0. Hop counts are exact integers: no float anywhere, so the
    *  frame is bit-identical to the oracle's recursive-CTE replay. */
   def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int,
-      afterEdges: () => Unit = () => (),
-      gcPerRound: Boolean = false,
-      level: StorageLevel = StorageLevel.DISK_ONLY): DataFrame = {
-    // storage tier by corpus size ([[edgeLevel]]); DISK_ONLY past it
-    // (the q148 lesson: memory-resident blocks compete with the
-    // join's execution pages at data scale)
+      tier: EdgeTier = EdgeTier()): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
-      .localCheckpoint(eager = true, level)
+      .localCheckpoint(eager = true, tier.level)
     var dist = seeds.select(col("node"), lit(0L).as("hops"))
       .distinct().localCheckpoint()
     // e AND dist are materialized (seeds may read the same source
     // frame as edges — q158's do); the source bytes can go
-    afterEdges()
+    tier.evict()
     var frontier = dist.select(col("node"))
     // frontier and visited set are vertex-sized — broadcast them into
-    // the round joins while the visited count fits the rescan tier's
+    // the round joins while the visited count fits the tier's
     // ceiling (round 15, guide §3.1): the checkpointed e has
     // UnknownPartitioning, so the SMJ shape re-exchanged + re-sorted
     // the DATA-sized edge frame every round. The count that gates the
@@ -659,14 +577,14 @@ object Graph {
     var frontierRows = distRows
     var h = 1
     while (h <= maxHops && frontierRows > 0) {
-      val bc = distRows <= RescanTierMaxVertices
+      val bc = distRows <= tier.vertexCeiling
       val next = bfsRound(e, dist, frontier, h, bcast = bc)
         .localCheckpoint() // cut lineage: plan depth stays O(1) per round
       frontierRows = next.count()
       distRows += frontierRows
       dist = dist.union(next).localCheckpoint()
       frontier = next.select(col("node"))
-      if (gcPerRound) System.gc() // see pageRank: async shuffle reclaim
+      tier.afterRound("bfs", h, maxHops)
       h += 1
     }
     dist
@@ -706,8 +624,7 @@ object Graph {
       .select(col("p_partkey"))
     val seeds = e.select(col("src").as("node")).distinct()
       .join(seedParts, col("node") === col("p_partkey"), "left_semi")
-    bfsHops(e, seeds, maxHops = 6, afterEdges = () => evictEdgeChunks(d),
-      gcPerRound = chunkedBuild(d), level = edgeLevel(s, d))
+    bfsHops(e, seeds, maxHops = 6, tier = edgeTier(s, d))
       .select(col("node").as("part_id"), col("hops"))
       .orderBy(col("part_id"))
   }
@@ -756,16 +673,16 @@ object Graph {
    *  coefficient = 2·T / (deg·(deg−1)) as a raw division of exact
    *  longs (bit-identical cross-engine). */
   def q159Triangles(s: SparkSession, d: String): DataFrame = {
-    val e = coPurchaseStrength(s, d).filter(col("c") >= 2)
-      .select(col("src"), col("dst"))
-      .localCheckpoint(eager = true, edgeLevel(s, d))
+    val strength = coPurchaseStrength(s, d)
+    val tier = edgeTier(s, d)
+    val e = strength.filter(col("c") >= 2).select(col("src"), col("dst"))
+      .localCheckpoint(eager = true, tier.level)
     // vertex-sized; checkpointed so the two orientation joins, the
     // readout join and the broadcast gate share one computation
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .localCheckpoint()
-    val bc = deg.count() <= RescanTierMaxVertices
     deg.select(col("src").as("part_id"), col("deg"))
-      .join(triangleCredits(e, deg, bcast = bc, level = edgeLevel(s, d)),
+      .join(triangleCredits(e, deg, tier),
         col("part_id") === col("node"), "left")
       .select(col("part_id"), col("deg"),
         coalesce(col("triangles"), lit(0L)).as("triangles"))
@@ -780,14 +697,15 @@ object Graph {
    *  edge frame with its degree frame — the oriented wedge-closure
    *  core of q159, shared with the fixture spec. */
   private[ops] def triangleCredits(e: DataFrame, deg: DataFrame,
-      bcast: Boolean = false,
-      level: StorageLevel = StorageLevel.DISK_ONLY): DataFrame = {
+      tier: EdgeTier = EdgeTier()): DataFrame = {
+    val bcast = deg.count() <= tier.vertexCeiling
     def side(v: DataFrame) = if (bcast) broadcast(v) else v
     // oriented edges carry the endpoint ranks so the wedge join can
     // order its two legs without re-joining degrees. The degree joins
     // broadcast under the vertex ceiling; the frame parks partitioned
     // by the wedge key u AND sorted (u, v) — persist, not checkpoint
-    // (CkptShapeProbe: a checkpoint forgets the layout), so the wedge
+    // (a checkpoint forgets the layout: PlanQualitySpec's "q160/q171
+    // pre-partitioned persisted edge frames" test), so the wedge
     // self-join reads BOTH its sides exchange-free and sort-free, and
     // the closure semi-join's build side (keys (cv, cw) = (u, v)) is
     // subset-co-partitioned on u with the sort order already exact —
@@ -802,7 +720,7 @@ object Graph {
       .select(col("src").as("u"), col("dst").as("v"),
         col("dv"))
       .repartition(col("u")).sortWithinPartitions(col("u"), col("v"))
-      .persist(level)
+      .persist(tier.level)
     val wedges = o.as("a").join(o.as("b"),
         col("a.u") === col("b.u") &&
           (col("a.dv") < col("b.dv") ||
@@ -871,14 +789,14 @@ object Graph {
    *  plan O(1) deep. Work per round is O(surviving edges), total
    *  O(rounds·E); all counts exact integers. */
   def kCorePeel(edges: DataFrame, k: Int, rounds: Int,
-      level: StorageLevel = StorageLevel.DISK_ONLY): DataFrame = {
+      tier: EdgeTier = EdgeTier()): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
-      .localCheckpoint(eager = true, level)
+      .localCheckpoint(eager = true, tier.level)
     var surv = e.select(col("src").as("node")).distinct().localCheckpoint()
     // survivor sets only shrink — gate the broadcast once on the
     // initial vertex count (round 15, guide §3.1: the checkpointed e
     // re-exchanged + re-sorted in both semi-joins every round)
-    val bc = surv.count() <= RescanTierMaxVertices
+    val bc = surv.count() <= tier.vertexCeiling
     var r = 0
     while (r < rounds) {
       surv = aliveEdges(e, surv, bcast = bc)
@@ -920,11 +838,12 @@ object Graph {
   /** q168: the 3-core of the c≥2 co-purchase strength graph after
    *  `KCoreRounds` (12) peeling rounds — (part_id, core_deg,
    *  is_stable). */
-  def q168KCore(s: SparkSession, d: String): DataFrame =
-    kCorePeel(coPurchaseStrength(s, d).filter(col("c") >= 2), KCoreK,
-        KCoreRounds, level = edgeLevel(s, d))
+  def q168KCore(s: SparkSession, d: String): DataFrame = {
+    val strength = coPurchaseStrength(s, d)
+    kCorePeel(strength.filter(col("c") >= 2), KCoreK, KCoreRounds, edgeTier(s, d))
       .select(col("node").as("part_id"), col("core_deg"), col("is_stable"))
       .orderBy(col("part_id"))
+  }
 
   /** Oracle: the identical peel UNROLLED as a CTE chain — round i+1
    *  keeps exactly the vertices with ≥ k surviving-subgraph neighbors
@@ -991,7 +910,7 @@ object Graph {
       .localCheckpoint(eager = true, edgeLevel(s, d))
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .localCheckpoint()
-    val bc = deg.count() <= RescanTierMaxVertices
+    val bc = deg.count() <= BroadcastMaxVertices
     def side(v: DataFrame) = if (bc) broadcast(v) else v
     val dec = "decimal(38,0)"
     val ed = e
@@ -1069,10 +988,12 @@ object Graph {
    *  frame. At 100 TB the edge frame bucket-partitions on the wedge
    *  key so the self-join is co-located; the deg frame is
    *  vertex-sized and broadcast-eligible. */
-  def q170LinkPredict(s: SparkSession, d: String): DataFrame =
-    linkPredict(coPurchaseStrength(s, d).filter(col("c") >= 2)
-      .select(col("src"), col("dst")), level = edgeLevel(s, d))
+  def q170LinkPredict(s: SparkSession, d: String): DataFrame = {
+    val strength = coPurchaseStrength(s, d)
+    linkPredict(strength.filter(col("c") >= 2).select(col("src"), col("dst")),
+        tier = edgeTier(s, d))
       .orderBy(col("u"), col("v"))
+  }
 
   /** Core scorer over a symmetric (src, dst) edge frame — exposed so
    *  the spec can pin the wedge/anti-join/score math on hand-sized
@@ -1084,16 +1005,16 @@ object Graph {
    *  (u, v) = (src, dst), subset-co-partitioned on src) read the edge
    *  side exchange-free and sort-free; the vertex-sized degree frame
    *  checkpoints once and broadcasts into its three joins under the
-   *  rescan tier's ceiling. Before round 15 the checkpointed frame
+   *  tier's vertex ceiling. Before round 15 the checkpointed frame
    *  re-exchanged in all four joins. */
   def linkPredict(edges: DataFrame, minCn: Int = 2,
-      level: StorageLevel = StorageLevel.DISK_ONLY): DataFrame = {
+      tier: EdgeTier = EdgeTier()): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
       .repartition(col("src")).sortWithinPartitions(col("src"), col("dst"))
-      .persist(level)
+      .persist(tier.level)
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .localCheckpoint()
-    val bc = deg.count() <= RescanTierMaxVertices
+    val bc = deg.count() <= tier.vertexCeiling
     def side(v: DataFrame) = if (bc) broadcast(v) else v
     val mid = e.select(col("src").as("w"), col("dst").as("u"))
       .join(side(deg.select(col("src").as("w"), col("deg").as("wdeg"))), "w")
@@ -1163,32 +1084,22 @@ object Graph {
    *  frame bucket-partitions on src, making the per-round join
    *  shuffle-free on the big side. */
   def cheapestPaths(edges: DataFrame, seeds: DataFrame,
-      rounds: Int = BfRounds,
-      level: StorageLevel = StorageLevel.DISK_ONLY): DataFrame = {
+      rounds: Int = BfRounds, tier: EdgeTier = EdgeTier()): DataFrame = {
     // persist the BARE frame and broadcast the vertex-sized dist side
     // into every relaxation (round 15, guide §3.1 — the
     // connectedComponents rationale); past the broadcast ceiling fall
-    // back to the pre-partitioned SMJ layout exactly as before
-    val bareFirst = edges.select(col("src"), col("dst"), col("w"))
-      .persist(level)
+    // back to the pre-partitioned SMJ layout ([[roundEdges]])
+    val bare = edges.select(col("src"), col("dst"), col("w"))
+      .persist(tier.level)
     var dist = seeds.select(col("node"), lit(0L).as("dcost")).distinct()
       .localCheckpoint()
     // dist grows toward the vertex set; gate per round on its count
     // (checkpointed, vertex-sized — the count is cheap)
     var nd = dist.count()
-    val e =
-      if (nd <= RescanTierMaxVertices) bareFirst
-      else {
-        val prepped = edges.select(col("src"), col("dst"), col("w"))
-          .repartition(col("src")).sortWithinPartitions(col("src"))
-          .persist(StorageLevel.DISK_ONLY)
-        prepped.count()
-        bareFirst.unpersist()
-        prepped
-      }
+    val e = roundEdges(bare, nd <= tier.vertexCeiling)
     var i = 0
     while (i < rounds) {
-      dist = relaxRound(e, dist, bcast = nd <= RescanTierMaxVertices)
+      dist = relaxRound(e, dist, bcast = nd <= tier.vertexCeiling)
         .localCheckpoint()
       nd = dist.count()
       i += 1
@@ -1220,7 +1131,7 @@ object Graph {
       .join(part(s, d).filter(col("p_brand") === "Brand#11")
         .select(col("p_partkey")),
         col("node") === col("p_partkey"), "left_semi")
-    cheapestPaths(e, seeds, level = edgeLevel(s, d))
+    cheapestPaths(e, seeds, tier = edgeTier(s, d))
       .select(col("node").as("part_id"), col("dcost").as("cost_units"))
       .orderBy(col("part_id"))
   }
@@ -1340,10 +1251,10 @@ object Graph {
       .select(col("cust"), lit(HitsM).as("h"))
       .localCheckpoint()
     // both score frames are vertex-sized — broadcast them into every
-    // half-round join while they fit the rescan tier's ceiling (round
-    // 15, guide §3.1: the checkpointed e otherwise re-exchanged and
+    // half-round join while they fit the vertex ceiling (round 15,
+    // guide §3.1: the checkpointed e otherwise re-exchanged and
     // re-sorted in all 8 half-round SMJs)
-    val bc = hubs.count() <= RescanTierMaxVertices
+    val bc = hubs.count() <= BroadcastMaxVertices
     def side(v: DataFrame) = if (bc) broadcast(v) else v
     // Size the round scans explicitly (round 15 session 2): a
     // PERSISTED edge frame's output partitioning is pinned (AQE
@@ -1389,17 +1300,13 @@ object Graph {
       // all-decimal carrier so the spec can pin tier equality.
       val aCast = if (wideSums || r == 0) dec else "bigint"
       val hCast = if (wideSums) dec else "bigint"
-      // LAZY checkpoints at the broadcast tier (round 16, job-floor
-      // cut): the next half-round's broadcast build materializes each
-      auths = rescale(
+      auths = cutRound(rescale(
         eR.join(side(hubs), "cust").groupBy(col("part"))
-          .agg(sum(col("h").cast(aCast)).as("v")), "part")
-        .localCheckpoint(eager = !bc)
-      hubs = rescale(
+          .agg(sum(col("h").cast(aCast)).as("v")), "part"), bc)
+      hubs = cutRound(rescale(
         eR.join(side(auths.select(col("part"), col("v"))), "part")
           .groupBy(col("cust")).agg(sum(col("v").cast(hCast)).as("v")), "cust")
-        .select(col("cust"), col("v").as("h"))
-        .localCheckpoint(eager = !bc)
+        .select(col("cust"), col("v").as("h")), bc)
       r += 1
     }
     auths
@@ -1546,28 +1453,19 @@ object Graph {
    *  needed. Labels are exact longs (min node id per component), so
    *  the result is bit-identical to the oracle's closure replay. */
   def connectedComponents(edges: DataFrame,
-      level: StorageLevel = StorageLevel.DISK_ONLY): DataFrame = {
+      tier: EdgeTier = EdgeTier()): DataFrame = {
     // persist the BARE edge frame (round 15): with the vertex-sized
     // label frame BROADCAST into every round (guide §3.1), the edge
     // side streams untouched — so the old build-time
     // repartition+sortWithinPartitions exchange (whose only purpose
     // was to make the per-round SMJ exchange-free on e) is dead
     // weight and is skipped below the broadcast ceiling. Past the
-    // ceiling: the pre-partitioned SMJ layout exactly as before.
-    val bareFirst = edges.select(col("src"), col("dst")).persist(level)
-    var labels = bareFirst.select(col("src").as("node")).distinct()
+    // ceiling: the pre-partitioned SMJ layout ([[roundEdges]]).
+    val bare = edges.select(col("src"), col("dst")).persist(tier.level)
+    var labels = bare.select(col("src").as("node")).distinct()
       .withColumn("label", col("node")).localCheckpoint()
-    val bc = labels.count() <= RescanTierMaxVertices
-    val e =
-      if (bc) bareFirst
-      else {
-        val prepped = edges.select(col("src"), col("dst"))
-          .repartition(col("src")).sortWithinPartitions(col("src"))
-          .persist(StorageLevel.DISK_ONLY)
-        prepped.count()
-        bareFirst.unpersist()
-        prepped
-      }
+    val bc = labels.count() <= tier.vertexCeiling
+    val e = roundEdges(bare, bc)
     def mass(l: DataFrame): java.math.BigDecimal = {
       val r = l.agg(sum(col("label").cast("decimal(38,0)"))).head()
       if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
@@ -1581,10 +1479,9 @@ object Graph {
     // until converged)
     var converged = labels.isEmpty // empty graph: nothing to do
     while (!converged) {
-      // LAZY checkpoint at the broadcast tier (round 16, job-floor cut):
-      // the mass() fixpoint probe right below materializes the round —
-      // one job per round instead of checkpoint-then-probe
-      val next = ccRound(e, labels, bcast = bc).localCheckpoint(eager = !bc)
+      // the mass() fixpoint probe right below is the round's one
+      // consumer — lazy at the broadcast tier, one job per round
+      val next = cutRound(ccRound(e, labels, bcast = bc), bc)
       val cur = mass(next)
       converged = cur.compareTo(prev) == 0
       prev = cur
@@ -1619,7 +1516,7 @@ object Graph {
       .join(fam, col("src") === col("p_partkey"), "left_semi")
       .join(fam, col("dst") === col("p_partkey"), "left_semi")
       .select(col("src"), col("dst"))
-    val cc = connectedComponents(e, level = edgeLevel(s, d))
+    val cc = connectedComponents(e, edgeTier(s, d))
     val sizes = cc.groupBy(col("label")).agg(count(lit(1)).as("comp_size"))
     cc.join(sizes, Seq("label"))
       .select(col("node").as("part_id"), col("label").as("component"),
@@ -1718,25 +1615,16 @@ object Graph {
    *  the semi-synchronous schedule settles them). Returns
    *  (node, community, comm_size, is_stable). */
   def labelPropagation(edges: DataFrame, rounds: Int = LpRounds,
-      level: StorageLevel = StorageLevel.DISK_ONLY): DataFrame = {
+      tier: EdgeTier = EdgeTier()): DataFrame = {
     // persist the BARE frame and broadcast the vertex-sized label side
     // into every vote round (round 15 — the connectedComponents
     // rationale); past the broadcast ceiling fall back to the
-    // pre-partitioned SMJ layout exactly as before
-    val bareFirst = edges.select(col("src"), col("dst")).persist(level)
-    var labels = bareFirst.select(col("src").as("node")).distinct()
+    // pre-partitioned SMJ layout ([[roundEdges]])
+    val bare = edges.select(col("src"), col("dst")).persist(tier.level)
+    var labels = bare.select(col("src").as("node")).distinct()
       .withColumn("label", col("node")).localCheckpoint()
-    val bc = labels.count() <= RescanTierMaxVertices
-    val e =
-      if (bc) bareFirst
-      else {
-        val prepped = edges.select(col("src"), col("dst"))
-          .repartition(col("src")).sortWithinPartitions(col("src"))
-          .persist(StorageLevel.DISK_ONLY)
-        prepped.count()
-        bareFirst.unpersist()
-        prepped
-      }
+    val bc = labels.count() <= tier.vertexCeiling
+    val e = roundEdges(bare, bc)
     var r = 0
     while (r < rounds) {
       r += 1
@@ -1750,10 +1638,12 @@ object Graph {
       // shape at sf0.1 (the per-round broadcast build is a blocking
       // driver job; AQE already picks the right strategy from the
       // materialized checkpoint stats).
+      // the round frame has two consumers (the vote flow and the
+      // kept-label merge both read it), so its checkpoint stays eager
       val voted = lpRound(e, labels, parity = Some(r % 2L))
-      labels = voted
-        .union(labels.filter(pmod(col("node"), lit(2L)) =!= lit(r % 2L)))
-        .localCheckpoint()
+      labels = cutRound(voted
+        .union(labels.filter(pmod(col("node"), lit(2L)) =!= lit(r % 2L))),
+        bc, consumers = 2)
     }
     // fixpoint certificate: one more full synchronous vote — a node
     // is stable iff re-voting over the FINAL labels would not move it
@@ -1793,12 +1683,13 @@ object Graph {
    *  the assignment-level complement of q177 (which scores an
    *  EXOGENOUS brand partition) and q160 (which reports mere
    *  connectivity). */
-  def q181Communities(s: SparkSession, d: String): DataFrame =
-    labelPropagation(coPurchaseStrength(s, d).filter(col("c") >= 2),
-        level = edgeLevel(s, d))
+  def q181Communities(s: SparkSession, d: String): DataFrame = {
+    val strength = coPurchaseStrength(s, d)
+    labelPropagation(strength.filter(col("c") >= 2), tier = edgeTier(s, d))
       .select(col("node").as("part_id"), col("community"),
         col("comm_size"), col("is_stable"))
       .orderBy(col("part_id"))
+  }
 
   /** The shared LPA oracle prefix (li → ew → e → l0 → l1..l[[LpRounds]]
    *  → the `cert` fixpoint vote) used VERBATIM by q181Sql and q182Sql
@@ -1876,7 +1767,7 @@ object Graph {
   def q182LpaModularity(s: SparkSession, d: String): DataFrame = {
     val e = coPurchaseStrength(s, d).filter(col("c") >= 2)
       .select(col("src"), col("dst"))
-    val comm = labelPropagation(e, level = edgeLevel(s, d))
+    val comm = labelPropagation(e, tier = edgeTier(s, d))
       .select(col("node"), col("community"))
     labeledModularity(e
       .join(comm.select(col("node").as("src"), col("community").as("b_src")),
@@ -1922,12 +1813,11 @@ object Graph {
    *  recommendation signal (Haveliwala 2002, topic-sensitive
    *  PageRank) a catalog pipeline reads per brand/topic, and the one
    *  centrality variant q148/q165 can't express (their teleport is
-   *  global). Per round the SAME shuffle pair as [[pageRank]] — one
-   *  ranks⋈edges equi-join on src over the once-persisted DISK_ONLY
-   *  edge frame + one dst hash aggregate — with the seed teleport
-   *  folded into the aggregate as max(dst_seed)·tele (the 0/1 seed
-   *  indicator rides the persisted frame, attached BEFORE the deg
-   *  join so the build still leaves the frame partitioned by src).
+   *  global). The same [[massPush]] rounds as [[pageRank]], with the
+   *  seed teleport folded into the round aggregate as
+   *  max(dst_seed)·tele (the 0/1 seed indicator rides the edge rows,
+   *  attached through a broadcast of the vertex-bounded seed set, so
+   *  the build never shuffles edges).
    *  Vertices of the symmetric graph all have in-edges, so the rank
    *  frame stays complete across rounds even though non-seeds start
    *  at zero mass.
@@ -1940,89 +1830,30 @@ object Graph {
    *  smallest p_brand (data-derived, octave-stable: ScaleGen part
    *  copies keep brand values). */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
-      iterations: Int = Iterations,
-      afterEdges: () => Unit = () => (),
-      gcPerRound: Boolean = false,
-      level: StorageLevel = StorageLevel.DISK_ONLY): DataFrame = {
+      iterations: Int = Iterations, tier: EdgeTier = EdgeTier()): DataFrame = {
     // seedSet is vertex-bounded (one brand's parts) — checkpoint it
-    // once so the four consumers below don't re-run its distinct
+    // once so its consumers below don't re-run its distinct
     val seedSet = seeds.select(col("pk")).distinct().localCheckpoint()
-    // persist the BARE (src, dst, dst_seed) frame — the seed flag must
-    // ride the edge rows (the round aggregate reads max(dst_seed) per
-    // dst group) but deg rides the round's BROADCAST side instead (the
-    // q148 round-15 shape): no data-sized deg join, no per-round
-    // sort/exchange of e. The seed-flag attach broadcasts the
-    // vertex-bounded seed set, so the build never shuffles edges.
-    val e = edges
+    val e = pushEdges(edges
       .join(broadcast(seedSet.withColumn("dst_seed", lit(1L))),
         col("dst") === col("pk"), "left")
       .select(col("src"), col("dst"),
-        coalesce(col("dst_seed"), lit(0L)).as("dst_seed"))
-      .persist(level)
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+        coalesce(col("dst_seed"), lit(0L)).as("dst_seed")), tier)
+    val deg = e.groupBy(col("src")).agg(UniformPush.agg.as("deg"))
       .localCheckpoint()
     val n = deg.count()
     val ns = deg.join(seedSet, col("src") === col("pk"), "left_semi")
       .count()
-    afterEdges() // e's blocks are cached; the source bytes can go
     if (ns == 0)
       return deg.select(col("src").as("part_id"), col("deg"),
         lit(0L).as("rank_units"), lit(0.0).as("share"),
         lit(0L).as("is_seed")).limit(0)
-    val tele = (M * (100L - Damp)) / (100L * ns)
-    val bcastRounds = n <= RescanTierMaxVertices
-    // attach the round-invariant deg to the persisted edge side once
-    // at the memory-backed tier (round 16 — see pageRankRescan's
-    // attachDeg note; identical floor'd integer contributions)
-    val attach = bcastRounds && level == StorageLevel.MEMORY_AND_DISK
-    val eA =
-      if (!attach) null
-      else e.join(broadcast(
-          e.groupBy(col("src")).agg(count(lit(1)).as("deg"))), "src")
-        .persist(level)
-    // past the vertex ceiling: SMJ rounds over a deg-joined frame
-    // pre-partitioned + sorted by src (the pre-round-15 shape)
-    val ejFallback =
-      if (bcastRounds) null
-      else e.join(deg, "src")
-        .repartition(col("src")).sortWithinPartitions(col("src"))
-        .persist(StorageLevel.DISK_ONLY)
-    var ranks = deg
-      .join(seedSet, col("src") === col("pk"), "left")
-      .select(col("src").as("node"),
-        when(col("pk").isNotNull, lit(M / ns)).otherwise(lit(0L)).as("r"))
-    var i = 0
-    while (i < iterations) {
-      val next =
-        if (attach) {
-          eA.join(broadcast(ranks), col("src") === col("node"))
-            .select(col("dst"), col("dst_seed"),
-              expr(s"r * $Damp div (100 * deg)").as("c"))
-            .groupBy(col("dst"))
-            .agg((sum(col("c")) + max(col("dst_seed")) * lit(tele)).as("r"))
-            .select(col("dst").as("node"), col("r"))
-        } else if (bcastRounds) {
-          val rw = broadcast(ranks.join(deg, col("node") === col("src"))
-            .select(col("node"), col("r"), col("deg")))
-          e.join(rw, col("src") === col("node"))
-            .select(col("dst"), col("dst_seed"),
-              expr(s"r * $Damp div (100 * deg)").as("c"))
-            .groupBy(col("dst"))
-            .agg((sum(col("c")) + max(col("dst_seed")) * lit(tele)).as("r"))
-            .select(col("dst").as("node"), col("r"))
-        } else ejFallback.join(ranks, col("src") === col("node"))
-          .select(col("dst"), col("dst_seed"),
-            expr(s"r * $Damp div (100 * deg)").as("c"))
-          .groupBy(col("dst"))
-          .agg((sum(col("c")) + max(col("dst_seed")) * lit(tele)).as("r"))
-          .select(col("dst").as("node"), col("r"))
-      // cut lineage each round (q148 shape); LAZY at the attached tier
-      // — the next round's broadcast build materializes it
-      ranks = next.localCheckpoint(eager = !attach)
-      if (gcPerRound) System.gc() // see pageRank: async shuffle reclaim
-      i += 1
-    }
-    ranks.join(if (bcastRounds) broadcast(deg) else deg,
+    val ranks = massPush(e, deg, n,
+      deg.join(seedSet, col("src") === col("pk"), "left")
+        .select(col("src").as("node"),
+          when(col("pk").isNotNull, lit(M / ns)).otherwise(lit(0L)).as("r")),
+      UniformPush, max(col("dst_seed")) * lit(teleShare(ns)), tier, iterations)
+    ranks.join(if (n <= tier.vertexCeiling) broadcast(deg) else deg,
         col("node") === col("src"))
       .join(broadcast(seedSet), col("node") === col("pk"), "left")
       .select(col("node").as("part_id"), col("deg"),
@@ -2041,8 +1872,7 @@ object Graph {
     val minBrand = p.agg(min(col("p_brand"))).head().getString(0)
     val seeds = p.filter(col("p_brand") === lit(minBrand))
       .select(col("p_partkey").as("pk"))
-    personalizedPageRank(edges, seeds, afterEdges = () => evictEdgeChunks(d),
-      gcPerRound = chunkedBuild(d), level = edgeLevel(s, d))
+    personalizedPageRank(edges, seeds, tier = edgeTier(s, d))
   }
 
   /** Oracle: the identical seeded integer iteration as a grouped

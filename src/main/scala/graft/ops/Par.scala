@@ -23,7 +23,11 @@ package graft.ops
  * while the in-flight action kept running) and every sibling future
  * is still awaited — a failed gate must not leave a concurrent write
  * racing the caller's cleanup — with sibling failures attached as
- * suppressed exceptions instead of silently dropped.
+ * suppressed exceptions instead of silently dropped. A thunk still
+ * QUEUED when a sibling fails never starts: the failing leg raises a
+ * shared cancelled flag before its pool thread can pick up the next
+ * thunk, and a thunk that finds the flag up throws
+ * CancellationException instead of running (attached as suppressed).
  *
  * FIFO scheduling (the default) is exactly the back-fill behaviour
  * wanted here; the pool is small (≤4) so concurrent jobs fill the
@@ -47,16 +51,23 @@ private[graft] object Par {
     }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(4, thunks.length))
+    // raised by the first failing leg on its own pool thread, i.e.
+    // before that thread can dequeue another thunk
+    val cancelled = new java.util.concurrent.atomic.AtomicBoolean(false)
     try {
       val futs = thunks.map { t =>
         pool.submit(new java.util.concurrent.Callable[A] {
           def call(): A = {
+            if (cancelled.get())
+              throw new java.util.concurrent.CancellationException(
+                "graft.Par: a sibling leg failed before this one started")
             // one shared group per Par.run: the first failure can then
             // cancel every in-flight sibling with one call (job groups
             // are thread-local, so this tags only the pool's jobs)
             session.foreach(_.sparkContext
               .setJobGroup(gid, "graft.Par", interruptOnCancel = true))
             try t()
+            catch { case e: Throwable => cancelled.set(true); throw e }
             finally session.foreach(_.sparkContext.clearJobGroup())
           }
         })

@@ -133,8 +133,9 @@ object SparseSim {
     // hash-partitioned by doc_id and sorted (doc_id, term) — the q114
     // round-15 device (Dedup.prefixJaccardPairs): the retained
     // partitioning makes every verification join below exchange-free
-    // and sort-free on the w side (localCheckpoint lost it — measured,
-    // tools/CkptShapeProbe); the checkpoint FIRST (lineage cut:
+    // and sort-free on the w side (localCheckpoint loses it — pinned by
+    // PlanQualitySpec's "q160/q171 pre-partitioned persisted edge
+    // frames" test); the checkpoint FIRST (lineage cut:
     // weights' tf/df aggregation shuffles become reclaimable instead
     // of pinned for all C chunk passes — the round-11 scratch lesson),
     // the repartition+persist SECOND. Both copies DISK_ONLY + lz4:

@@ -86,7 +86,8 @@ class EngineJdbcSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("xlsx import via $SHEET selector into Derby") {
-    val n = engine.importFile("/root/reference/tests/excel.xlsx$basic2", "test...fromxlsx")
+    val xlsx = getClass.getResource("/fixtures/excel.xlsx").getPath
+    val n = engine.importFile(s"$xlsx$$basic2", "test...fromxlsx")
     assert(n.contains(3L))
     assert(JdbcIO.readTable(spark, url, "fromxlsx").count() == 3)
   }

@@ -6,14 +6,24 @@ import graft.SparkSuite
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** OOXML reader against the reference fixtures (tests/excel.xlsx —
-  * two sheets mirroring basic.csv; tests/empty.xlsx — three empty
-  * sheets) plus writer round-trip. Fixtures are read in place from
-  * the read-only reference checkout. */
+/** OOXML reader against the workbook fixtures (excel.xlsx — two
+  * sheets mirroring basic.csv; empty.xlsx — three empty sheets) plus
+  * writer round-trip. The fixtures live under src/test/resources/fixtures/
+  * and are written by [[XlsxFixtures]], a raw OOXML writer independent
+  * of XlsxIO's own. */
 class XlsxIOSpec extends AnyFunSuite with SparkSuite {
 
-  private val refXlsx = "/root/reference/tests/excel.xlsx"
-  private val refEmpty = "/root/reference/tests/empty.xlsx"
+  private def fixture(name: String): String =
+    getClass.getResource(s"/fixtures/$name").getPath
+  private val refXlsx = fixture("excel.xlsx")
+  private val refEmpty = fixture("empty.xlsx")
+
+  test("committed workbook fixtures are exactly the raw OOXML writer's output") {
+    assert(java.util.Arrays.equals(Files.readAllBytes(java.nio.file.Paths.get(refXlsx)),
+      XlsxFixtures.excel))
+    assert(java.util.Arrays.equals(Files.readAllBytes(java.nio.file.Paths.get(refEmpty)),
+      XlsxFixtures.empty))
+  }
 
   test("$SHEET selector split (core.py:154-158)") {
     assert(XlsxIO.splitSheetSelector("a.xlsx") == ("a.xlsx", None))

@@ -1,12 +1,14 @@
 package graft.ops
 
 import graft.SparkSuite
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Fixture coverage for q148's integer PageRank: the oracle gate
-  * replays the same arithmetic in DuckDB over the provisioned graph;
-  * these pin the iteration against an independent in-spec replay on
-  * hand-sized graphs and the distribution-independence invariant. */
+/** Fixture coverage for the integer PageRank family (q148/q165/q184):
+  * the oracle gate replays the same arithmetic in DuckDB over the
+  * provisioned graph; these pin every variant in every tier of the
+  * shared mass-push core against an independent in-spec replay on
+  * hand-sized graphs, plus the distribution-independence invariant. */
 class GraphRankSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
@@ -44,7 +46,7 @@ class GraphRankSpec extends AnyFunSuite with SparkSuite {
     val df = pathEdges.toDF("src", "dst")
     val persisted = Graph.pageRank(df, Graph.Iterations)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val rescan = Graph.pageRank(df, Graph.Iterations, rescanTier = true)
+    val rescan = Graph.pageRank(df, Graph.Iterations, Graph.EdgeTier(chunked = true))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(rescan == persisted)
   }
@@ -110,5 +112,73 @@ class GraphRankSpec extends AnyFunSuite with SparkSuite {
     assert(a.toSeq == b.toSeq)
     // floor arithmetic only ever loses mass — never exceeds M
     assert(a.map(_.getLong(2)).sum <= M)
+  }
+
+  /** Independent replay of the SEEDED (personalized) integer iteration:
+    * the teleport share restarts only at the seeds that are vertices. */
+  private def replayP(edges: Seq[(Long, Long)], seeds: Set[Long],
+      iters: Int): Map[Long, Long] = {
+    val deg = edges.groupBy(_._1).map { case (s, es) => s -> es.size.toLong }
+    val sv = seeds.filter(deg.contains)
+    val ns = sv.size.toLong
+    val tele = (M * 15L) / (100L * ns)
+    var r: Map[Long, Long] = deg.keys.map(k => k -> (if (sv(k)) M / ns else 0L)).toMap
+    for (_ <- 1 to iters) {
+      val in = edges.groupBy(_._2).map { case (dst, es) =>
+        dst -> es.map { case (src, _) => (r(src) * 85L) / (100L * deg(src)) }.sum
+      }
+      r = deg.keys.map(k => k -> (in.getOrElse(k, 0L) + (if (sv(k)) tele else 0L))).toMap
+    }
+    r
+  }
+
+  // a triangle 1-2-3 with a tail 3-4-5 and a separate 6-7 pair: mixed
+  // degrees, two components, every vertex with in-edges
+  private val mixed: Seq[(Long, Long)] = Seq((1L, 2L), (2L, 3L), (1L, 3L),
+    (3L, 4L), (4L, 5L), (6L, 7L)).flatMap { case (a, b) => Seq((a, b), (b, a)) }
+  private val mixedW: Seq[(Long, Long, Long)] =
+    mixed.map { case (a, b) => (a, b, 1L + (a * b) % 5L) }
+  private val mixedSeeds = Set(1L, 5L, 99L) // 99 is no vertex
+
+  // every tier of the mass-push core, selected through the tier value:
+  // attach (memory-backed), broadcast over the persisted frame, rescan
+  // (chunked build: the source re-scanned per round) and SMJ (a zero
+  // vertex ceiling forces the pre-partitioned layout)
+  private val tiers: Seq[(String, Graph.EdgeTier)] = Seq(
+    "attach" -> Graph.EdgeTier(level = StorageLevel.MEMORY_AND_DISK),
+    "broadcast" -> Graph.EdgeTier(),
+    "rescan" -> Graph.EdgeTier(chunked = true),
+    "SMJ" -> Graph.EdgeTier(vertexCeiling = 0L))
+
+  // 3 rounds: mass crosses the whole triangle-and-tail component, and
+  // the rescan tier's per-round reclaim pause stays short
+  private val matrixIters = 3
+
+  private def rankUnits(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+
+  private val variants: Seq[(String, Graph.EdgeTier => Map[Long, Long], Map[Long, Long])] = Seq(
+    ("uniform", t => rankUnits(Graph.pageRank(mixed.toDF("src", "dst"), matrixIters, t)),
+      replay(mixed, matrixIters)),
+    ("weighted", t => rankUnits(Graph.weightedPageRank(mixedW.toDF("src", "dst", "c"),
+      matrixIters, t)), replayW(mixedW, matrixIters)),
+    ("seeded", t => rankUnits(Graph.personalizedPageRank(mixed.toDF("src", "dst"),
+      mixedSeeds.toSeq.toDF("pk"), matrixIters, t)), replayP(mixed, mixedSeeds, matrixIters)))
+
+  for ((tierName, tier) <- tiers; (variant, run, want) <- variants)
+    test(s"$variant PageRank in the $tierName tier matches its integer replay") {
+      assert(run(tier) == want)
+    }
+
+  test("the eviction hook fires once the rounds stop reading the source, never in the rescan tier") {
+    def fired(tier: Graph.EdgeTier): Boolean = {
+      var evicted = false
+      Graph.pageRank(mixed.toDF("src", "dst"), 1, tier.copy(evict = () => evicted = true))
+        .collect()
+      evicted
+    }
+    assert(fired(Graph.EdgeTier(level = StorageLevel.MEMORY_AND_DISK)))
+    assert(fired(Graph.EdgeTier(chunked = true, vertexCeiling = 0L)))
+    assert(!fired(Graph.EdgeTier(chunked = true)))
   }
 }

@@ -357,10 +357,64 @@ class PlanQualitySpec extends AnyFunSuite with SparkSuite {
     import org.apache.spark.sql.functions.col
     val e = Seq((1L, 2L, 3L, 3L), (2L, 1L, 3L, 3L)).toDF("src", "dst", "c", "wdeg")
     val ranks = Seq((1L, 100L), (2L, 100L)).toDF("node", "r")
-    val p = plan(Graph.weightedRankRound(e, ranks, tele = 1L))
+    val p = plan(Graph.pushRound(e, ranks, Graph.WeightedPush.contrib,
+      org.apache.spark.sql.functions.lit(1L)))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       "weighted mass push must equi-join on src, never all-pairs")
     assert(p.contains("HashAggregate"), p.take(600))
+  }
+
+  test("mass-push broadcast-ranks round: BroadcastHashJoin, no Exchange or Sort on the edge side") {
+    // the broadcast tiers of the rank core stream the persisted edge
+    // frame through a BHJ against the vertex-sized ranks side; the hint
+    // alone must carry the join (size-based broadcast is switched off)
+    // and the edge side must reach the join without a shuffle or sort
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{broadcast, col, count, lit}
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.storage.StorageLevel
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val bare = spark.range(5000)
+        .select((col("id") % 50).as("src"), (col("id") % 37).as("dst"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val deg = bare.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      val attached = bare.coalesce(64).join(broadcast(deg), "src")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      attached.count()
+      val ranks = deg.select(col("src").as("node"), lit(1000000L).as("r"))
+      // attach tier: deg rides the edge rows, only (node, r) broadcasts;
+      // broadcast/rescan tier: the bare frame, (node, r, deg) broadcasts
+      val rounds = Seq(
+        "attach" -> Graph.pushRound(attached, broadcast(ranks),
+          Graph.UniformPush.contrib, lit(1L)),
+        "broadcast" -> Graph.pushRound(bare.coalesce(64),
+          broadcast(ranks.join(deg, col("node") === col("src"))
+            .select(col("node"), col("r"), col("deg"))),
+          Graph.UniformPush.contrib, lit(1L)))
+      for ((tier, round) <- rounds) {
+        val ex = round.queryExecution.executedPlan
+        val bhj = ex.collect { case j: BroadcastHashJoinExec => j }
+        assert(bhj.size == 1, s"$tier round lost its broadcast:\n$ex")
+        val j = bhj.head
+        val edgeSide = if (j.buildSide == BuildRight) j.left else j.right
+        assert(edgeSide.collect { case x: InMemoryTableScanExec => x }.nonEmpty,
+          s"$tier round streams the wrong side:\n$ex")
+        assert(edgeSide.collect { case x: ShuffleExchangeExec => x }.isEmpty &&
+          edgeSide.collect { case x: SortExec => x }.isEmpty,
+          s"$tier round re-plans the edge side:\n$edgeSide")
+        assert(round.count() == 37L) // one row per dst
+      }
+      attached.unpersist(); bare.unpersist()
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("q168 k-core round: two survivor semi-joins + degree agg, no cartesian") {
