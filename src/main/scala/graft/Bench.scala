@@ -227,9 +227,11 @@ object Bench {
     // priority (round 15's lesson: a grown brackets blob starved the
     // query map and 16 queries were misread as "dropped_from_bench"):
     //   1. headline totals/provenance (always),
-    //   2. EVERY query present in the previous artifact's map — the
-    //      driver's round-over-round compare then never sees a phantom
-    //      drop (n_dropped_from_bench = 0 by construction),
+    //   2. every query present in the previous artifact's map that
+    //      fits — the driver's round-over-round compare then sees no
+    //      phantom drop as long as the previous line fit this budget
+    //      (a full-map artifact does not); each key skipped for lack of
+    //      room is logged to stderr,
     //   3. brackets, worst swings first, capped so they can never
     //      starve priority 2 again,
     //   4. remaining queries by descending time, filling what's left.
@@ -244,8 +246,10 @@ object Bench {
     val pick = scala.collection.mutable.LinkedHashSet.empty[String]
     // priority 2: the previous artifact's visible set
     entries.foreach { case (k, e) =>
-      if (prevQ.contains(k) && e.length + 1 <= avail) {
-        pick += k; avail -= e.length + 1
+      if (prevQ.contains(k)) {
+        if (e.length + 1 <= avail) { pick += k; avail -= e.length + 1 }
+        else System.err.println(s"[bench] final line: previous-artifact " +
+          s"key $k skipped (needs ${e.length + 1} chars, $avail left)")
       }
     }
     // priority 3: brackets, bounded (≈5 entries) so queries keep room

@@ -77,10 +77,14 @@ object Main {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    try run(spark, opts) finally spark.stop()
+    val status = try run(spark, opts) finally spark.stop()
+    if (status != 0) sys.exit(status)
   }
 
-  def run(spark: SparkSession, opts: Opts): Unit = {
+  /** Runs one command; returns the process exit status: 1 when a
+    * single-file import fails (the engine returned `None`), else 0.
+    * Directory and glob imports keep swallowing per-file failures. */
+  def run(spark: SparkSession, opts: Opts): Int = {
     // validate the command line BEFORE loading config/engine so arg
     // errors surface as usage messages, not config failures
     val validated: Either[(String, String), String] = opts.command match {
@@ -110,11 +114,13 @@ object Main {
         if (plain.isEmpty)
           throw new IllegalArgumentException(s"empty source path in '$src'")
         val f = new java.io.File(plain)
-        if (f.isDirectory) engine.importDir(plain, dst, delim, opts.truncate)
-        else if (f.isFile) engine.importFile(src, dst, delim, opts.truncate)
-        else if (src.exists("*?[{}".contains(_)))
-          engine.importGlob(src, dst, delim, opts.truncate)
-        else engine.importFile(src, dst, delim, opts.truncate)
+        def single(): Int =
+          if (engine.importFile(src, dst, delim, opts.truncate).isDefined) 0 else 1
+        if (f.isDirectory) { engine.importDir(plain, dst, delim, opts.truncate); 0 }
+        else if (f.isFile) single()
+        else if (src.exists("*?[{}".contains(_))) {
+          engine.importGlob(src, dst, delim, opts.truncate); 0
+        } else single()
       case Right(src) =>
         val table = graft.core.DbPath.parse(src).table
           .getOrElse(throw new IllegalArgumentException("no table in path"))
@@ -125,6 +131,7 @@ object Main {
         val dstBase = dst0.stripSuffix(".gz")
         val dst = stampFilename(dstBase, opts.datestamp || opts.timestamp, opts.timestamp)
         engine.exportTable(src, dst, unix = opts.unix, gzip = gz)
+        0
     }
   }
 }

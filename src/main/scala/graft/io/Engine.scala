@@ -11,8 +11,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * `importFile` routes by extension (CSV/TSV/TXT with optional
  * gz — Excel with optional `$SHEET`), infers the schema when the
  * table doesn't exist, and appends (or truncates first). Returns the
- * imported row count like the reference's CSV path. Per-file errors
- * are logged and swallowed (P4, core.py:148-151).
+ * imported row count like the reference's CSV path. Per-file errors,
+ * a missing file or workbook among them, are logged and swallowed into
+ * `None` (P4, core.py:148-151).
  */
 final class Engine(spark: SparkSession, registry: ServerRegistry) {
 
@@ -32,6 +33,11 @@ final class Engine(spark: SparkSession, registry: ServerRegistry) {
       def qualified(table: String): String = addr.qualified(table)
       if (CsvIO.isExcel(path)) {
         val (file, sheetSel) = XlsxIO.splitSheetSelector(path)
+        // the per-sheet swallowing below (core.py:168-169) is for
+        // workbooks that opened; a missing workbook fails the file,
+        // $SHEET selector or not
+        if (!new java.io.File(file).isFile)
+          throw new java.io.FileNotFoundException(s"no such workbook: $file")
         val sheets = sheetSel.map(Seq(_)).getOrElse(XlsxIO.listSheets(file))
         var total = 0L
         var first = true

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import java.lang.Math.{addExact, multiplyExact}
+import scala.collection.mutable
+
 /**
  * Distributed graph analytics over relational edge lists. The first
  * resident: PageRank (Brin & Page '98) over the co-purchase part
@@ -14,13 +17,16 @@ import org.apache.spark.storage.StorageLevel
  * This is the DISTRIBUTED power-iteration shape — deliberately the
  * other half of q125's design space: q125 collapses its event-type
  * matrix to T² rows and iterates on a driver-sized artifact; here the
- * vertex set is data-sized (parts ~ corpus keys), so ranks stay a
- * distributed frame and every iteration is one ranks⋈edges equi-join
- * on src plus one hash aggregate on dst — exactly the shuffle pair a
- * 1000-executor PageRank runs, with the edge frame checkpoint-
- * materialized ONCE and reused by all iterations. At 100 TB both
- * sides pre-partition on the join key (bucketing the edge table by
- * src makes each iteration's join shuffle-free on the big side).
+ * edge set is data-sized and stays a distributed frame, materialized
+ * ONCE and reused by all iterations. How a round runs depends on the
+ * tier ([[massPush]]): under the vertex ceiling on memory-backed
+ * corpora the rank vector itself is driver-sized, so each round is one
+ * Spark job over the cached dst-partitioned edges whose per-dst sums
+ * the driver combines; past it every round is one ranks⋈edges
+ * equi-join on src plus one hash aggregate on dst — the shuffle pair a
+ * 1000-executor PageRank runs. At 100 TB both sides pre-partition on
+ * the join key (bucketing the edge table by src makes each
+ * iteration's join shuffle-free on the big side).
  *
  * Determinism (cross-engine, iteration-proof): all mass arithmetic is
  * exact integer — total mass M = 10¹² units, damping 85/100, every
@@ -182,20 +188,20 @@ object Graph {
       prepped
     }
 
-  /** The checkpoint rule of every round loop, stated once. Each round
-   *  frame is localCheckpointed so the next round plans on a leaf, not
-   *  on the whole chain. Eager (the default) runs one job per round,
-   *  right here. LAZY drops that job and is allowed only at the
-   *  broadcast tier, and only when exactly ONE action consumes the
-   *  round frame — a second consumer would compute the round again
-   *  before its blocks land (LPA's round frame has two; measured 2×
-   *  slower lazy). What lazy means for lineage: `broadcast()` is a plan
-   *  hint, not an action, so a lazy loop runs no job inside itself.
-   *  The next action materializes the whole chain, each round's
-   *  checkpoint computing through the nested broadcast builds of the
-   *  rounds before it — value-identical, and its depth is the round
-   *  count (4-12 in this file), so raising a round count deepens
-   *  that first compute. */
+  /** The checkpoint rule of the SQL round loops, stated once. Each
+   *  round frame is localCheckpointed so the next round plans on a
+   *  leaf, not on the whole chain. Eager (the default) runs the whole
+   *  round right here. LAZY is allowed only at the broadcast tier, and
+   *  only when exactly ONE action consumes the round frame — a second
+   *  consumer would compute the round again before its blocks land
+   *  (LPA's round frame has two; measured 2× slower lazy). What lazy
+   *  means under AQE (a job trace shows it): `localCheckpoint(eager =
+   *  false)` still plans the round into an RDD, and adaptive planning
+   *  runs the round's query stages to do so — its broadcast builds and
+   *  its shuffle-map stage execute in this call. Only the result stage
+   *  that writes the checkpoint blocks is deferred, to the next round
+   *  that reads them (or the final action). So a lazy round saves one
+   *  job, not the round's work. */
   private def cutRound(round: DataFrame, broadcastTier: Boolean,
       consumers: Int = 1): DataFrame =
     round.localCheckpoint(eager = !(broadcastTier && consumers == 1))
@@ -275,13 +281,29 @@ object Graph {
     }
   }
 
-  /** What varies between the PageRank variants besides the teleport
-   *  term: the round-invariant per-src degree (column `deg`, computed
-   *  by `agg` over the src group) and the per-edge contribution that
-   *  divides by it. */
-  private[ops] final case class Push(deg: String, agg: Column, contrib: String)
-  private[ops] val UniformPush = Push("deg", count(lit(1)), s"r * $Damp div (100 * deg)")
-  private[ops] val WeightedPush = Push("wdeg", sum(col("c")), s"r * $Damp * c div (100 * wdeg)")
+  /** What varies between the PageRank variants: the round-invariant
+   *  per-src degree (column `deg`, computed by `agg` over the src
+   *  group), the per-edge contribution that divides by it, and where
+   *  the teleport share lands — on every reached vertex, or (`seeded`)
+   *  only at `dst`s whose 0/1 `dst_seed` edge column is set. The round
+   *  arithmetic is written twice, side by side: in SQL (`contrib`,
+   *  [[teleport]]) for the SQL-round tiers and in Scala (`share`,
+   *  [[teleportAt]]) for the attach tier's driver rounds. Both are the
+   *  same floored exact-integer expressions and both throw on int64
+   *  overflow (ANSI SQL; `Math.*Exact`). `share` takes (r, deg, c);
+   *  the uniform variants ignore c. */
+  private[ops] final case class Push(deg: String, agg: Column, contrib: String,
+      share: (Long, Long, Long) => Long, seeded: Boolean = false) {
+    def teleport(tele: Long): Column =
+      if (seeded) max(col("dst_seed")) * lit(tele) else lit(tele)
+    def teleportAt(tele: Long, seed: Boolean): Long =
+      if (seeded && !seed) 0L else tele
+  }
+  private[ops] val UniformPush = Push("deg", count(lit(1)), s"r * $Damp div (100 * deg)",
+    (r, deg, _) => multiplyExact(r, Damp) / multiplyExact(100L, deg))
+  private[ops] val WeightedPush = Push("wdeg", sum(col("c")), s"r * $Damp * c div (100 * wdeg)",
+    (r, wdeg, c) => multiplyExact(multiplyExact(r, Damp), c) / multiplyExact(100L, wdeg))
+  private val SeededPush = UniformPush.copy(seeded = true)
 
   /** Teleport share of `k` vertices: floor(M·15 / (100·k)). */
   private def teleShare(k: Long): Long = (M * (100L - Damp)) / (100L * k)
@@ -294,73 +316,131 @@ object Graph {
    *  dst partial aggregate's exchange volume is (map tasks)×(vertex
    *  count) rows and fewer, larger map tasks make the map-side combine
    *  actually combine. Elsewhere: the BARE frame persisted at the
-   *  tier's level — the degree and the seed flag ride other sides, so
-   *  the frame never exchanges or sorts after its build. */
+   *  tier's level; the tiers of [[massPush]] derive their round frame
+   *  from it once per call. */
   private def pushEdges(edges: DataFrame, tier: EdgeTier): DataFrame =
     if (tier.chunked) edges.coalesce(64) else edges.persist(tier.level)
 
   /** The mass-push core shared by [[pageRank]], [[weightedPageRank]]
-   *  and [[personalizedPageRank]]: `iterations` rounds of
-   *  [[pushRound]] from `ranks0` over `e` (from [[pushEdges]]), whose
-   *  checkpointed per-src degree frame `deg` has `n` rows. Returns the
-   *  final (node, r). Three tiers, each exactly once:
-   *   - attach (memory-backed corpora under the vertex ceiling): the
-   *     round-invariant degree is attached to the persisted edge side
-   *     ONCE through a broadcast join (no exchange of e — BHJ streams
-   *     the cached blocks) and persisted; each round then broadcasts
-   *     only the vertex-sized (node, r) frame and checkpoints lazily.
-   *     The degree subplan is the deterministic aggregate, not the
-   *     checkpointed copy, so the attached frame plan-matches across
-   *     invocations in one JVM and min-of-N reuses it like the bare
-   *     frame.
+   *  and [[personalizedPageRank]]: `iterations` rounds from `ranks0`
+   *  over `e` (from [[pushEdges]]), whose checkpointed per-src degree
+   *  frame `deg` has `n` rows; `tele` is the teleport share. Returns
+   *  the final (node, r). Three tiers, each exactly once:
+   *   - attach (memory-backed, unchunked corpora under the vertex
+   *     ceiling — every octave up to 10×): the round-invariant degree
+   *     is attached to the persisted edge rows ONCE through a broadcast
+   *     join, the result hash-partitioned by dst and persisted; the
+   *     rounds run on the driver ([[driverRounds]]), one Spark job
+   *     each. The degree subplan is the deterministic aggregate, not
+   *     the checkpointed copy, so the attached frame plan-matches
+   *     across invocations in one JVM and min-of-N reuses it like the
+   *     bare frame.
    *   - broadcast (rescan at chunked corpora, else the persisted
-   *     DISK_ONLY frame): each round broadcasts (node, r, deg); the
-   *     edge side never shuffles, the only exchange is the dst partial
-   *     aggregate. Checkpoints stay eager so the per-round reclaim sees
-   *     each round's blocks released on a fixed schedule.
-   *   - SMJ (past the vertex ceiling): rounds join a deg-joined frame
-   *     pre-partitioned + sorted by src ([[roundEdges]]), so each round
-   *     exchanges and sorts only the ranks side.
-   *  Arithmetic is the identical exact-integer protocol in every tier —
-   *  long sums are order-free, so no tier can move a rank unit. */
+   *     DISK_ONLY frame): each round is one [[pushRound]] that
+   *     broadcasts (node, r, deg); the edge side never shuffles, the
+   *     only exchange is the dst partial aggregate.
+   *   - SMJ (past the vertex ceiling): each [[pushRound]] joins a
+   *     deg-joined frame pre-partitioned + sorted by src
+   *     ([[roundEdges]]), so each round exchanges and sorts only the
+   *     ranks side.
+   *  The SQL tiers checkpoint every round eagerly, so the chunked
+   *  per-round reclaim sees each round's blocks released on a fixed
+   *  schedule. Arithmetic is the identical exact-integer protocol in
+   *  every tier ([[Push]]) — long sums are order-free, so no tier can
+   *  move a rank unit. */
   private def massPush(e: DataFrame, deg: DataFrame, n: Long,
-      ranks0: DataFrame, push: Push, teleport: Column, tier: EdgeTier,
+      ranks0: DataFrame, push: Push, tele: Long, tier: EdgeTier,
       iterations: Int): DataFrame = {
     val bcast = n <= tier.vertexCeiling
-    val attach = bcast && !tier.chunked &&
-      tier.level == StorageLevel.MEMORY_AND_DISK
     if (tier.chunked)
       System.err.println(s"[graph] mass-push tier: vertices=$n ceiling=" +
         s"${tier.vertexCeiling} -> ${if (bcast) "rescan" else "smj"}")
-    val degSide = deg.select(col("src"), col(push.deg))
-    val re =
-      if (attach)
-        e.coalesce(64).join(broadcast(
-            e.groupBy(col("src")).agg(push.agg.as(push.deg))), "src")
-          .persist(tier.level)
-      else if (bcast) e.coalesce(64)
-      else roundEdges(e.join(degSide, "src"), bcast = false)
-    // every tier but the rescan one holds its own materialized copy of
-    // the edges by now; the source bytes can go
-    if (!(bcast && tier.chunked)) tier.evict()
-    var ranks = ranks0
-    for (i <- 1 to iterations) {
-      val side =
-        if (attach) broadcast(ranks)
-        else if (bcast) broadcast(ranks.join(degSide, col("node") === col("src"))
-          .select(col("node"), col("r"), col(push.deg)))
-        else ranks
-      ranks = cutRound(pushRound(re, side, push.contrib, teleport),
-        broadcastTier = attach)
-      tier.afterRound("mass-push", i, iterations)
+    if (bcast && !tier.chunked && tier.level == StorageLevel.MEMORY_AND_DISK) {
+      val cols = Seq("src", "dst", push.deg) ++ Seq("c", "dst_seed").filter(e.columns.contains)
+      val re = e.join(broadcast(e.groupBy(col("src")).agg(push.agg.as(push.deg))), "src")
+        .select(cols.map(c => col(c).cast("long")): _*)
+        .repartition(col("dst")).persist(tier.level)
+      tier.evict()
+      driverRounds(re, ranks0, push, tele, iterations)
+    } else {
+      val degSide = deg.select(col("src"), col(push.deg))
+      val re =
+        if (bcast) e.coalesce(64)
+        else roundEdges(e.join(degSide, "src"), bcast = false)
+      // every tier but the rescan one holds its own materialized copy
+      // of the edges by now; the source bytes can go
+      if (!(bcast && tier.chunked)) tier.evict()
+      var ranks = ranks0
+      for (i <- 1 to iterations) {
+        val side =
+          if (bcast) broadcast(ranks.join(degSide, col("node") === col("src"))
+            .select(col("node"), col("r"), col(push.deg)))
+          else ranks
+        ranks = pushRound(re, side, push.contrib, push.teleport(tele)).localCheckpoint()
+        tier.afterRound("mass-push", i, iterations)
+      }
+      ranks
     }
-    ranks
   }
 
-  /** One mass-push round, the round body of every variant and tier:
-   *  `ranks` (node, r[, deg]) equi-joins the edge frame on src, each
-   *  edge carries its floor'd `contrib`, and the contributions sum per
-   *  dst plus the variant's `teleport` term. Exposed for the plan
+  /** The attach tier's rounds. The rank vector is vertex-sized and
+   *  already crosses the driver every round (that is what broadcasting
+   *  it means), so the driver also combines it: the persisted
+   *  dst-partitioned frame `re` (src, dst, deg[, c][, dst_seed], all
+   *  long) is planned once, and each round is ONE job over its cached
+   *  blocks.
+   *  Every task looks each edge's src up in the broadcast (node, r)
+   *  arrays sorted by node and sums the floored contributions per dst;
+   *  the driver collects the per-dst sums, adds the teleport term and
+   *  broadcasts the next vector. The semantics are those of the SQL
+   *  round's inner join plus `groupBy(dst)`: an edge whose src holds no
+   *  rank contributes nothing, and the next vector holds exactly the
+   *  dsts that were reached. Each round's broadcast is destroyed once
+   *  its job is done; the final vector comes back as a frame. */
+  private def driverRounds(re: DataFrame, ranks0: DataFrame, push: Push,
+      tele: Long, iterations: Int): DataFrame = {
+    val s = re.sparkSession
+    val f = re.schema.fieldNames
+    val iC = f.indexOf("c")
+    val iSeed = if (push.seeded) f.indexOf("dst_seed") else -1
+    val share = push.share
+    val rows = re.queryExecution.toRdd
+    val r0 = ranks0.collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
+    var nodes = r0.map(_._1)
+    var rs = r0.map(_._2)
+    for (_ <- 1 to iterations) {
+      val bc = s.sparkContext.broadcast((nodes, rs))
+      val reached = rows.mapPartitions { it =>
+        val (ns, rv) = bc.value
+        val in = mutable.LongMap.empty[Long]
+        val seed = mutable.LongMap.empty[Boolean]
+        it.foreach { row =>
+          val at = java.util.Arrays.binarySearch(ns, row.getLong(0))
+          if (at >= 0) {
+            val dst = row.getLong(1)
+            val c = if (iC < 0) 1L else row.getLong(iC)
+            in(dst) = addExact(in.getOrElse(dst, 0L), share(rv(at), row.getLong(2), c))
+            if (iSeed >= 0) seed(dst) = row.getLong(iSeed) != 0L
+          }
+        }
+        in.iterator.map { case (dst, sum) => (dst, sum, seed.getOrElse(dst, false)) }
+      }.collect()
+      bc.destroy()
+      // a dst's edges share one partition; adding still merges any split
+      val next = reached.groupMapReduce(_._1)(t => (t._2, t._3)) {
+        case ((a, sa), (b, sb)) => (addExact(a, b), sa || sb)
+      }.toArray.sortBy(_._1)
+      nodes = next.map(_._1)
+      rs = next.map { case (_, (sum, sd)) => addExact(sum, push.teleportAt(tele, sd)) }
+    }
+    import s.implicits._
+    s.sparkContext.parallelize(nodes.zip(rs).toSeq).toDF("node", "r")
+  }
+
+  /** One mass-push round, the round body of every variant in the SQL
+   *  tiers: `ranks` (node, r[, deg]) equi-joins the edge frame on src,
+   *  each edge carries its floor'd `contrib`, and the contributions sum
+   *  per dst plus the variant's `teleport` term. Exposed for the plan
    *  gate. */
   private[ops] def pushRound(e: DataFrame, ranks: DataFrame, contrib: String,
       teleport: Column): DataFrame =
@@ -396,7 +476,7 @@ object Graph {
         lit(0L).as("rank_units"), lit(0.0).as("share"))
     val ranks = massPush(e, deg, n,
       deg.select(col("src").as("node"), lit(M / n).as("r")),
-      UniformPush, lit(teleShare(n)), tier, iterations)
+      UniformPush, teleShare(n), tier, iterations)
     rankReadout(ranks, deg, "deg", n <= tier.vertexCeiling)
   }
 
@@ -500,7 +580,7 @@ object Graph {
         "carry contributions in decimal(38,0)")
     val ranks = massPush(e, wdeg, n,
       wdeg.select(col("src").as("node"), lit(M / n).as("r")),
-      WeightedPush, lit(teleShare(n)), tier, iterations)
+      WeightedPush, teleShare(n), tier, iterations)
     rankReadout(ranks, wdeg, "wdeg", n <= tier.vertexCeiling)
   }
 
@@ -1814,10 +1894,10 @@ object Graph {
    *  PageRank) a catalog pipeline reads per brand/topic, and the one
    *  centrality variant q148/q165 can't express (their teleport is
    *  global). The same [[massPush]] rounds as [[pageRank]], with the
-   *  seed teleport folded into the round aggregate as
-   *  max(dst_seed)·tele (the 0/1 seed indicator rides the edge rows,
-   *  attached through a broadcast of the vertex-bounded seed set, so
-   *  the build never shuffles edges).
+   *  teleport share landing only at seed dsts ([[Push]] `seeded`: the
+   *  0/1 seed indicator rides the edge rows, attached through a
+   *  broadcast of the vertex-bounded seed set, so the build never
+   *  shuffles edges).
    *  Vertices of the symmetric graph all have in-edges, so the rank
    *  frame stays complete across rounds even though non-seeds start
    *  at zero mass.
@@ -1852,7 +1932,7 @@ object Graph {
       deg.join(seedSet, col("src") === col("pk"), "left")
         .select(col("src").as("node"),
           when(col("pk").isNotNull, lit(M / ns)).otherwise(lit(0L)).as("r")),
-      UniformPush, max(col("dst_seed")) * lit(teleShare(ns)), tier, iterations)
+      SeededPush, teleShare(ns), tier, iterations)
     ranks.join(if (n <= tier.vertexCeiling) broadcast(deg) else deg,
         col("node") === col("src"))
       .join(broadcast(seedSet), col("node") === col("pk"), "left")

@@ -64,6 +64,23 @@ class MainSpec extends AnyFunSuite with SparkSuite {
         "import", "--config", ini.toString, "$", "cli...t2"))))
   }
 
+  test("a failed single-file import exits 1; a good one and glob/directory imports exit 0") {
+    val work = Files.createTempDirectory("graftcliexit")
+    val url = s"jdbc:derby:$work/db;create=true"
+    val ini = work.resolve("graft.ini")
+    Files.writeString(ini, s"[servers]\next = $url\n")
+    def status(src: String, dst: String): Int =
+      Main.run(spark, Main.parseArgs(Seq("import", "--config", ini.toString, src, dst)))
+    assert(status(s"$work/missing.xlsx$$basic2", "ext...t1") == 1)
+    assert(status(s"$work/missing.csv", "ext...t1") == 1)
+    assert(!JdbcIO.tableExists(url, "t1"))
+    assert(status(getClass.getResource("/fixtures/basic.csv").getPath, "ext...t2") == 0)
+    // directory and glob imports keep swallowing per-file failures
+    Files.writeString(work.resolve("bad.csv"), "")
+    assert(status(work.toString, "ext") == 0)
+    assert(status(s"$work/*.csv", "ext") == 0)
+  }
+
   test("glob import creates one table per matching file (cli.py:140-144)") {
     val work = Files.createTempDirectory("graftcliglob")
     val url = s"jdbc:derby:$work/db;create=true"

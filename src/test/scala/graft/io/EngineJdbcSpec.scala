@@ -115,4 +115,13 @@ class EngineJdbcSpec extends AnyFunSuite with SparkSuite {
     assert(engine.importFile("/nonexistent/x.csv", "test...nope").isEmpty)
     assert(!JdbcIO.tableExists(url, "nope"))
   }
+
+  test("a missing workbook fails the file, with or without $SHEET") {
+    // per-sheet swallowing (core.py:168-169) is for workbooks that
+    // opened; a missing one is a failed file, never a zero-row success
+    val missing = s"${Files.createTempDirectory("graftnoxlsx")}/missing.xlsx"
+    assert(engine.importFile(s"$missing$$basic2", "test...noxlsx").isEmpty)
+    assert(engine.importFile(missing, "test...noxlsx").isEmpty)
+    assert(!JdbcIO.tableExists(url, "noxlsx"))
+  }
 }

@@ -144,8 +144,9 @@ class GraphRankSpec extends AnyFunSuite with SparkSuite {
   // attach (memory-backed), broadcast over the persisted frame, rescan
   // (chunked build: the source re-scanned per round) and SMJ (a zero
   // vertex ceiling forces the pre-partitioned layout)
+  private val attach = Graph.EdgeTier(level = StorageLevel.MEMORY_AND_DISK)
   private val tiers: Seq[(String, Graph.EdgeTier)] = Seq(
-    "attach" -> Graph.EdgeTier(level = StorageLevel.MEMORY_AND_DISK),
+    "attach" -> attach,
     "broadcast" -> Graph.EdgeTier(),
     "rescan" -> Graph.EdgeTier(chunked = true),
     "SMJ" -> Graph.EdgeTier(vertexCeiling = 0L))
@@ -169,6 +170,104 @@ class GraphRankSpec extends AnyFunSuite with SparkSuite {
     test(s"$variant PageRank in the $tierName tier matches its integer replay") {
       assert(run(tier) == want)
     }
+
+  /** Replay with the oracle's semantics, for any directed edge list
+    * (src, dst, c): each round's ranks are GROUP BY dst over the edges
+    * whose src holds a rank (teleport at every reached dst, or only at
+    * reached seeds), and the readout inner-joins the degree (Σc when
+    * `weighted`, else the out-edge count). */
+  private def replayJoin(edges: Seq[(Long, Long, Long)], weighted: Boolean,
+      seeds: Option[Set[Long]], iters: Int): Map[Long, Long] = {
+    val deg = edges.groupBy(_._1).map { case (s, es) =>
+      s -> (if (weighted) es.map(_._3).sum else es.size.toLong) }
+    val starts = seeds.fold(deg.keySet)(_.filter(deg.contains))
+    val tele = (M * 15L) / (100L * starts.size)
+    var r: Map[Long, Long] =
+      deg.keys.map(k => k -> (if (starts(k)) M / starts.size else 0L)).toMap
+    for (_ <- 1 to iters) {
+      r = edges.filter(e => r.contains(e._1)).groupBy(_._2).map { case (dst, es) =>
+        val in = es.map { case (src, _, c) =>
+          (r(src) * 85L * (if (weighted) c else 1L)) / (100L * deg(src)) }.sum
+        dst -> (in + (if (seeds.forall(_(dst))) tele else 0L))
+      }
+    }
+    r.filter { case (k, _) => deg.contains(k) }
+  }
+
+  // directed: a 1→2→3→1 cycle, 5 is a source (no in-edges), 4 a sink
+  // (no out-edges, so no degree), and 6 is reached only from 5 — it
+  // holds a rank after round 1 only, and its edge to 2 then carries
+  // nothing; seed 4 is a sink, seed 6 dies out
+  private val directed: Seq[(Long, Long)] =
+    Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (5L, 1L), (5L, 6L), (6L, 2L))
+  private val directedW: Seq[(Long, Long, Long)] =
+    directed.map { case (a, b) => (a, b, 1L + (a * b) % 5L) }
+  private val directedSeeds = Set(2L, 4L, 6L)
+
+  private val directedVariants: Seq[(String, Graph.EdgeTier => Map[Long, Long], Map[Long, Long])] = Seq(
+    ("uniform", t => rankUnits(Graph.pageRank(directed.toDF("src", "dst"), matrixIters, t)),
+      replayJoin(directedW, weighted = false, None, matrixIters)),
+    ("weighted", t => rankUnits(Graph.weightedPageRank(directedW.toDF("src", "dst", "c"),
+      matrixIters, t)), replayJoin(directedW, weighted = true, None, matrixIters)),
+    ("seeded", t => rankUnits(Graph.personalizedPageRank(directed.toDF("src", "dst"),
+      directedSeeds.toSeq.toDF("pk"), matrixIters, t)),
+      replayJoin(directedW, weighted = false, Some(directedSeeds), matrixIters)))
+
+  for ((tierName, tier) <- tiers; (variant, run, want) <- directedVariants)
+    test(s"$variant PageRank over a directed graph in the $tierName tier matches the oracle-semantics replay") {
+      assert(run(tier) == want)
+    }
+
+  test("the attach tier matches the replays at 1 and 7 shuffle partitions") {
+    val conf = spark.conf
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = keys.map(k => k -> conf.getOption(k))
+    try {
+      for (parts <- Seq(1, 7)) {
+        conf.set("spark.sql.shuffle.partitions", parts.toLong)
+        // keep all 7 dst partitions of the tiny attached frame
+        conf.set("spark.sql.adaptive.coalescePartitions.enabled", false)
+        // the attached frame plan-matches across calls: drop the cached
+        // copies so this partition count builds its own
+        spark.catalog.clearCache()
+        for ((variant, run, want) <- variants ++ directedVariants)
+          assert(run(attach) == want, s"$variant at $parts partitions")
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
+  test("attach-tier pageRank runs one Spark job per round") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val df = mixed.toDF("src", "dst")
+    // jobs started by one call, counted up to a marker job: the listener
+    // bus delivers events in order, so every earlier job is counted
+    // once the marker's start arrives
+    def jobs(rounds: Int): Int = {
+      val started = new java.util.concurrent.atomic.AtomicInteger
+      val marked = new java.util.concurrent.CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          if (Option(j.properties).exists(_.getProperty("spark.job.description") == "marker"))
+            marked.countDown()
+          else started.incrementAndGet()
+      }
+      sc.addSparkListener(listener)
+      try {
+        Graph.pageRank(df, rounds, attach).collect()
+        sc.setJobDescription("marker")
+        try sc.parallelize(Seq(1)).count() finally sc.setJobDescription(null)
+        assert(marked.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        started.get
+      } finally sc.removeSparkListener(listener)
+    }
+    jobs(1) // builds and caches the edge frames the counted calls reuse
+    assert(jobs(6) - jobs(3) == 3)
+  }
 
   test("the eviction hook fires once the rounds stop reading the source, never in the rescan tier") {
     def fired(tier: Graph.EdgeTier): Boolean = {

@@ -365,10 +365,12 @@ class PlanQualitySpec extends AnyFunSuite with SparkSuite {
   }
 
   test("mass-push broadcast-ranks round: BroadcastHashJoin, no Exchange or Sort on the edge side") {
-    // the broadcast tiers of the rank core stream the persisted edge
-    // frame through a BHJ against the vertex-sized ranks side; the hint
-    // alone must carry the join (size-based broadcast is switched off)
-    // and the edge side must reach the join without a shuffle or sort
+    // the broadcast/rescan tier of the rank core streams the persisted
+    // edge frame through a BHJ against the vertex-sized ranks side; the
+    // hint alone must carry the join (size-based broadcast is switched
+    // off) and the edge side must reach the join without a shuffle or
+    // sort (the attach tier combines its rounds on the driver and plans
+    // no round query)
     import spark.implicits._
     import org.apache.spark.sql.functions.{broadcast, col, count, lit}
     import org.apache.spark.sql.execution.SortExec
@@ -384,15 +386,9 @@ class PlanQualitySpec extends AnyFunSuite with SparkSuite {
         .select((col("id") % 50).as("src"), (col("id") % 37).as("dst"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       val deg = bare.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      val attached = bare.coalesce(64).join(broadcast(deg), "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      attached.count()
       val ranks = deg.select(col("src").as("node"), lit(1000000L).as("r"))
-      // attach tier: deg rides the edge rows, only (node, r) broadcasts;
       // broadcast/rescan tier: the bare frame, (node, r, deg) broadcasts
       val rounds = Seq(
-        "attach" -> Graph.pushRound(attached, broadcast(ranks),
-          Graph.UniformPush.contrib, lit(1L)),
         "broadcast" -> Graph.pushRound(bare.coalesce(64),
           broadcast(ranks.join(deg, col("node") === col("src"))
             .select(col("node"), col("r"), col("deg"))),
@@ -410,7 +406,7 @@ class PlanQualitySpec extends AnyFunSuite with SparkSuite {
           s"$tier round re-plans the edge side:\n$edgeSide")
         assert(round.count() == 37L) // one row per dst
       }
-      attached.unpersist(); bare.unpersist()
+      bare.unpersist()
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
       spark.conf.set("spark.sql.adaptive.enabled", "true")
