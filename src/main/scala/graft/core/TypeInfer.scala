@@ -1,5 +1,6 @@
 package graft.core
 
+import java.text.ParsePosition
 import java.time.{LocalDate, LocalDateTime, LocalTime}
 import java.time.format.DateTimeFormatter
 
@@ -56,9 +57,10 @@ object TypeInfer {
     dateTimePatterns.map(DateTimeFormatter.ofPattern)
 
   /** Parse a string into date and/or time parts; None if not temporal.
-   *  Cheap character gates avoid the (expensive) formatter-exception
-   *  path for the overwhelmingly common non-temporal inputs — this
-   *  code runs once per sampled cell during inference. */
+   *  Cheap character gates skip the formatters for the overwhelmingly
+   *  common non-temporal inputs, and the formatters that do run probe
+   *  without exceptions ([[probe]]) — this code runs once per sampled
+   *  cell during inference. */
   def parseTemporal(raw: String): Option[Temporal] = {
     val s = raw.trim
     if (s.length < 4 || s.length > 40) return None
@@ -84,25 +86,38 @@ object TypeInfer {
     val tryTimeOnly = hasColon && !hasDateSep
     val tryDateOnly = !hasColon
     val dt = if (tryDateTime)
-      dateTimeFormats.iterator.flatMap(f => tryParse(LocalDateTime.parse(s, f))).nextOption()
+      dateTimeFormats.iterator.flatMap(f => probe(s, f)(LocalDateTime.parse(s, f))).nextOption()
         .map(v => Temporal(Some(v.toLocalDate), Some(v.toLocalTime)))
     else None
     dt.orElse {
         if (tryDateOnly || tryDateTime)
-          dateFormats.iterator.flatMap(f => tryParse(LocalDate.parse(s, f))).nextOption()
+          dateFormats.iterator.flatMap(f => probe(s, f)(LocalDate.parse(s, f))).nextOption()
             .map(d => Temporal(Some(d), None))
         else None
       }
       .orElse {
         if (tryTimeOnly)
-          timeFormats.iterator.flatMap(f => tryParse(LocalTime.parse(s, f))).nextOption()
+          timeFormats.iterator.flatMap(f => probe(s, f)(LocalTime.parse(s, f))).nextOption()
             .map(t => Temporal(None, Some(t)))
         else None
       }
   }
 
-  private def tryParse[A](a: => A): Option[A] =
-    try Some(a) catch { case _: Exception => None }
+  /** `parse` (a resolving parse of `s` with `f`) when `f` matches all
+   *  of `s`, else None. The unresolved parse fails by a null result or
+   *  an error index, never by an exception, and a resolving parse
+   *  cannot succeed where it fails — its own success condition is
+   *  exactly this one — so the probe only skips the thrown
+   *  `DateTimeParseException` of every format that does not match,
+   *  which is most formats for most temporal cells. A matched string
+   *  can still fail to resolve (a month 13), which stays a caught
+   *  None. */
+  private def probe[A](s: String, f: DateTimeFormatter)(parse: => A): Option[A] = {
+    val pos = new ParsePosition(0)
+    if (f.parseUnresolved(s, pos) == null || pos.getErrorIndex >= 0 ||
+        pos.getIndex != s.length) None
+    else try Some(parse) catch { case _: Exception => None }
+  }
 
   /** Python-int acceptance: optional sign, digits, surrounding
    *  whitespace (reference core.py:547-561 delegates to `int()`). */

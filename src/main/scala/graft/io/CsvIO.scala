@@ -196,13 +196,17 @@ object CsvIO {
   /** Export projection — the reference's `_cleanbool`
    *  (core.py:360-371): bool→1/0, datetime→Python `isoformat()`
    *  (no fractional part when micros are zero), else string; NULL
-   *  passes through (→ empty CSV field). */
+   *  passes through (→ empty CSV field). `TIMESTAMP_NTZ` (lineitem's
+   *  `l_shipdate`) renders like `TIMESTAMP`: left to the writer it
+   *  would come out as `yyyy-MM-dd'T'HH:mm:ss.SSS`, micros cut to
+   *  millis. It is formatted through the session zone, which graft's
+   *  sessions pin to UTC, so the wall clock comes back unchanged. */
   def cleanboolProjection(df: DataFrame): DataFrame = {
     val projections = df.schema.fields.map { f =>
       val c = col(f.name)
       val cleaned: Column = f.dataType match {
         case BooleanType => c.cast(IntegerType)
-        case TimestampType =>
+        case TimestampType | TimestampNTZType =>
           when(c.isNull, lit(null))
             .otherwise(
               when(date_format(c, "SSSSSS") === "000000",

@@ -1,11 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import java.lang.Math.{addExact, multiplyExact}
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /**
  * Distributed graph analytics over relational edge lists. The first
@@ -19,14 +23,16 @@ import scala.collection.mutable
  * matrix to T² rows and iterates on a driver-sized artifact; here the
  * edge set is data-sized and stays a distributed frame, materialized
  * ONCE and reused by all iterations. How a round runs depends on the
- * tier ([[massPush]]): under the vertex ceiling on memory-backed
- * corpora the rank vector itself is driver-sized, so each round is one
- * Spark job over the cached dst-partitioned edges whose per-dst sums
- * the driver combines; past it every round is one ranks⋈edges
- * equi-join on src plus one hash aggregate on dst — the shuffle pair a
- * 1000-executor PageRank runs. At 100 TB both sides pre-partition on
- * the join key (bucketing the edge table by src makes each
- * iteration's join shuffle-free on the big side).
+ * tier. Under the vertex ceiling on memory-backed corpora
+ * ([[attachEdges]]) the vertex state is driver-sized, as in Pregel:
+ * one cached dst-partitioned edge frame is the only distributed
+ * object, the degrees, the start vector and the readout are computed
+ * on the driver, and each round is one Spark job whose per-dst sums
+ * the driver combines. Elsewhere ([[massPush]]) every round is one
+ * ranks⋈edges equi-join on src plus one hash aggregate on dst — the
+ * shuffle pair a 1000-executor PageRank runs. At 100 TB both sides
+ * pre-partition on the join key (bucketing the edge table by src
+ * makes each iteration's join shuffle-free on the big side).
  *
  * Determinism (cross-engine, iteration-proof): all mass arithmetic is
  * exact integer — total mass M = 10¹² units, damping 85/100, every
@@ -287,17 +293,16 @@ object Graph {
    *  the teleport share lands — on every reached vertex, or (`seeded`)
    *  only at `dst`s whose 0/1 `dst_seed` edge column is set. The round
    *  arithmetic is written twice, side by side: in SQL (`contrib`,
-   *  [[teleport]]) for the SQL-round tiers and in Scala (`share`,
-   *  [[teleportAt]]) for the attach tier's driver rounds. Both are the
-   *  same floored exact-integer expressions and both throw on int64
-   *  overflow (ANSI SQL; `Math.*Exact`). `share` takes (r, deg, c);
-   *  the uniform variants ignore c. */
+   *  [[teleport]]) for the SQL-round tiers and in Scala (`share`) for
+   *  the attach tier's driver rounds, whose seeded teleport is a
+   *  lookup in the driver's seed array ([[personalizedPageRank]]).
+   *  Both are the same floored exact-integer expressions and both
+   *  throw on int64 overflow (ANSI SQL; `Math.*Exact`). `share` takes
+   *  (r, deg, c); the uniform variants ignore c. */
   private[ops] final case class Push(deg: String, agg: Column, contrib: String,
       share: (Long, Long, Long) => Long, seeded: Boolean = false) {
     def teleport(tele: Long): Column =
       if (seeded) max(col("dst_seed")) * lit(tele) else lit(tele)
-    def teleportAt(tele: Long, seed: Boolean): Long =
-      if (seeded && !seed) 0L else tele
   }
   private[ops] val UniformPush = Push("deg", count(lit(1)), s"r * $Damp div (100 * deg)",
     (r, deg, _) => multiplyExact(r, Damp) / multiplyExact(100L, deg))
@@ -308,33 +313,92 @@ object Graph {
   /** Teleport share of `k` vertices: floor(M·15 / (100·k)). */
   private def teleShare(k: Long): Long = (M * (100L - Damp)) / (100L * k)
 
-  /** The edge frame a PageRank variant starts from. At chunked-build
-   *  corpora it is the source itself — the zstd chunk parquet, which
-   *  the rescan tier re-reads every round instead of persisting a
-   *  corpus-sized copy next to it (47 GiB of blockmgr beside 12 GiB of
-   *  parquet was the round-14 ENOSPC, twice); coalesced, because the
-   *  dst partial aggregate's exchange volume is (map tasks)×(vertex
-   *  count) rows and fewer, larger map tasks make the map-side combine
-   *  actually combine. Elsewhere: the BARE frame persisted at the
-   *  tier's level; the tiers of [[massPush]] derive their round frame
-   *  from it once per call. */
+  /** The edge frame a PageRank variant's SQL tiers start from. At
+   *  chunked-build corpora it is the source itself — the zstd chunk
+   *  parquet, which the rescan tier re-reads every round instead of
+   *  persisting a corpus-sized copy next to it (47 GiB of blockmgr
+   *  beside 12 GiB of parquet was the round-14 ENOSPC, twice);
+   *  coalesced, because the dst partial aggregate's exchange volume is
+   *  (map tasks)×(vertex count) rows and fewer, larger map tasks make
+   *  the map-side combine actually combine. Elsewhere: the BARE frame
+   *  persisted at the tier's level; the tiers of [[massPush]] derive
+   *  their round frame from it once per call. The attach tier never
+   *  persists the bare frame: its one cached copy is the attached frame
+   *  ([[attachEdges]]). */
   private def pushEdges(edges: DataFrame, tier: EdgeTier): DataFrame =
     if (tier.chunked) edges.coalesce(64) else edges.persist(tier.level)
 
-  /** The mass-push core shared by [[pageRank]], [[weightedPageRank]]
-   *  and [[personalizedPageRank]]: `iterations` rounds from `ranks0`
-   *  over `e` (from [[pushEdges]]), whose checkpointed per-src degree
-   *  frame `deg` has `n` rows; `tele` is the teleport share. Returns
-   *  the final (node, r). Three tiers, each exactly once:
-   *   - attach (memory-backed, unchunked corpora under the vertex
-   *     ceiling — every octave up to 10×): the round-invariant degree
-   *     is attached to the persisted edge rows ONCE through a broadcast
-   *     join, the result hash-partitioned by dst and persisted; the
-   *     rounds run on the driver ([[driverRounds]]), one Spark job
-   *     each. The degree subplan is the deterministic aggregate, not
-   *     the checkpointed copy, so the attached frame plan-matches
-   *     across invocations in one JVM and min-of-N reuses it like the
-   *     bare frame.
+  /** The attach tier's cached edge frame and what one pass over it
+   *  tells the driver: `rows` are the cached (src, dst, deg[, c]) rows,
+   *  all long, hash-partitioned by dst, with `c` at index `iC` (-1
+   *  without it); `nodes` holds every src in ascending order with its
+   *  degree at the same index of `degs`; `maxC` is the largest `c`. */
+  private final case class Attached(rows: RDD[InternalRow], iC: Int,
+      nodes: Array[Long], degs: Array[Long], maxC: Long) {
+    /** (node, deg, r) for each final (node, r) that is a src — the
+     *  inner join of the SQL readout — in the order of `ns`. */
+    def withDeg(ns: Array[Long], rs: Array[Long]): Array[(Long, Long, Long)] =
+      ns.indices.flatMap { i =>
+        val at = java.util.Arrays.binarySearch(nodes, ns(i))
+        if (at >= 0) Some((ns(i), degs(at), rs(i))) else None
+      }.toArray
+  }
+
+  /** The attach tier of the rank core: memory-backed, unchunked
+   *  corpora under the vertex ceiling — every octave up to 10×. The
+   *  round-invariant degree `push.agg` is attached to the edge rows
+   *  through a broadcast join, and the result is cast to long,
+   *  hash-partitioned by dst and persisted: the ONE cached edge frame
+   *  of the call, and the only SQL it plans. It is built from the
+   *  unpersisted `edges` through deterministic subplans, so it
+   *  plan-matches across invocations in one JVM — min-of-N reuses it,
+   *  and q148 and q184 share it. One RDD job over its cached rows (the
+   *  prologue) collects every src's degree and the largest `c`; the
+   *  vertex count, the start vector, the rounds ([[driverRounds]]) and
+   *  the readout are then all computed on the driver. None at the
+   *  other tiers, and past the ceiling (reachable only with a forced
+   *  ceiling): the frame is released and the caller runs the SQL tiers
+   *  of [[massPush]]. */
+  private def attachEdges(edges: DataFrame, push: Push,
+      tier: EdgeTier): Option[Attached] =
+    if (tier.chunked || tier.level != StorageLevel.MEMORY_AND_DISK) None
+    else {
+      val cols = Seq("src", "dst", push.deg) ++ Seq("c").filter(edges.columns.contains)
+      val re = edges.join(broadcast(edges.groupBy(col("src")).agg(push.agg.as(push.deg))), "src")
+        .select(cols.map(c => col(c).cast("long")): _*)
+        .repartition(col("dst")).persist(tier.level)
+      val rows = re.queryExecution.toRdd
+      val iC = cols.indexOf("c")
+      // a src's edges spread over the dst partitions, each carrying the
+      // same attached degree
+      val parts = rows.mapPartitions { it =>
+        val deg = mutable.LongMap.empty[Long]
+        var maxC = Long.MinValue
+        it.foreach { row =>
+          deg(row.getLong(0)) = row.getLong(2)
+          if (iC >= 0) maxC = math.max(maxC, row.getLong(iC))
+        }
+        Iterator.single((deg.toArray, maxC))
+      }.collect()
+      val degOf = mutable.LongMap.empty[Long]
+      parts.foreach(_._1.foreach { case (v, d) => degOf(v) = d })
+      val byNode = degOf.toArray.sortBy(_._1)
+      if (byNode.length > tier.vertexCeiling) {
+        re.unpersist()
+        None
+      } else {
+        tier.evict()
+        Some(Attached(rows, iC, byNode.map(_._1), byNode.map(_._2),
+          parts.map(_._2).maxOption.getOrElse(Long.MinValue)))
+      }
+    }
+
+  /** The mass-push core's SQL tiers, shared by [[pageRank]],
+   *  [[weightedPageRank]] and [[personalizedPageRank]] wherever
+   *  [[attachEdges]] declines: `iterations` rounds from `ranks0` over
+   *  `e` (from [[pushEdges]]), whose checkpointed per-src degree frame
+   *  `deg` has `n` rows; `tele` is the teleport share. Returns the
+   *  final (node, r). Two tiers, each exactly once:
    *   - broadcast (rescan at chunked corpora, else the persisted
    *     DISK_ONLY frame): each round is one [[pushRound]] that
    *     broadcasts (node, r, deg); the edge side never shuffles, the
@@ -343,11 +407,11 @@ object Graph {
    *     deg-joined frame pre-partitioned + sorted by src
    *     ([[roundEdges]]), so each round exchanges and sorts only the
    *     ranks side.
-   *  The SQL tiers checkpoint every round eagerly, so the chunked
-   *  per-round reclaim sees each round's blocks released on a fixed
-   *  schedule. Arithmetic is the identical exact-integer protocol in
-   *  every tier ([[Push]]) — long sums are order-free, so no tier can
-   *  move a rank unit. */
+   *  Every round is checkpointed eagerly, so the chunked per-round
+   *  reclaim sees each round's blocks released on a fixed schedule.
+   *  Arithmetic is the identical exact-integer protocol in every tier,
+   *  the attach tier included ([[Push]]) — long sums are order-free, so
+   *  no tier can move a rank unit. */
   private def massPush(e: DataFrame, deg: DataFrame, n: Long,
       ranks0: DataFrame, push: Push, tele: Long, tier: EdgeTier,
       iterations: Int): DataFrame = {
@@ -355,86 +419,98 @@ object Graph {
     if (tier.chunked)
       System.err.println(s"[graph] mass-push tier: vertices=$n ceiling=" +
         s"${tier.vertexCeiling} -> ${if (bcast) "rescan" else "smj"}")
-    if (bcast && !tier.chunked && tier.level == StorageLevel.MEMORY_AND_DISK) {
-      val cols = Seq("src", "dst", push.deg) ++ Seq("c", "dst_seed").filter(e.columns.contains)
-      val re = e.join(broadcast(e.groupBy(col("src")).agg(push.agg.as(push.deg))), "src")
-        .select(cols.map(c => col(c).cast("long")): _*)
-        .repartition(col("dst")).persist(tier.level)
-      tier.evict()
-      driverRounds(re, ranks0, push, tele, iterations)
-    } else {
-      val degSide = deg.select(col("src"), col(push.deg))
-      val re =
-        if (bcast) e.coalesce(64)
-        else roundEdges(e.join(degSide, "src"), bcast = false)
-      // every tier but the rescan one holds its own materialized copy
-      // of the edges by now; the source bytes can go
-      if (!(bcast && tier.chunked)) tier.evict()
-      var ranks = ranks0
-      for (i <- 1 to iterations) {
-        val side =
-          if (bcast) broadcast(ranks.join(degSide, col("node") === col("src"))
-            .select(col("node"), col("r"), col(push.deg)))
-          else ranks
-        ranks = pushRound(re, side, push.contrib, push.teleport(tele)).localCheckpoint()
-        tier.afterRound("mass-push", i, iterations)
-      }
-      ranks
+    val degSide = deg.select(col("src"), col(push.deg))
+    val re =
+      if (bcast) e.coalesce(64)
+      else roundEdges(e.join(degSide, "src"), bcast = false)
+    // every tier but the rescan one holds its own materialized copy
+    // of the edges by now; the source bytes can go
+    if (!(bcast && tier.chunked)) tier.evict()
+    var ranks = ranks0
+    for (i <- 1 to iterations) {
+      val side =
+        if (bcast) broadcast(ranks.join(degSide, col("node") === col("src"))
+          .select(col("node"), col("r"), col(push.deg)))
+        else ranks
+      ranks = pushRound(re, side, push.contrib, push.teleport(tele)).localCheckpoint()
+      tier.afterRound("mass-push", i, iterations)
     }
+    ranks
   }
 
   /** The attach tier's rounds. The rank vector is vertex-sized and
    *  already crosses the driver every round (that is what broadcasting
-   *  it means), so the driver also combines it: the persisted
-   *  dst-partitioned frame `re` (src, dst, deg[, c][, dst_seed], all
-   *  long) is planned once, and each round is ONE job over its cached
-   *  blocks.
+   *  it means), so the driver also combines it: each round is ONE job
+   *  over the cached blocks of the attached frame `a`, starting from
+   *  `r0` (aligned with `a.nodes`).
    *  Every task looks each edge's src up in the broadcast (node, r)
    *  arrays sorted by node and sums the floored contributions per dst;
-   *  the driver collects the per-dst sums, adds the teleport term and
+   *  the driver collects the per-dst sums, adds `teleAt(dst)` and
    *  broadcasts the next vector. The semantics are those of the SQL
    *  round's inner join plus `groupBy(dst)`: an edge whose src holds no
    *  rank contributes nothing, and the next vector holds exactly the
    *  dsts that were reached. Each round's broadcast is destroyed once
-   *  its job is done; the final vector comes back as a frame. */
-  private def driverRounds(re: DataFrame, ranks0: DataFrame, push: Push,
-      tele: Long, iterations: Int): DataFrame = {
-    val s = re.sparkSession
-    val f = re.schema.fieldNames
-    val iC = f.indexOf("c")
-    val iSeed = if (push.seeded) f.indexOf("dst_seed") else -1
-    val share = push.share
-    val rows = re.queryExecution.toRdd
-    val r0 = ranks0.collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
-    var nodes = r0.map(_._1)
-    var rs = r0.map(_._2)
+   *  its job is done. Returns the final (node, r) arrays, sorted by
+   *  node. */
+  private def driverRounds(a: Attached, r0: Array[Long],
+      share: (Long, Long, Long) => Long, teleAt: Long => Long,
+      iterations: Int): (Array[Long], Array[Long]) = {
+    val rows = a.rows
+    val iC = a.iC
+    var nodes = a.nodes
+    var rs = r0
     for (_ <- 1 to iterations) {
-      val bc = s.sparkContext.broadcast((nodes, rs))
+      val bc = rows.sparkContext.broadcast((nodes, rs))
       val reached = rows.mapPartitions { it =>
         val (ns, rv) = bc.value
         val in = mutable.LongMap.empty[Long]
-        val seed = mutable.LongMap.empty[Boolean]
         it.foreach { row =>
           val at = java.util.Arrays.binarySearch(ns, row.getLong(0))
           if (at >= 0) {
             val dst = row.getLong(1)
             val c = if (iC < 0) 1L else row.getLong(iC)
             in(dst) = addExact(in.getOrElse(dst, 0L), share(rv(at), row.getLong(2), c))
-            if (iSeed >= 0) seed(dst) = row.getLong(iSeed) != 0L
           }
         }
-        in.iterator.map { case (dst, sum) => (dst, sum, seed.getOrElse(dst, false)) }
+        in.iterator
       }.collect()
       bc.destroy()
       // a dst's edges share one partition; adding still merges any split
-      val next = reached.groupMapReduce(_._1)(t => (t._2, t._3)) {
-        case ((a, sa), (b, sb)) => (addExact(a, b), sa || sb)
-      }.toArray.sortBy(_._1)
+      val next = reached.groupMapReduce(_._1)(_._2)(addExact).toArray.sortBy(_._1)
       nodes = next.map(_._1)
-      rs = next.map { case (_, (sum, sd)) => addExact(sum, push.teleportAt(tele, sd)) }
+      rs = next.map { case (dst, sum) => addExact(sum, teleAt(dst)) }
     }
-    import s.implicits._
-    s.sparkContext.parallelize(nodes.zip(rs).toSeq).toDF("node", "r")
+    (nodes, rs)
+  }
+
+  /** A driver-built readout frame: every column named `names` is a
+   *  long except `share`, a double. */
+  private def localRanks(s: SparkSession, names: Seq[String],
+      rows: Seq[Row]): DataFrame =
+    s.createDataFrame(rows.asJava, StructType(names.map {
+      case "share" => StructField("share", DoubleType)
+      case c => StructField(c, LongType, nullable = false)
+    }))
+
+  /** Rank units as the readout's `share`: the raw division of an exact
+   *  long by a constant, bit-identical to the SQL `r / (M * 1.0)`. */
+  private def shareOf(r: Long): Double = r / (M * 1.0)
+
+  /** pageRank and weightedPageRank at the attach tier: the uniform
+   *  start vector, the rounds, and [[rankReadout]]'s rows (node,
+   *  <degCol>, rank_units, share) ordered by node, built on the driver. */
+  private def attachedRank(s: SparkSession, a: Attached, push: Push,
+      degCol: String, iterations: Int): DataFrame = {
+    val n = a.nodes.length.toLong
+    val rows =
+      if (n == 0) Seq.empty[Row]
+      else {
+        val tele = teleShare(n)
+        val (ns, rs) = driverRounds(a, Array.fill(a.nodes.length)(M / n), push.share,
+          _ => tele, iterations)
+        a.withDeg(ns, rs).toSeq.map { case (v, d, r) => Row(v, d, r, shareOf(r)) }
+      }
+    localRanks(s, Seq("node", degCol, "rank_units", "share"), rows)
   }
 
   /** One mass-push round, the round body of every variant in the SQL
@@ -462,10 +538,15 @@ object Graph {
 
   /** Integer PageRank over a directed edge list (src, dst) — callers
    *  pass a symmetrized frame for undirected graphs. Returns
-   *  (node, deg, rank_units, share); the rounds run on [[massPush]] in
-   *  the tier `tier` selects. */
+   *  (node, deg, rank_units, share) ordered by node; the rounds run at
+   *  the attach tier ([[attachEdges]]) or on [[massPush]], as `tier`
+   *  selects. */
   def pageRank(edges: DataFrame, iterations: Int = Iterations,
       tier: EdgeTier = EdgeTier()): DataFrame = {
+    attachEdges(edges, UniformPush, tier) match {
+      case Some(a) => return attachedRank(edges.sparkSession, a, UniformPush, "deg", iterations)
+      case None =>
+    }
     val e = pushEdges(edges, tier)
     // one vertex-sized pass yields deg and materializes a persisted e
     val deg = e.groupBy(col("src")).agg(UniformPush.agg.as("deg"))
@@ -561,6 +642,18 @@ object Graph {
    *  Returns (node, wdeg, rank_units, share). */
   def weightedPageRank(edges: DataFrame, iterations: Int = Iterations,
       tier: EdgeTier = EdgeTier()): DataFrame = {
+    def checkC(maxC: Long): Unit =
+      require(maxC <= MaxSafeEdgeStrength,
+        s"weightedPageRank: max edge strength $maxC exceeds the int64-safe " +
+          s"bound $MaxSafeEdgeStrength for the per-edge product r*$Damp*c " +
+          "(r can reach the 1e12 mass scale); pre-scale c by its GCD or " +
+          "carry contributions in decimal(38,0)")
+    attachEdges(edges, WeightedPush, tier) match {
+      case Some(a) =>
+        if (a.nodes.nonEmpty) checkC(a.maxC)
+        return attachedRank(edges.sparkSession, a, WeightedPush, "wdeg", iterations)
+      case None =>
+    }
     // one vertex-sized aggregate materializes a persisted e, yields
     // wdeg AND checks the int64 bound on the per-edge product r*Damp*c
     val e = pushEdges(edges, tier)
@@ -572,12 +665,7 @@ object Graph {
     if (n == 0)
       return wdeg.select(col("src").as("node"), lit(0L).as("wdeg"),
         lit(0L).as("rank_units"), lit(0.0).as("share"))
-    val maxC = head.getLong(1)
-    require(maxC <= MaxSafeEdgeStrength,
-      s"weightedPageRank: max edge strength $maxC exceeds the int64-safe " +
-        s"bound $MaxSafeEdgeStrength for the per-edge product r*$Damp*c " +
-        "(r can reach the 1e12 mass scale); pre-scale c by its GCD or " +
-        "carry contributions in decimal(38,0)")
+    checkC(head.getLong(1))
     val ranks = massPush(e, wdeg, n,
       wdeg.select(col("src").as("node"), lit(M / n).as("r")),
       WeightedPush, teleShare(n), tier, iterations)
@@ -1893,11 +1981,14 @@ object Graph {
    *  recommendation signal (Haveliwala 2002, topic-sensitive
    *  PageRank) a catalog pipeline reads per brand/topic, and the one
    *  centrality variant q148/q165 can't express (their teleport is
-   *  global). The same [[massPush]] rounds as [[pageRank]], with the
-   *  teleport share landing only at seed dsts ([[Push]] `seeded`: the
-   *  0/1 seed indicator rides the edge rows, attached through a
-   *  broadcast of the vertex-bounded seed set, so the build never
-   *  shuffles edges).
+   *  global). The same rounds as [[pageRank]], with the teleport share
+   *  landing only at seed dsts. At the attach tier the vertex-bounded
+   *  seed set is collected once per call into a sorted array that the
+   *  driver consults where it adds the teleport, so q148's cached frame
+   *  serves unchanged and no seed marker enters its lineage. The SQL
+   *  tiers carry a 0/1 seed indicator on the edge rows instead
+   *  ([[Push]] `seeded`), attached through a broadcast of the seed set,
+   *  so the build never shuffles edges.
    *  Vertices of the symmetric graph all have in-edges, so the rank
    *  frame stays complete across rounds even though non-seeds start
    *  at zero mass.
@@ -1911,6 +2002,25 @@ object Graph {
    *  copies keep brand values). */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
       iterations: Int = Iterations, tier: EdgeTier = EdgeTier()): DataFrame = {
+    attachEdges(edges, UniformPush, tier) match {
+      case Some(a) =>
+        val seedArr = seeds.select(col("pk").cast("long")).distinct().collect()
+          .collect { case r if !r.isNullAt(0) => r.getLong(0) }.sorted
+        def isSeed(v: Long) = java.util.Arrays.binarySearch(seedArr, v) >= 0
+        val ns = a.nodes.count(isSeed).toLong
+        val rows =
+          if (ns == 0) Seq.empty[Row]
+          else {
+            val tele = teleShare(ns)
+            val (nodes, rs) = driverRounds(a, a.nodes.map(v => if (isSeed(v)) M / ns else 0L),
+              UniformPush.share, v => if (isSeed(v)) tele else 0L, iterations)
+            a.withDeg(nodes, rs).sortBy { case (v, _, r) => (-r, v) }.take(PprTopK).toSeq
+              .map { case (v, d, r) => Row(v, d, r, shareOf(r), if (isSeed(v)) 1L else 0L) }
+          }
+        return localRanks(edges.sparkSession,
+          Seq("part_id", "deg", "rank_units", "share", "is_seed"), rows)
+      case None =>
+    }
     // seedSet is vertex-bounded (one brand's parts) — checkpoint it
     // once so its consumers below don't re-run its distinct
     val seedSet = seeds.select(col("pk")).distinct().localCheckpoint()

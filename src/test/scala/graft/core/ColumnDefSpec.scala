@@ -1,5 +1,6 @@
 package graft.core
 
+import org.scalacheck.{Gen, Prop, Test}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Lattice semantics per reference diepy/core.py:458-544 and the
@@ -123,5 +124,39 @@ class ColumnDefSpec extends AnyFunSuite {
     val seq = fold(vals)
     val merged = fold(l).merge(fold(r))
     assert(seq == merged)
+  }
+
+  // the accumulators inference can reach: folds over sampled cells of
+  // every type, and any field combination with min <= 0 <= max (the
+  // int range starts at 0, a reference quirk) and a length >= 0
+  private val cell = Gen.oneOf("", "0", "1", "-7", "31000", "99999", "9223372036854775807",
+    "2.5", "-1e3", "2013-10-11", "12:01:02", "2013-10-11 13:04:05", "abc",
+    "a much longer text value that crosses the fifty character width tier")
+  private val folded = Gen.listOf(cell).map(vs => fold(vs))
+  private val anyDef = for {
+    t <- Gen.oneOf("", "int", "float", "date", "time", "datetime", "text")
+    nullable <- Gen.oneOf(false, true)
+    length <- Gen.choose(0, 5000)
+    lo <- Gen.choose(Long.MinValue, 0L)
+    hi <- Gen.choose(0L, Long.MaxValue)
+  } yield ColumnDef("c", t, nullable, length, lo, hi)
+  private val defs = Gen.oneOf(folded, anyDef)
+
+  private def holds(p: Prop): Unit = {
+    val r = Test.check(Test.Parameters.default.withMinSuccessfulTests(1000), p)
+    assert(r.passed, r.status)
+  }
+
+  test("merge is commutative") {
+    holds(Prop.forAll(defs, defs)((a, b) => a.merge(b) == b.merge(a)))
+  }
+
+  test("merge is associative") {
+    holds(Prop.forAll(defs, defs, defs)((a, b, c) =>
+      a.merge(b).merge(c) == a.merge(b.merge(c))))
+  }
+
+  test("ColumnDef(name) is the identity of merge") {
+    holds(Prop.forAll(defs)(a => ColumnDef("c").merge(a) == a && a.merge(ColumnDef("c")) == a))
   }
 }

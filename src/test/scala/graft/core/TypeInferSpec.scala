@@ -1,5 +1,9 @@
 package graft.core
 
+import java.time.{LocalDate, LocalDateTime, LocalTime}
+import java.time.format.DateTimeFormatter
+
+import org.scalacheck.{Gen, Prop, Test}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Predicate semantics per reference diepy/core.py:547-630. */
@@ -60,5 +64,85 @@ class TypeInferSpec extends AnyFunSuite {
   test("non-temporal text matches nothing") {
     for (s <- Seq("hello", "", "12:99:99", "2013-13-45"))
       assert(!isDate(s) && !isTime(s) && !isDateTime(s), s)
+  }
+
+  /** Reference implementation for the exception-free probe: the same
+    * gates, then each format's plain resolving parse, a thrown
+    * `DateTimeParseException` meaning no match. */
+  private def exceptionPath(raw: String): Option[Temporal] = {
+    def tryParse[A](a: => A): Option[A] = try Some(a) catch { case _: Exception => None }
+    val dateFormats = datePatterns.map(DateTimeFormatter.ofPattern)
+    val timeFormats = timePatterns.map(DateTimeFormatter.ofPattern)
+    val dateTimeFormats = dateTimePatterns.map(DateTimeFormatter.ofPattern)
+    val s = raw.trim
+    if (s.length < 4 || s.length > 40) return None
+    var hasDigit = false; var hasColon = false; var hasDateSep = false
+    var hasDotOrSpace = false
+    var allDigits = true
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c.isDigit) hasDigit = true else allDigits = false
+      if (c == ':') hasColon = true
+      if (c == '-' || c == '/' || c == ',') hasDateSep = true
+      if (c == '.' || c == ' ') hasDotOrSpace = true
+      i += 1
+    }
+    if (!hasDigit) return None
+    if (!hasColon && !hasDateSep && !hasDotOrSpace && !(allDigits && s.length == 8))
+      return None
+    val tryDateTime = hasColon && (hasDateSep || s.exists(_ == 'T'))
+    val tryTimeOnly = hasColon && !hasDateSep
+    val tryDateOnly = !hasColon
+    val dt = if (tryDateTime)
+      dateTimeFormats.iterator.flatMap(f => tryParse(LocalDateTime.parse(s, f))).nextOption()
+        .map(v => Temporal(Some(v.toLocalDate), Some(v.toLocalTime)))
+    else None
+    dt.orElse {
+        if (tryDateOnly || tryDateTime)
+          dateFormats.iterator.flatMap(f => tryParse(LocalDate.parse(s, f))).nextOption()
+            .map(d => Temporal(Some(d), None))
+        else None
+      }
+      .orElse {
+        if (tryTimeOnly)
+          timeFormats.iterator.flatMap(f => tryParse(LocalTime.parse(s, f))).nextOption()
+            .map(t => Temporal(None, Some(t)))
+        else None
+      }
+  }
+
+  test("exception-free probing classifies every string as the exception path does") {
+    val instant = for {
+      d <- Gen.choose(LocalDate.of(1, 1, 1).toEpochDay, LocalDate.of(9999, 12, 31).toEpochDay)
+      n <- Gen.choose(0L, 86400L * 1000000000L - 1)
+      sub <- Gen.oneOf(1000000000L, 1000000L, 1000L, 1L) // whole s, ms, µs, ns
+    } yield LocalDateTime.of(LocalDate.ofEpochDay(d), LocalTime.ofNanoOfDay(n - n % sub))
+    // every pattern's rendering, clean and with a trailing or cut character
+    val rendered = for {
+      t <- instant
+      p <- Gen.oneOf(datePatterns ++ timePatterns ++ dateTimePatterns)
+      edit <- Gen.oneOf(Seq[String => String](identity, _ + "0", _ + "Z", _.dropRight(1),
+        " " + _ + " ", _.replace('-', '/')))
+    } yield edit(t.format(DateTimeFormatter.ofPattern(p)))
+    // digit shapes with out-of-range fields: a month 13, a Feb 30, an hour 24
+    val fields = for {
+      y <- Gen.choose(0, 2100); m <- Gen.choose(0, 14); d <- Gen.choose(0, 33)
+      h <- Gen.choose(0, 25); mi <- Gen.choose(0, 61)
+      shape <- Gen.oneOf("%04d-%02d-%02d", "%04d-%02d-%02d %02d:%02d", "%02d/%02d/%04d",
+        "%04d%02d%02d", "%02d:%02d", "%04d-%02d-%02dT%02d:%02d:00")
+    } yield {
+      val args: Seq[Any] = shape match {
+        case "%02d/%02d/%04d" => Seq(m, d, y)
+        case "%02d:%02d" => Seq(h, mi)
+        case _ => Seq(y, m, d, h, mi)
+      }
+      shape.format(args.take(shape.count(_ == '%')): _*)
+    }
+    val noise = Gen.listOf(Gen.oneOf("0123456789-/:., TAPMJanDecZ".toSeq)).map(_.mkString)
+    val input = Gen.frequency(4 -> rendered, 3 -> fields, 2 -> noise, 1 -> Gen.asciiPrintableStr)
+    val r = Test.check(Test.Parameters.default.withMinSuccessfulTests(5000),
+      Prop.forAll(input)(s => parseTemporal(s) == exceptionPath(s)))
+    assert(r.passed, r.status)
   }
 }

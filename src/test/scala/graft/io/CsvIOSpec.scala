@@ -87,6 +87,19 @@ class CsvIOSpec extends AnyFunSuite with SparkSuite {
     assert(lines2.toSeq == Seq("b,ts,s"))
   }
 
+  test("export renders TIMESTAMP_NTZ like TIMESTAMP: isoformat(), micros kept") {
+    import java.time.LocalDateTime
+    import spark.implicits._
+    val df = Seq(LocalDateTime.of(2000, 8, 27, 0, 0),
+      LocalDateTime.of(2000, 8, 27, 12, 34, 56, 123456000)).toDF("t")
+    assert(df.schema("t").dataType == TimestampNTZType)
+    val out = Files.createTempDirectory("graftcsv").toString + "/ntz.csv"
+    CsvIO.exportCsv(df, out, unixLineSep = true)
+    import scala.jdk.CollectionConverters._
+    assert(Files.readAllLines(Paths.get(out)).asScala.toSeq ==
+      Seq("t", "2000-08-27T00:00:00", "2000-08-27T12:34:56.123456"))
+  }
+
   test("gzip export round-trips through compressed import (fixes reference S3 bug)") {
     val (typed, _) = CsvIO.importCsv(spark, fixture)
     val dir = Files.createTempDirectory("graftgz").toString

@@ -240,33 +240,79 @@ class GraphRankSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
-  test("attach-tier pageRank runs one Spark job per round") {
+  test("a memory-backed tier past a forced ceiling falls through to the SQL tiers") {
+    val forced = attach.copy(vertexCeiling = 0L)
+    for ((variant, run, want) <- variants ++ directedVariants)
+      assert(run(forced) == want, variant)
+  }
+
+  /** Jobs started by `call`, counted up to a marker job: the listener
+    * bus delivers events in order, so every earlier job is counted once
+    * the marker's start arrives. */
+  private def jobsOf(call: => Unit): Int = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
-    val df = mixed.toDF("src", "dst")
-    // jobs started by one call, counted up to a marker job: the listener
-    // bus delivers events in order, so every earlier job is counted
-    // once the marker's start arrives
-    def jobs(rounds: Int): Int = {
-      val started = new java.util.concurrent.atomic.AtomicInteger
-      val marked = new java.util.concurrent.CountDownLatch(1)
-      val listener = new SparkListener {
-        override def onJobStart(j: SparkListenerJobStart): Unit =
-          if (Option(j.properties).exists(_.getProperty("spark.job.description") == "marker"))
-            marked.countDown()
-          else started.incrementAndGet()
-      }
-      sc.addSparkListener(listener)
-      try {
-        Graph.pageRank(df, rounds, attach).collect()
-        sc.setJobDescription("marker")
-        try sc.parallelize(Seq(1)).count() finally sc.setJobDescription(null)
-        assert(marked.await(60, java.util.concurrent.TimeUnit.SECONDS))
-        started.get
-      } finally sc.removeSparkListener(listener)
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val marked = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.job.description") == "marker"))
+          marked.countDown()
+        else started.incrementAndGet()
     }
-    jobs(1) // builds and caches the edge frames the counted calls reuse
+    sc.addSparkListener(listener)
+    try {
+      call
+      sc.setJobDescription("marker")
+      try sc.parallelize(Seq(1)).count() finally sc.setJobDescription(null)
+      assert(marked.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      started.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("attach-tier pageRank runs one Spark job per round") {
+    val df = mixed.toDF("src", "dst")
+    def jobs(rounds: Int): Int = jobsOf(Graph.pageRank(df, rounds, attach).collect())
+    jobs(1) // builds and caches the edge frame the counted calls reuse
     assert(jobs(6) - jobs(3) == 3)
+  }
+
+  test("a warm attach-tier call runs the prologue job, one job per round and no other SQL job") {
+    val rounds = 4
+    // the personalized call's per-call seed-set collect: the distinct's
+    // shuffle-map stage and its result stage
+    val seedCollectJobs = 2
+    val calls: Seq[(String, Int => Unit)] = Seq(
+      "uniform" -> (k => Graph.pageRank(mixed.toDF("src", "dst"), k, attach).collect()),
+      "weighted" -> (k => Graph.weightedPageRank(mixedW.toDF("src", "dst", "c"), k, attach)
+        .collect()),
+      "seeded" -> (k => Graph.personalizedPageRank(mixed.toDF("src", "dst"),
+        mixedSeeds.toSeq.toDF("pk"), k, attach).collect()))
+    for ((variant, call) <- calls) {
+      call(1) // builds and caches the attached frame
+      val n = jobsOf(call(rounds))
+      // the collected readout is a local frame: collecting it starts no job
+      val want = if (variant == "seeded") rounds + 1 + seedCollectJobs else rounds + 1
+      assert(n == want, s"$variant: $n jobs for $rounds rounds")
+    }
+  }
+
+  test("three personalized calls leave one persisted attach frame, shared with pageRank") {
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    val before = sc.getRDDStorageInfo.map(_.id).toSet
+    // RDDs persisted since `before`, with their cached bytes
+    def added(): Map[Int, Long] = sc.getRDDStorageInfo.filterNot(i => before(i.id))
+      .map(i => i.id -> (i.memSize + i.diskSize)).toMap
+    val after = (1 to 3).map { _ =>
+      Graph.personalizedPageRank(mixed.toDF("src", "dst"), mixedSeeds.toSeq.toDF("pk"),
+        matrixIters, attach).collect()
+      added()
+    }
+    assert(after.head.size == 1, after.head)
+    assert(after.forall(_ == after.head), after)
+    Graph.pageRank(mixed.toDF("src", "dst"), matrixIters, attach).collect()
+    assert(added() == after.head)
   }
 
   test("the eviction hook fires once the rounds stop reading the source, never in the rescan tier") {
