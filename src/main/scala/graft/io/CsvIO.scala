@@ -236,13 +236,19 @@ object CsvIO {
     val finalDst = if (useGzip && !dst.endsWith(".gz")) dst + ".gz" else dst
     val d = delimiterFor(finalDst, delimiter)
     val cleaned = cleanboolProjection(df)
+    // a one-column row holding NULL or "" would be an empty line, which
+    // Spark's writer drops; the reference's csv.writer writes `""` for
+    // it, so a lone column spells empty cells quoted (decided from the
+    // schema: no data pass)
+    val empty = if (cleaned.schema.length == 1) "\"\"" else ""
     // coalesce only on the single-file path — a no-op coalesce(n)
     // still forces RDD lineage conversion on the scalable path
     val writer0 = (if (singleFile) cleaned.coalesce(1) else cleaned)
       .write
       .option("header", "true")
       .option("delimiter", d)
-      .option("emptyValue", "")
+      .option("emptyValue", empty)
+      .option("nullValue", empty)
       // RFC-4180 doubled quotes, like the reference's csv.writer —
       // Spark's writer defaults to backslash-escaping, which our own
       // (and most) readers would misparse

@@ -216,44 +216,57 @@ object Similarity {
     centroids
   }
 
-  /** Writes the corpus PARTITIONED BY IVF cell — the physical layout
-   *  the q37 scaladoc promises at 100 TB: one directory per coarse
-   *  cell, so a probe reads probes/cells of the data through ordinary
-   *  partition pruning instead of scanning everything and filtering.
-   *  Cell assignment is the same literal-centroid projection q37
-   *  uses (memoized codebook), so the layout and the in-memory path
-   *  can never disagree about where a vector lives. */
-  /** The durable IVF layout for corpus `d`, written once per JVM per
-   *  source dir (the zorderedLineitem contract): q137 and any other
-   *  consumer of the cell-partitioned layout share one write. The
-   *  root `_SUCCESS` marker is the completion gate — a partial write
-   *  (no marker) is rewritten, never trusted. */
-  def ivfLayoutDir(s: SparkSession, d: String): String = {
-    val dir = InferOps.tmpPath("ivf_layout", d)
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS")))
-      ivfWritePartitioned(s, d, dir)
-    dir
+  /** A (vec_id, embedding) corpus batch as the (vec_id, v) frame the
+   *  cell assignments read. */
+  private def vectors(batch: DataFrame): DataFrame =
+    batch.select(col("vec_id"), col("embedding").as("v"))
+
+  /** The memoized codebook of corpus `d` as centroid literals: `k` ≤ 0
+   *  is the fixed q37 codebook, a positive `k` a codebook of that
+   *  size (the scaled blocking path). */
+  private def centroids(s: SparkSession, d: String, k: Int = 0): Array[(Int, Seq[Double])] = {
+    val e = vectors(embeddings(s, d))
+    val cb = if (k <= 0) codebook(e, d) else codebookK(e, d, k)
+    require(cb.nonEmpty, s"$d: empty corpus, nothing to lay out")
+    cb.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
   }
 
-  def ivfWritePartitioned(s: SparkSession, d: String, out: String): Unit =
-    withCell(s, d).write.mode("overwrite").partitionBy("cell").parquet(out)
+  /** The flat IVF index of corpus `d` ([[DurableIndex]]): the corpus
+   *  PARTITIONED BY IVF cell — the physical layout the q37 scaladoc
+   *  promises at 100 TB, one directory per coarse cell, so a probe
+   *  reads probes/cells of the data through partition pruning. Cells
+   *  come from the same literal-centroid projection q37 uses (the
+   *  memoized codebook, the model artifact persisted alongside the
+   *  layout), so the layout and the in-memory path can never disagree
+   *  about where a vector lives. Append contract (q144-gated): the
+   *  codebook is fit on the [[KMeansSample]] SMALLEST vec_ids, so
+   *  batches with ids above the base corpus leave the artifact — and
+   *  every existing assignment — bit-identical; appended ≡ rebuilt
+   *  from scratch, exactly. A deployment whose batches can precede
+   *  the sample prefix persists the codebook file instead. */
+  def ivfIndex(s: SparkSession, d: String): DurableIndex = {
+    graft.functions.GraftFunctions.register(s)
+    val cents = centroids(s, d)
+    DurableIndex.cells(b => vectors(b).withColumn("cell", cellAssign(cents)))
+  }
+
+  /** The durable IVF layout for corpus `d`, written once per JVM per
+   *  source dir (the zorderedLineitem contract): q137 and any other
+   *  consumer of the cell-partitioned layout share one write. */
+  def ivfLayoutDir(s: SparkSession, d: String): String =
+    DurableIndex.durableDir("ivf_layout", d)(ivfIndex(s, d).write(embeddings(s, d), _))
 
   /** The corpus with its IVF cell assignment — THE definition shared
-   *  by the durable layout write above and q137's layout-parity
-   *  audit, so "which cell does this vector live in" has exactly one
+   *  by the durable layout above and q137's layout-parity audit, so
+   *  "which cell does this vector live in" has exactly one
    *  implementation. Cell = argmax-cosine centroid of the memoized
-   *  codebook (literal centroids, scan-parallel projection).
-   *  `k` ≤ 0 (default) means the fixed q37 codebook; a positive `k`
-   *  selects a codebook of that size (the scaled blocking path). */
+   *  codebook (literal centroids, scan-parallel projection); `k` as
+   *  in [[centroids]], past [[KMeansSample]] the two-level tier. */
   private[ops] def withCell(s: SparkSession, d: String, k: Int = 0): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val e = embeddings(s, d).select(col("vec_id"), col("embedding").as("v"))
-    if (k > KMeansSample) return twoLevelWithCell(s, e, k)
-    val cb = if (k <= 0) codebook(e, d) else codebookK(e, d, k)
-    val cents: Array[(Int, Seq[Double])] =
-      cb.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-    require(cents.nonEmpty, s"$d: empty corpus, nothing to lay out")
-    e.withColumn("cell", cellAssign(cents))
+    val e = vectors(embeddings(s, d))
+    if (k > KMeansSample) twoLevelWithCell(s, e, k)
+    else e.withColumn("cell", cellAssign(centroids(s, d, k)))
   }
 
   /** TWO-LEVEL (coarse×fine) cell assignment — the scale tier past
@@ -373,11 +386,8 @@ object Similarity {
   private[graft] def withProbeCells(s: SparkSession, d: String,
       probes: Int, k: Int = 0): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val e = embeddings(s, d).select(col("vec_id"), col("embedding").as("v"))
-    val cb = if (k <= 0) codebook(e, d) else codebookK(e, d, k)
-    val cents: Array[(Int, Seq[Double])] =
-      cb.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-    require(cents.nonEmpty, s"$d: empty corpus, nothing to lay out")
+    val e = vectors(embeddings(s, d))
+    val cents = centroids(s, d, k)
     val simCells = cents.map { case (cid, cv) =>
       struct(cosine_sim(col("v"), typedLit(cv)).as("csim"), lit(cid).as("cid"))
     }
@@ -388,19 +398,7 @@ object Similarity {
         c => c.getField("cid")))
   }
 
-  /** Durable layout partitioned by CORPUS-SCALED cells — the blocking
-   *  twin of [[ivfWritePartitioned]] (which keeps q37's fixed probe
-   *  codebook): cell count = [[scaledCellCount]] of the corpus size,
-   *  so a block-local quadratic consumer (SemDeDup) does per-cell
-   *  work bounded by [[ScaledCellPop]]² and TOTAL work linear in the
-   *  corpus. Returns the cell count used. */
-  def ivfWriteScaled(s: SparkSession, d: String, out: String): Int = {
-    val k = scaledCellCount(embeddings(s, d).count())
-    withCell(s, d, k).write.mode("overwrite").partitionBy("cell").parquet(out)
-    k
-  }
-
-  /** Top-5 kNN over an [[ivfWritePartitioned]] layout. Probe cells
+  /** Top-5 kNN over an [[ivfIndex]] layout. Probe cells
    *  are computed DRIVER-side from the memoized codebook (k·dim dot
    *  products per query — the codebook is driver-sized by design), so
    *  the scan predicate is a literal `cell IN (...)`: Spark prunes at
@@ -445,36 +443,17 @@ object Similarity {
       .orderBy(col("qid"), col("rnk"))
   }
 
-  /** Incremental IVF index maintenance: assign a batch of new vectors
-    * with the MEMOIZED codebook (the model artifact persisted
-    * alongside the layout — [[codebook]]'s scaladoc) and append them
-    * into the existing `cell=<c>/` partition directories. O(batch)
-    * work: one literal-centroid projection over the batch plus a
-    * partitioned append; existing cell files are never rewritten.
-    * Contract (q144-gated): the codebook is fit on the
-    * [[KMeansSample]] SMALLEST vec_ids, so append batches with ids
-    * above the base corpus leave the artifact — and therefore every
-    * existing assignment — bit-identical; appended ≡ rebuilt from
-    * scratch, exactly. A deployment whose batches can precede the
-    * sample prefix persists the codebook file instead (same memoized
-    * artifact, different durability). */
-  def ivfAppend(s: SparkSession, d: String, layout: String,
-      batch: DataFrame): Unit = {
-    graft.functions.GraftFunctions.register(s)
-    val e = embeddings(s, d).select(col("vec_id"), col("embedding").as("v"))
-    val cents: Array[(Int, Seq[Double])] =
-      codebook(e, d).zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-    require(cents.nonEmpty, s"$d: no codebook to append against")
-    batch.select(col("vec_id"), col("embedding").as("v"))
-      .withColumn("cell", cellAssign(cents))
-      .write.mode("append").partitionBy("cell").parquet(layout)
-  }
+  /** The stored (vec_id, cell) rows of a cell-dir layout generation. */
+  private def storedCells(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(dir).select(col("vec_id"), col("cell").cast("int").as("cell"))
 
   /** q144: the incremental-maintenance gate (all-true VALUES oracle,
     * the q137/q143 style). One run = one full cycle: write a base
-    * layout holding all but the top-decile vec_ids (overwrite, so the
-    * query is idempotent across bench repeats), [[ivfAppend]] the
-    * held-out batch, then audit the combined layout against the
+    * [[ivfIndex]] layout holding all but the top-decile vec_ids
+    * (overwrite, so the query is idempotent across bench repeats),
+    * append the held-out batch — O(batch): one literal-centroid
+    * projection plus a partitioned append, no existing cell file
+    * rewritten — then audit the combined layout against the
     * rebuilt-from-scratch assignment ([[withCell]]):
     *
     *  - `append_complete`: the layout holds exactly the corpus
@@ -487,35 +466,22 @@ object Similarity {
     *  Scale shape: the threshold is one TakeOrdered; both audit legs
     *  are O(n) scans/equi-joins — no quadratic anywhere. */
   def q144IvfAppend(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = embeddings(s, d).select(col("vec_id"), col("embedding"))
     val n = e.count()
     val batchN = math.max(1L, math.min(n / 2, math.max(64L, n / 10)))
     val t = e.select(col("vec_id")).orderBy(col("vec_id").desc)
       .limit(batchN.toInt).agg(min(col("vec_id"))).head().getLong(0)
     val dir = InferOps.tmpPath("ivf_append", d)
-    withCell(s, d).filter(col("vec_id") < t)
-      .write.mode("overwrite").partitionBy("cell").parquet(dir)
-    ivfAppend(s, d, dir, e.filter(col("vec_id") >= t))
-    val stored = s.read.parquet(dir)
-      .select(col("vec_id"), col("cell").cast("int").as("cell"))
-    val rebuilt = withCell(s, d)
-      .select(col("vec_id"), col("cell").as("cell_rebuilt"))
-    stored.join(rebuilt, Seq("vec_id"), "full")
-      .agg(count(lit(1)).as("n_rows"),
-        countDistinct(col("vec_id")).as("n_ids"),
-        count(when(col("cell").isNull || col("cell_rebuilt").isNull ||
-          col("cell") =!= col("cell_rebuilt"), 1)).as("mismatches"),
-        count(when(col("vec_id") >= t, 1)).as("n_batch"))
-      .select(explode(array(
-        struct(lit("append_batch_sized").as("component"),
-          (col("n_batch") === batchN).as("ok")),
-        struct(lit("append_complete").as("component"),
-          (col("n_rows") === n && col("n_ids") === n).as("ok")),
-        struct(lit("append_equiv_rebuild").as("component"),
-          (col("mismatches") === 0).as("ok")))).as("r"))
-      .select(col("r.component"), col("r.ok"))
-      .orderBy(col("component"))
+    val ivf = ivfIndex(s, d)
+    ivf.write(e.filter(col("vec_id") < t), dir)
+    ivf.write(e.filter(col("vec_id") >= t), dir, append = true)
+    val audit = DurableIndex.coverage(storedCells(s, dir),
+      withCell(s, d).select(col("vec_id"), col("cell")), "vec_id",
+      count(when(col("vec_id") >= t, 1)))
+    DurableIndex.gate(s, Seq(
+      ("append_batch_sized", audit.getLong(3) == batchN),
+      ("append_complete", audit.getLong(0) == n && audit.getLong(1) == n),
+      ("append_equiv_rebuild", audit.getLong(2) == 0L)))
   }
 
   val q144Sql: String =
@@ -526,54 +492,19 @@ object Similarity {
 
   // ----- stream-maintained IVF layout (q186) -------------------------
 
-  /** Compaction for a partitioned IVF layout: drop every tombstoned
-    * vec_id, rewriting into a NEW generation directory (`dst`) — the
-    * IVF twin of `Dedup.compactLshIndex`, closing the last cell of
-    * the continuous-ingestion matrix (exact index: q63 stream / q166
-    * compaction; LSH index: q179 stream / q166 compaction; IVF
-    * layout: q144 batch-append / THIS). The tombstone set is
-    * deletion-sized so the removal is a BROADCAST anti-join — the
-    * corpus-sized layout streams through a map-side filter; the
-    * rewrite pays the one partitioned write a compaction IS, and
-    * lands `partitionBy(cell)` again so post-compaction probes keep
-    * the directory-pruned plan (PlanQualitySpec pins PartitionFilters
-    * on the layout scan). Writing a new generation instead of in
-    * place is deliberate: Spark cannot overwrite a layout it is
-    * reading, and a deployment wants the atomic swap anyway. */
-  def compactIvfLayout(s: SparkSession, src: String, dst: String,
-      tombstones: DataFrame): Unit =
-    s.read.parquet(src)
-      .join(broadcast(tombstones.select(col("vec_id")).distinct()),
-        Seq("vec_id"), "left_anti")
-      .write.mode("overwrite").partitionBy("cell").parquet(dst)
-
-  /** Recursive best-effort delete — q186 appends into its layout, so
-    * repeated bench runs in one JVM must start from a clean dir. */
-  private def deleteDir(p: String): Unit = {
-    val root = java.nio.file.Paths.get(p)
-    if (java.nio.file.Files.exists(root))
-      scala.util.Using.resource(java.nio.file.Files.walk(root)) { st =>
-        st.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(f =>
-            try { java.nio.file.Files.deleteIfExists(f); () }
-            catch { case _: Exception => () })
-      }
-  }
-
   /** q186: the IVF layout maintained from a LIVE STREAM — the last
-    * empty cell of the continuous-ingestion matrix (round-11 verdict
-    * §missing-3). One run is one full lifecycle, the q179 template
-    * applied to the vector index:
+    * empty cell of the continuous-ingestion matrix (exact index: q63
+    * stream / q166 compaction; LSH index: q179 stream / q166
+    * compaction; IVF layout: q144 batch-append / THIS). One run is one
+    * full [[DurableIndex]] lifecycle, the q179 template applied to the
+    * vector index:
     *
-    *  1. the embedding corpus is staged as 3 files and streamed with
-    *     maxFilesPerTrigger=1, so a genuine multi-batch foreachBatch
-    *     chain (the q87 device) assigns each micro-batch with the
-    *     MEMOIZED codebook and appends it into the partitioned layout
-    *     via [[ivfAppend]] — per-batch cost O(batch), never
-    *     O(corpus);
+    *  1. the embedding corpus is staged as 3 files and streamed one
+    *     file per micro-batch; each batch is assigned with the
+    *     MEMOIZED codebook and appended into the partitioned layout —
+    *     per-batch cost O(batch), never O(corpus);
     *  2. tombstones (CDC deletes arriving after ingestion;
-    *     vec_id % 10 = 7) are compacted away with
-    *     [[compactIvfLayout]]'s generation rewrite;
+    *     vec_id % 10 = 7) are compacted away into a new generation;
     *  3. the compacted stream-built generation is audited against the
     *     from-scratch assignment and a layout REBUILT in one batch
     *     from the surviving corpus: completeness (exactly the
@@ -589,80 +520,43 @@ object Similarity {
     * Every audit leg is an O(corpus) scan/equi-join; dir resets keep
     * the query idempotent across bench repeats. */
   def q186StreamIvfIndex(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    graft.functions.GraftFunctions.register(s)
     val e = embeddings(s, d).select(col("vec_id"), col("embedding"))
-    // staging reuse is keyed on a CONTENT fingerprint (order-free XOR
-    // of per-row hashes — one scan, the audit legs already pay
-    // several; bit_xor, not sum: an int64 sum overflows under ANSI
-    // mode), not just dir existence: a corpus regenerated in place
-    // would otherwise stream a stale stage and surface only as a
-    // confusing stream_complete/equiv false (advice round-12). A
-    // changed corpus lands a NEW pid-keyed stage dir; the old one is
-    // exit-time scratch like every tmpPath.
-    val fpRow = e.agg(bit_xor(xxhash64(col("vec_id"), col("embedding")))).head()
-    val fp = java.lang.Long.toHexString(
-      if (fpRow.isNullAt(0)) 0L else fpRow.getLong(0))
-    val stage = InferOps.tmpPath("sivf_src", d, suffix = s"_$fp")
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(stage, "_SUCCESS")))
-      e.repartition(3).write.mode("overwrite").parquet(stage)
+    val stage = DurableIndex.stage(s, "sivf_src", d, e)
     val layout = InferOps.tmpPath("sivf_layout", d)
     val gen2 = InferOps.tmpPath("sivf_gen2", d)
     val ref = InferOps.tmpPath("sivf_ref", d)
-    deleteDir(layout)
-    val nBatches = new java.util.concurrent.atomic.AtomicInteger(0)
-    val stream = s.readStream.schema(e.schema)
-      .option("maxFilesPerTrigger", 1).parquet(stage)
-    val q = stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      nBatches.incrementAndGet()
-      ivfAppend(s, d, layout, batch)
-      ()
-    }.trigger(Trigger.AvailableNow()).start()
-    try q.awaitTermination() finally q.stop()
+    val ivf = ivfIndex(s, d)
+    ivf.drop(s, layout)
+    val nBatches = DurableIndex.streamFiles(s, stage, e.schema)(
+      ivf.write(_, layout, append = true))
     val tomb = e.filter(col("vec_id") % 10 === 7).select(col("vec_id"))
     val surviving = e.join(broadcast(tomb), Seq("vec_id"), "left_anti")
     // generation rewrite ∥ reference rebuild ∥ survivor count: disjoint
     // outputs / independent scans (guide §2.6) — the codebook these
-    // assignments share is already memoized by the stream's appends
+    // assignments share is already memoized
     val nSurv = Par.run(Seq[() => Any](
-      () => compactIvfLayout(s, layout, gen2, tomb),
-      () => withCell(s, d).join(broadcast(tomb), Seq("vec_id"), "left_anti")
-        .write.mode("overwrite").partitionBy("cell").parquet(ref),
+      () => ivf.compact(s, layout, gen2, tomb),
+      () => ivf.write(surviving, ref),
       () => surviving.count()))(2).asInstanceOf[Long]
-
-    val stored = s.read.parquet(gen2)
-      .select(col("vec_id"), col("cell").cast("int").as("cell"))
     val rebuilt = withCell(s, d)
       .join(broadcast(tomb), Seq("vec_id"), "left_anti")
-      .select(col("vec_id"), col("cell").as("cell_rebuilt"))
+      .select(col("vec_id"), col("cell"))
+    def knn(layout: String) =
+      ivfKnnPartitioned(s, d, layout).select(col("qid"), col("rnk"), col("nid"))
     // the three audit legs are independent counts over the two
     // finished generations — overlap them too
-    val auditLegs = Par.run(Seq[() => Any](
-      () => stored.join(broadcast(tomb), Seq("vec_id"), "left_semi").count(),
-      () => stored.join(rebuilt, Seq("vec_id"), "full")
-        .agg(count(lit(1)).as("n_rows"),
-          countDistinct(col("vec_id")).as("n_ids"),
-          count(when(col("cell").isNull || col("cell_rebuilt").isNull ||
-            col("cell") =!= col("cell_rebuilt"), 1)).as("mismatches"))
-        .head(),
-      () => ivfKnnPartitioned(s, d, gen2).as("a")
-        .join(ivfKnnPartitioned(s, d, ref).as("b"),
-          col("a.qid") === col("b.qid") && col("a.rnk") === col("b.rnk") &&
-            col("a.nid") === col("b.nid"), "full")
-        .filter(col("a.qid").isNull || col("b.qid").isNull)
-        .count()))
-    val tombLeft = auditLegs(0).asInstanceOf[Long]
-    val audit = auditLegs(1).asInstanceOf[org.apache.spark.sql.Row]
-    val probeMism = auditLegs(2).asInstanceOf[Long]
-    import s.implicits._
-    Seq(
+    val legs = Par.run(Seq[() => Any](
+      () => ivf.tombstonesLeft(s, gen2, tomb),
+      () => DurableIndex.coverage(storedCells(s, gen2), rebuilt, "vec_id"),
+      () => DurableIndex.mismatches(knn(gen2), knn(ref), Seq("qid", "rnk", "nid"))))
+    val audit = legs(1).asInstanceOf[org.apache.spark.sql.Row]
+    DurableIndex.gate(s, Seq(
       ("stream_complete",
         audit.getLong(0) == nSurv && audit.getLong(1) == nSurv),
       ("stream_equiv_rebuild", audit.getLong(2) == 0L),
-      ("stream_probe_equiv", probeMism == 0L),
-      ("stream_saw_batches", nBatches.get() == 3),
-      ("stream_tombstones_gone", tombLeft == 0L))
-      .toDF("component", "ok").orderBy(col("component"))
+      ("stream_probe_equiv", legs(2) == 0L),
+      ("stream_saw_batches", nBatches == 3),
+      ("stream_tombstones_gone", legs(0) == 0L)))
   }
 
   val q186Sql: String =
@@ -954,7 +848,7 @@ object Similarity {
   }
 
   /** Persist the PQ codes column as a LAYOUT (mirror of
-    * [[ivfWritePartitioned]] for the coarse layer): every vector
+    * the [[ivfIndex]] layout for the coarse layer): every vector
     * encoded once — via the same [[encodePacked]] routine and the
     * same memoized codebooks as q89, so layout and in-memory path can
     * never disagree — into (vec_id, code:int) parquet. At 100 TB this
@@ -1211,6 +1105,10 @@ object Similarity {
   // ----- durable two-level codebook artifact + scaled stream
   // ----- maintenance (q189, round-14 stretch)
 
+  /** (k1, k2, coarse centroids, fine sub-codebooks per coarse cell). */
+  private[ops] type Artifact =
+    (Int, Int, Array[Array[Double]], Array[Array[Array[Double]]])
+
   /** Both blocking levels as ONE durable, driver-sized artifact —
    *  what [[twoLevelWithCell]] deliberately does NOT produce (its
    *  fine fits are fused into the layout pass and discarded). A
@@ -1236,8 +1134,7 @@ object Similarity {
    *  artifact (what FAISS-class systems do), audits compare against
    *  the SAME frozen artifact, and refitting is a compaction-time
    *  rewrite (the q166 LSH-compaction discipline). */
-  private[ops] def twoLevelCodebooks(s: SparkSession, e: DataFrame, k: Int)
-      : (Int, Int, Array[Array[Double]], Array[Array[Array[Double]]]) = {
+  private[ops] def twoLevelCodebooks(s: SparkSession, e: DataFrame, k: Int): Artifact = {
     import s.implicits._
     if (k <= KMeansSample) {
       val coarse = fitCodebook(e, k)
@@ -1357,8 +1254,7 @@ object Similarity {
       .repartition(1).write.mode("overwrite").parquet(s"${layout}_codebook")
   }
 
-  private[ops] def readArtifact(s: SparkSession, layout: String)
-      : (Int, Int, Array[Array[Double]], Array[Array[Array[Double]]]) = {
+  private[ops] def readArtifact(s: SparkSession, layout: String): Artifact = {
     val rows = s.read.parquet(s"${layout}_codebook").collect()
     require(rows.nonEmpty, s"$layout: no codebook artifact")
     val k1 = rows.head.getInt(1); val k2 = rows.head.getInt(2)
@@ -1378,18 +1274,37 @@ object Similarity {
     (k1, k2, coarse, fine)
   }
 
-  /** Corpus-scaled layout WITH the durable artifact — the
-   *  stream-maintainable sibling of [[ivfWriteScaled]]. Returns the
-   *  realized cell count k1·k2 (≥ [[scaledCellCount]]). */
-  def ivfWriteScaledArtifact(s: SparkSession, d: String, out: String): Int = {
+  /** The scaled IVF index ([[DurableIndex]]) under the frozen
+   *  artifact `art`: cells from [[assignWithArtifact]] — appends are
+   *  O(batch), no corpus pass, no refit. */
+  private def scaledIndex(s: SparkSession, art: Artifact): DurableIndex = {
+    val (k1, k2, coarse, fine) = art
+    DurableIndex.cells(b => assignWithArtifact(s, vectors(b), k1, k2, coarse, fine))
+  }
+
+  /** Fit corpus `d`'s frozen artifact at the corpus-scaled cell count
+   *  ([[scaledCellCount]]: a block-local quadratic consumer such as
+   *  SemDeDup does per-cell work bounded by [[ScaledCellPop]]² and
+   *  TOTAL work linear in the corpus), persist it beside `layout` and
+   *  register that sibling as scratch (it is not tmpPath-tracked).
+   *  Returns the index the artifact defines and the requested k. */
+  private[ops] def fitScaledIndex(s: SparkSession, d: String,
+      layout: String): (DurableIndex, Int) = {
     graft.functions.GraftFunctions.register(s)
-    val e = embeddings(s, d).select(col("vec_id"), col("embedding").as("v"))
+    val e = vectors(embeddings(s, d))
     val k = scaledCellCount(e.count())
-    val (k1, k2, coarse, fine) = twoLevelCodebooks(s, e, k)
-    assignWithArtifact(s, e, k1, k2, coarse, fine)
-      .write.mode("overwrite").partitionBy("cell").parquet(out)
-    writeArtifact(s, out, k1, k2, coarse, fine)
-    k1 * k2
+    val art @ (k1, k2, coarse, fine) = twoLevelCodebooks(s, e, k)
+    writeArtifact(s, layout, k1, k2, coarse, fine)
+    InferOps.registerScratch(s"${layout}_codebook")
+    (scaledIndex(s, art), k)
+  }
+
+  /** The scaled IVF index whose frozen artifact sits beside `layout`
+   *  (read back, ~2 MB) — what a cell assignment under the persisted
+   *  artifact means today, and the index appends go through. */
+  private[ops] def scaledIndexAt(s: SparkSession, layout: String): DurableIndex = {
+    graft.functions.GraftFunctions.register(s)
+    scaledIndex(s, readArtifact(s, layout))
   }
 
   /** The durable SCALED (two-level artifact) layout for corpus `d`,
@@ -1399,38 +1314,11 @@ object Similarity {
    *  blocking levels persisted as the frozen sibling artifact, flat-
    *  degenerate below the [[KMeansSample]] ceiling so one code shape
    *  serves every octave and the two-level tier engages naturally at
-   *  the 1000× dir's 2 M vectors. `_SUCCESS`-gated like the flat
-   *  layout: a partial write is rewritten, never trusted. */
-  def scaledLayoutDir(s: SparkSession, d: String): String = {
-    val dir = InferOps.tmpPath("ivf_scaled_layout", d)
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS"))) {
-      ivfWriteScaledArtifact(s, d, dir)
-      InferOps.registerScratch(s"${dir}_codebook") // sibling: not tmpPath-tracked
+   *  the 1000× dir's 2 M vectors. */
+  def scaledLayoutDir(s: SparkSession, d: String): String =
+    DurableIndex.durableDir("ivf_scaled_layout", d) { dir =>
+      fitScaledIndex(s, d, dir)._1.write(embeddings(s, d), dir)
     }
-    dir
-  }
-
-  /** Today's assignment of `frame` (vec_id, v) under a layout's FROZEN
-   *  artifact — the q190 parity probe: what cell would the persisted
-   *  artifact put each vector in right now. */
-  private[ops] def assignUnderArtifact(s: SparkSession, layout: String,
-      frame: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    val (k1, k2, coarse, fine) = readArtifact(s, layout)
-    assignWithArtifact(s, frame, k1, k2, coarse, fine)
-      .select(col("vec_id"), col("cell"))
-  }
-
-  /** O(batch) append under the FROZEN artifact (see the contract on
-   *  [[twoLevelCodebooks]]): read the ~2 MB artifact, assign, append
-   *  into the partition dirs — no corpus pass, no refit. */
-  def ivfAppendScaled(s: SparkSession, layout: String, batch: DataFrame): Unit = {
-    graft.functions.GraftFunctions.register(s)
-    val (k1, k2, coarse, fine) = readArtifact(s, layout)
-    assignWithArtifact(s,
-        batch.select(col("vec_id"), col("embedding").as("v")), k1, k2, coarse, fine)
-      .write.mode("append").partitionBy("cell").parquet(layout)
-  }
 
   /** q189: the SCALED IVF layout maintained from a live stream — the
    *  q186 lifecycle at the tier q186 stops short of. Stage the corpus
@@ -1453,77 +1341,43 @@ object Similarity {
    *  the two-level tier engages NATURALLY — the same query is the
    *  scale gate there. */
   def q189StreamScaledIvf(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    graft.functions.GraftFunctions.register(s)
     val e = embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val fpRow = e.agg(bit_xor(xxhash64(col("vec_id"), col("embedding")))).head()
-    val fp = java.lang.Long.toHexString(
-      if (fpRow.isNullAt(0)) 0L else fpRow.getLong(0))
-    val stage = InferOps.tmpPath("ssivf_src", d, suffix = s"_$fp")
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(stage, "_SUCCESS")))
-      e.repartition(3).write.mode("overwrite").parquet(stage)
+    val stage = DurableIndex.stage(s, "ssivf_src", d, e)
     val layout = InferOps.tmpPath("ssivf_layout", d)
     val gen2 = InferOps.tmpPath("ssivf_gen2", d)
-    deleteDir(layout)
-    val ev = e.select(col("vec_id"), col("embedding").as("v"))
-    val k = scaledCellCount(ev.count())
-    val (k1, k2, coarse, fine) = twoLevelCodebooks(s, ev, k)
-    // empty layout carrying only the artifact: the stream builds the data
-    writeArtifact(s, layout, k1, k2, coarse, fine)
-    InferOps.registerScratch(s"${layout}_codebook") // sibling: not tmpPath-tracked
-    val nBatches = new java.util.concurrent.atomic.AtomicInteger(0)
-    val stream = s.readStream.schema(e.schema)
-      .option("maxFilesPerTrigger", 1).parquet(stage)
-    val q = stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      nBatches.incrementAndGet()
-      ivfAppendScaled(s, layout, batch)
-      ()
-    }.trigger(Trigger.AvailableNow()).start()
-    try q.awaitTermination() finally q.stop()
+    // the layout starts empty, carrying only the artifact: the stream
+    // builds the data, each batch under the artifact read back
+    val (frozenIndex, k) = fitScaledIndex(s, d, layout)
+    frozenIndex.drop(s, layout)
+    val nBatches = DurableIndex.streamFiles(s, stage, e.schema)(
+      scaledIndexAt(s, layout).write(_, layout, append = true))
     val tomb = e.filter(col("vec_id") % 10 === 7).select(col("vec_id"))
     // frozen-artifact assignment feeds TWO audit legs (parity + the
     // completeness/equivalence aggregate) — persist so the n·(k1+k2)
     // projection runs once instead of once per leg
-    val frozen = assignWithArtifact(s, ev, k1, k2, coarse, fine)
-      .select(col("vec_id"), col("cell").as("cell_frozen"))
+    val frozen = frozenIndex.build(e).select(col("vec_id"), col("cell"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val (tombLeft, audit, parityMism, nSurv) = try {
+    val (legs, nSurv) = try {
       // generation rewrite ∥ survivor count (guide §2.6)
-      val nSurv0 = Par.run(Seq[() => Any](
-        () => compactIvfLayout(s, layout, gen2, tomb),
-        () => e.join(broadcast(tomb), Seq("vec_id"), "left_anti").count()))(1)
-        .asInstanceOf[Long]
-      val fused = withCell(s, d, k)
-        .select(col("vec_id"), col("cell").as("cell_fused"))
-      val stored = s.read.parquet(gen2)
-        .select(col("vec_id"), col("cell").cast("int").as("cell"))
+      val nSurv0 = Par.run2(
+        () => frozenIndex.compact(s, layout, gen2, tomb),
+        () => e.join(broadcast(tomb), Seq("vec_id"), "left_anti").count())._2
+      val fused = withCell(s, d, k).select(col("vec_id"), col("cell"))
       // the three audit legs are independent — overlap them
-      val legs = Par.run(Seq[() => Any](
-        () => stored.join(broadcast(tomb), Seq("vec_id"), "left_semi").count(),
-        () => stored
-          .join(frozen.join(broadcast(tomb), Seq("vec_id"), "left_anti"),
-            Seq("vec_id"), "full")
-          .agg(count(lit(1)).as("n_rows"),
-            countDistinct(col("vec_id")).as("n_ids"),
-            count(when(col("cell").isNull || col("cell_frozen").isNull ||
-              col("cell") =!= col("cell_frozen"), 1)).as("mismatches"))
-          .head(),
-        () => frozen.join(fused, Seq("vec_id"), "full")
-          .filter(col("cell_frozen").isNull || col("cell_fused").isNull ||
-            col("cell_frozen") =!= col("cell_fused")).count()))
-      (legs(0).asInstanceOf[Long],
-        legs(1).asInstanceOf[org.apache.spark.sql.Row],
-        legs(2).asInstanceOf[Long], nSurv0)
+      (Par.run(Seq[() => Any](
+        () => frozenIndex.tombstonesLeft(s, gen2, tomb),
+        () => DurableIndex.coverage(storedCells(s, gen2),
+          frozen.join(broadcast(tomb), Seq("vec_id"), "left_anti"), "vec_id"),
+        () => DurableIndex.mismatches(frozen, fused, Seq("vec_id")))), nSurv0)
     } finally { frozen.unpersist(); () }
-    import s.implicits._
-    Seq(
-      ("artifact_parity", parityMism == 0L),
+    val audit = legs(1).asInstanceOf[org.apache.spark.sql.Row]
+    DurableIndex.gate(s, Seq(
+      ("artifact_parity", legs(2) == 0L),
       ("stream_complete",
         audit.getLong(0) == nSurv && audit.getLong(1) == nSurv),
       ("stream_equiv_frozen", audit.getLong(2) == 0L),
-      ("stream_saw_batches", nBatches.get() == 3),
-      ("stream_tombstones_gone", tombLeft == 0L))
-      .toDF("component", "ok").orderBy(col("component"))
+      ("stream_saw_batches", nBatches == 3),
+      ("stream_tombstones_gone", legs(0) == 0L)))
   }
 
   val q189Sql: String =

@@ -100,6 +100,24 @@ class CsvIOSpec extends AnyFunSuite with SparkSuite {
       Seq("t", "2000-08-27T00:00:00", "2000-08-27T12:34:56.123456"))
   }
 
+  test("export keeps every row of a one-column frame: NULL and empty cells write \"\"") {
+    import spark.implicits._
+    val df = Seq(Some("a"), None, Some(""), Some("b")).toDF("x")
+    val out = Files.createTempDirectory("graftcsv").toString + "/lone.csv"
+    CsvIO.exportCsv(df, out, unixLineSep = true)
+    import scala.jdk.CollectionConverters._
+    val lines = Files.readAllLines(Paths.get(out)).asScala.toSeq
+    // csv.writer's output for the same rows
+    assert(lines == Seq("x", "a", "\"\"", "\"\"", "b"))
+    assert(lines.length == 1 + 4)
+    // two columns keep the unquoted empty field
+    val two = Seq((Some("a"), 1), (None, 2), (Some(""), 3)).toDF("x", "n")
+    val out2 = Files.createTempDirectory("graftcsv").toString + "/two.csv"
+    CsvIO.exportCsv(two, out2, unixLineSep = true)
+    assert(Files.readAllLines(Paths.get(out2)).asScala.toSeq ==
+      Seq("x,n", "a,1", ",2", ",3"))
+  }
+
   test("gzip export round-trips through compressed import (fixes reference S3 bug)") {
     val (typed, _) = CsvIO.importCsv(spark, fixture)
     val dir = Files.createTempDirectory("graftgz").toString

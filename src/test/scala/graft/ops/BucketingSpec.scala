@@ -64,7 +64,7 @@ class BucketingSpec extends AnyFunSuite with SparkSuite {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_lsh LOCATION '$loc'")
     try {
       val docs = spark.read.parquet(s"$d/documents.parquet")
-      Dedup.writeLshIndex(docs.filter(col("doc_id") < 400), "graft_lsh.lsh_index")
+      Dedup.LshIndex.write(docs.filter(col("doc_id") < 400), "graft_lsh.lsh_index")
       val batch = docs.filter(col("doc_id") >= 400)
 
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -104,13 +104,13 @@ class BucketingSpec extends AnyFunSuite with SparkSuite {
     try {
       val docs = spark.read.parquet(s"$d/documents.parquet")
         .select(col("doc_id"), col("lang"), col("text"))
-      Dedup.writeLshIndex(docs, "graft_app.ref")
+      Dedup.LshIndex.write(docs, "graft_app.ref")
       // three disjoint batches in arbitrary arrival order — band keys
       // and signatures are per-document, so the union must be
       // row-identical to the single build (the q179 invariant)
-      Dedup.appendLshIndex(docs.filter(col("doc_id") % 3 === 1), "graft_app.inc")
-      Dedup.appendLshIndex(docs.filter(col("doc_id") % 3 === 2), "graft_app.inc")
-      Dedup.appendLshIndex(docs.filter(col("doc_id") % 3 === 0), "graft_app.inc")
+      Dedup.LshIndex.write(docs.filter(col("doc_id") % 3 === 1), "graft_app.inc", append = true)
+      Dedup.LshIndex.write(docs.filter(col("doc_id") % 3 === 2), "graft_app.inc", append = true)
+      Dedup.LshIndex.write(docs.filter(col("doc_id") % 3 === 0), "graft_app.inc", append = true)
       def bands(t: String) = spark.table(s"${t}_bands")
         .groupBy(col("doc_id"), col("bkey")).count()
         .orderBy(col("doc_id"), col("bkey")).collect().toSeq
@@ -138,9 +138,9 @@ class BucketingSpec extends AnyFunSuite with SparkSuite {
     try {
       val docs = spark.read.parquet(s"$d/documents.parquet")
       val corpus = docs.filter(col("doc_id") < 400)
-      Dedup.writeLshIndex(corpus, "graft_lc.idx")
+      Dedup.LshIndex.write(corpus, "graft_lc.idx")
       val tomb = corpus.filter(col("doc_id") % 10 === 3).select(col("doc_id"))
-      Dedup.compactLshIndex(spark, "graft_lc.idx", "graft_lc.idx2", tomb)
+      Dedup.LshIndex.compact(spark, "graft_lc.idx", "graft_lc.idx2", tomb)
       val batch = docs.filter(col("doc_id") >= 400)
 
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -106,7 +106,7 @@ class CurationPolicySpec extends AnyFunSuite with SparkSuite {
   test("semDedupByCell runs the identical policy over the durable IVF cell layout") {
     val small = "/root/testdata/sf0.001"
     val layout = java.nio.file.Files.createTempDirectory("ivf_semdedup").toString
-    Similarity.ivfWritePartitioned(spark, small, layout)
+    Similarity.ivfIndex(spark, small).write(Tables.embeddings(spark, small), layout)
     val out = Dedup.semDedupByCell(spark, layout, 0.45).collect()
     // independent in-memory replay of the policy within each persisted
     // cell: drop iff an earlier same-cell vector has round(cos, 6) ≥ τ

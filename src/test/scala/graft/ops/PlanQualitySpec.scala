@@ -66,7 +66,7 @@ class PlanQualitySpec extends AnyFunSuite with SparkSuite {
     import org.apache.spark.sql.functions.col
     val work = java.nio.file.Files.createTempDirectory("graftivflayout").toString
     val layout = s"$work/embeddings_by_cell"
-    Similarity.ivfWritePartitioned(spark, d, layout)
+    Similarity.ivfIndex(spark, d).write(Tables.embeddings(spark, d), layout)
     // a 2-query probe touches a strict SUBSET of the 16 cells: the
     // probe predicate must reach the scan as a PARTITION filter
     // (IN/INSET over cell) — directory-level pruning, the 100 TB
