@@ -54,7 +54,8 @@ object Verify {
       // runs (Bench's min-of-N); Verify evaluates each query once, so
       // holding those pinned blocks for the rest of the suite is pure
       // heap pressure at the large derived octaves — release them
-      if (name.startsWith("q61")) graft.ops.RecallGates.invalidateBaseline(sfDir)
+      if (name.startsWith("q61"))
+        graft.ops.CorpusArtifacts.release(sfDir, graft.ops.RecallGates.Artifacts: _*)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -117,10 +117,13 @@ final case class ColumnDef(
 
   /** JDBC `createTableColumnTypes` fragment type: like `ddlType` but
    *  restricted to DDL Spark's parser accepts and the JDBC writer can
-   *  map. `time` travels as VARCHAR (the DataFrame column is a
-   *  string); None for the CLOB tier → let the dialect's default
-   *  StringType mapping apply (Derby: CLOB). */
+   *  map. `float` is DOUBLE: Spark reads `FLOAT` as a 4-byte float, so
+   *  the column would be REAL and 75462.67 would come back 75462.671875.
+   *  `time` travels as VARCHAR (the DataFrame column is a string); None
+   *  for the CLOB tier → let the dialect's default StringType mapping
+   *  apply (Derby: CLOB). */
   def jdbcDdlType: Option[String] = settledType match {
+    case "float"                  => Some("DOUBLE")
     case "time"                   => Some("VARCHAR(15)")
     case "datetime"               => Some("TIMESTAMP")
     case "text" if length >= 4000 => None

@@ -55,9 +55,6 @@ object SchemaInfer {
   private def stripBom(s: String): String =
     if (s != null && s.nonEmpty && s.charAt(0) == '﻿') s.substring(1) else s
 
-  def toStructType(cols: Seq[ColumnDef]): StructType =
-    StructType(cols.map(_.toStructField))
-
   /** All-string schema used for the raw first pass. */
   def rawSchema(cols: Seq[String]): StructType =
     StructType(ColumnDef.sanitizeHeaders(cols).map(StructField(_, StringType, nullable = true)))

@@ -1,0 +1,98 @@
+package graft.ops
+
+import java.nio.file.{Files, Paths}
+
+import scala.collection.concurrent.TrieMap
+import scala.util.hashing.MurmurHash3
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
+
+/** The one registry of per-corpus artifacts: memoized values (codebooks,
+  * exact baselines, row counts, checkpointed frames) and derived dirs
+  * (partitioned and z-ordered copies, index layouts, stream stages,
+  * chunk-built edges), each derived from ONE provisioned table.
+  *
+  * Validity rule: an artifact is valid exactly while the table it was
+  * derived from has the same content key. The key of table `t` in
+  * corpus dir `d` fingerprints the file listing of `d/t.parquet` —
+  * path, length and modification time of every leaf file — read
+  * through the Hadoop FileSystem (not Spark's listing cache), so it
+  * costs metadata calls and no Spark job. [[Tables]] observes the key on
+  * every read; when it differs from the last key seen for that table,
+  * the registry, once, drops the table's memo entries, deletes its
+  * derived dirs and calls `refreshByPath` on the table, so cached
+  * frames that plan-match a scan of it rebuild from the new files.
+  * Within one key every memo and derived dir is reused.
+  *
+  * Limit: a rewrite that keeps every file's name, length and
+  * modification time goes undetected.
+  */
+object CorpusArtifacts {
+  /** A derived dir: dropping its entry deletes it. */
+  private final case class Derived(dir: String)
+
+  /** Last key seen per (dir, table); guarded by `this`. */
+  private val seen = scala.collection.mutable.HashMap.empty[(String, String), String]
+  /** Memo values and [[Derived]] dirs by (tag, dir, table, key). */
+  private val entries = TrieMap.empty[(String, String, String, String), Any]
+
+  private def path(d: String, table: String): String = s"$d/$table.parquet"
+
+  /** Content key of table `table` in corpus dir `d`; an absent table
+    * has the key of an empty listing (the read itself then fails). */
+  def key(s: SparkSession, d: String, table: String): String = {
+    val root = new Path(path(d, table))
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    // listStatus, not listFiles: a located status reads the local file's
+    // owner and permissions through a forked shell (~5 ms a call)
+    def leaves(p: Path): Seq[String] = fs.listStatus(p).toSeq.flatMap { f =>
+      if (f.isDirectory) leaves(f.getPath)
+      else Seq(s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}")
+    }
+    val listing = (if (fs.exists(root)) leaves(root) else Nil).sorted.mkString("\n")
+    f"${MurmurHash3.stringHash(listing, 1)}%08x${MurmurHash3.stringHash(listing, 2)}%08x"
+  }
+
+  /** Record the current key of `table` in `d`, retiring what the
+    * previous key derived if it changed; returns the key. */
+  def observe(s: SparkSession, d: String, table: String): String = synchronized {
+    val k = key(s, d, table)
+    if (seen.put((d, table), k).exists(_ != k)) {
+      drop { case (_, dd, t, _) => dd == d && t == table }
+      s.catalog.refreshByPath(path(d, table))
+    }
+    k
+  }
+
+  /** Drop the entries matching `p`; returns the derived dirs deleted. */
+  private def drop(p: ((String, String, String, String)) => Boolean): Seq[String] =
+    entries.keys.filter(p).toSeq.flatMap(entries.remove).collect {
+      case Derived(dir) => InferOps.deleteDir(dir); dir
+    }
+
+  /** `build`, computed once per content key of `table` in `d`. */
+  def memo[T](s: SparkSession, tag: String, d: String, table: String)(build: => T): T =
+    entries.getOrElseUpdate((tag, d, table, observe(s, d, table)), build).asInstanceOf[T]
+
+  /** The scratch dir `tag` derived from `table` in `d`: a path suffixed
+    * by the table's key, written by `write` while its `_SUCCESS` marker
+    * is absent (a partial write is rewritten, never read). */
+  def dir(s: SparkSession, tag: String, d: String, table: String)
+      (write: String => Unit): String = {
+    val k = observe(s, d, table)
+    val p = InferOps.tmpPath(tag, d, suffix = s"_$k")
+    val marker = Paths.get(p, "_SUCCESS")
+    if (!Files.exists(marker)) {
+      write(p)
+      if (!Files.exists(marker)) Files.createFile(marker)
+    }
+    entries.put((tag, d, table, k), Derived(p))
+    p
+  }
+
+  /** Forget `d`'s artifacts tagged `tags` now: memo entries dropped,
+    * derived dirs deleted (returned). */
+  def release(d: String, tags: String*): Seq[String] =
+    drop { case (t, dd, _, _) => dd == d && tags.contains(t) }
+}

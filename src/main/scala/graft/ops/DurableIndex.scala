@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -41,9 +39,7 @@ import org.apache.spark.storage.StorageLevel
  *    tombstoned keys through a broadcast left-anti join per part — the
  *    deletion-sized side broadcasts, the index streams through a
  *    map-side filter — and lands in the same layout, so probes keep
- *    their pruned / zero-exchange plans;
- *  - a layout dir is trusted only with its root `_SUCCESS` marker: a
- *    partial write is rewritten, never read.
+ *    their pruned / zero-exchange plans.
  */
 final case class DurableIndex(key: String, parts: Seq[DurableIndex.Part],
     build: DataFrame => DataFrame) {
@@ -116,28 +112,14 @@ object DurableIndex {
   def cells(build: DataFrame => DataFrame): DurableIndex =
     DurableIndex("vec_id", Seq(Part("", CellDirs)), build)
 
-  private def complete(dir: String): Boolean = Files.exists(Paths.get(dir, "_SUCCESS"))
-
-  /** The scratch dir `tag` for corpus `d`, written by `write` once per
-    * JVM: only a dir holding its `_SUCCESS` marker is reused. */
-  def durableDir(tag: String, d: String)(write: String => Unit): String = {
-    val dir = InferOps.tmpPath(tag, d)
-    if (!complete(dir)) write(dir)
-    dir
-  }
-
-  /** Stage `corpus` as 3 parquet files for [[streamFiles]], keyed by a
-    * CONTENT fingerprint (order-free XOR of per-row hashes, folded on
-    * the driver: one scan, no shuffle) rather than by dir existence: a
-    * corpus rewritten in place lands a NEW stage instead of streaming
-    * the stale one. Old stages are exit-time scratch like every tmpPath. */
-  def stage(s: SparkSession, tag: String, d: String, corpus: DataFrame): String = {
-    val fp = corpus.select(xxhash64(corpus.columns.toIndexedSeq.map(col): _*))
-      .rdd.map(_.getLong(0)).fold(0L)(_ ^ _)
-    val dir = InferOps.tmpPath(tag, d, suffix = s"_${java.lang.Long.toHexString(fp)}")
-    if (!complete(dir)) corpus.repartition(3).write.mode("overwrite").parquet(dir)
-    dir
-  }
+  /** Stage `corpus`, a projection of `table` in `d`, as 3 parquet files
+    * for [[streamFiles]]: a derived dir of the table's content key
+    * ([[CorpusArtifacts]]), so a corpus rewritten in place lands a NEW
+    * stage instead of streaming the stale one. */
+  def stage(s: SparkSession, tag: String, d: String, table: String,
+      corpus: DataFrame): String =
+    CorpusArtifacts.dir(s, tag, d, table)(
+      corpus.repartition(3).write.mode("overwrite").parquet(_))
 
   /** Stream the files under `dir` one per micro-batch (AvailableNow,
     * maxFilesPerTrigger=1 — a genuine multi-batch foreachBatch chain)

@@ -74,17 +74,11 @@ object Graph {
     sys.env.get("SPARK_GRAFT_EDGEBUILD_MAX_ROWS").map(_.toLong)
       .getOrElse(100000000L)
 
-  /** Per-dir lineitem row-count memo for the chunk decision —
-   *  parquet-metadata-cheap but still one job, and a dozen graph
-   *  queries × Bench's min-of-N all route through here. */
-  private val liCountCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
-  /** Chunk-built edge parquet dirs by corpus dir — consulted by
-   *  [[evictEdgeChunks]] so the PageRank/BFS family can reclaim the
-   *  duplicate bytes once its own persisted edge frame is built. */
-  private val chunkDirOf =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  /** Lineitem row count of corpus `d`, memoized: parquet-metadata-
+   *  cheap but still one job, and a dozen graph queries × Bench's
+   *  min-of-N all route through here. */
+  private def liCount(s: SparkSession, d: String): Long =
+    CorpusArtifacts.memo(s, "li_count", d, "lineitem")(Tables.lineitem(s, d).count())
 
   /** Storage tier for a corpus dir's persisted/checkpointed edge
    *  frames — the q114/q135 parked-frame rule (round 15) applied to
@@ -98,14 +92,13 @@ object Graph {
    *  DISK_ONLY exactly as before. Same plan, same partitioning, same
    *  results either tier. */
   private def edgeLevel(s: SparkSession, d: String): StorageLevel =
-    if (liCountCache.getOrElseUpdate(d, Tables.lineitem(s, d).count())
-        <= 10000000L) StorageLevel.MEMORY_AND_DISK
+    if (liCount(s, d) <= 10000000L) StorageLevel.MEMORY_AND_DISK
     else StorageLevel.DISK_ONLY
 
-  /** Delete corpus `d`'s chunk-built edge parquet (and its `.done`
-   *  marker) NOW. A loop that holds its own materialized copy of the
-   *  edges (the persisted PageRank frame, BFS's checkpoint) duplicates
-   *  the chunk parquet byte-for-byte in information content; at 1000×
+  /** Delete corpus `d`'s chunk-built edge parquet NOW. A loop that
+   *  holds its own materialized copy of the edges (the persisted
+   *  PageRank frame, BFS's checkpoint) duplicates the chunk parquet
+   *  byte-for-byte in information content; at 1000×
    *  holding both filled a ~60 GiB single-host scratch volume to 97%
    *  and killed the q148 probe (the round-13 disclosed boundary).
    *  Fired through [[EdgeTier.evict]] exactly once that copy is
@@ -114,11 +107,9 @@ object Graph {
    *  That is safe in local mode (blocks live in the one surviving JVM)
    *  and moot on a real cluster (per-executor scratch is ~1000× a
    *  single host's, so the chunk path itself never engages). A later
-   *  coPurchaseStrength call finds no marker and rebuilds. */
+   *  coPurchaseStrength call rebuilds. */
   private def evictEdgeChunks(d: String): Unit =
-    chunkDirOf.remove(d).foreach { dir =>
-      InferOps.deleteDir(s"$dir.done")
-      InferOps.deleteDir(dir)
+    CorpusArtifacts.release(d, "copurch").foreach { dir =>
       // make the reclaim visible in probe logs, and nudge the
       // ContextCleaner for the build join's now-dead shuffle files —
       // at 1000× the next allocation is iteration-1's shuffle and the
@@ -172,10 +163,9 @@ object Graph {
       }
   }
 
-  /** Corpus `d`'s [[EdgeTier]]. Call it AFTER [[coPurchaseStrength]]:
-   *  the build is what records whether the corpus was chunked. */
+  /** Corpus `d`'s [[EdgeTier]]. */
   def edgeTier(s: SparkSession, d: String): EdgeTier =
-    EdgeTier(edgeLevel(s, d), chunkDirOf.contains(d), () => evictEdgeChunks(d))
+    EdgeTier(edgeLevel(s, d), liCount(s, d) > EdgeBuildMaxRows, () => evictEdgeChunks(d))
 
   /** The edge frame a round loop joins against: the persisted BARE
    *  frame while the loop's vertex side broadcasts, else a copy
@@ -220,13 +210,12 @@ object Graph {
    *  the c≥2 strength graph) and q159 (triangles).
    *
    *  Past [[EdgeBuildMaxRows]] the build runs as C sequential
-   *  pmod(src, C) chunks parked in parquet (live scratch ~1/C), built
-   *  ONCE per corpus dir and reused by every graph query in the JVM
-   *  (the `.done` marker — a crashed build leaves no marker and is
-   *  rebuilt from chunk 0's overwrite). */
+   *  pmod(src, C) chunks parked in parquet (live scratch ~1/C), one
+   *  sub-dir per chunk, under a derived dir of lineitem's content key
+   *  ([[CorpusArtifacts]]) reused by every graph query in the JVM. */
   private[ops] def coPurchaseStrength(s: SparkSession, d: String,
       maxRows: Long = EdgeBuildMaxRows): DataFrame = {
-    val rows = liCountCache.getOrElseUpdate(d, lineitem(s, d).count())
+    val rows = liCount(s, d)
     if (rows <= maxRows) {
       val li = lineitem(s, d).select(col("l_orderkey").as("ok"),
         col("l_partkey").as("pk")).distinct()
@@ -237,9 +226,9 @@ object Graph {
     } else {
       val chunks = math.max(2L, math.min(16L,
         math.ceil(rows.toDouble / maxRows).toLong)).toInt
-      val dir = InferOps.tmpPath("copurch", d, suffix = s"_x$chunks")
-      val doneMarker = java.nio.file.Paths.get(s"$dir.done")
-      if (!java.nio.file.Files.exists(doneMarker)) {
+      val dir = CorpusArtifacts.dir(s, "copurch", d, "lineitem") { dir =>
+        // a crashed build may have left chunk dirs of another count
+        InferOps.deleteDir(dir)
         // ONE distinct pass, then park the (ok, pk) frame partitioned
         // AND sorted by the join key: every chunk's self-join reads it
         // exchange-free (filter preserves partitioning/sort), so the
@@ -263,7 +252,7 @@ object Graph {
               // is the durable scratch floor the whole build sits on
               // (~22 GiB snappy at 1000×; zstd cuts ~a third of it)
               .write.option("compression", "zstd")
-              .mode(if (c == 0) "overwrite" else "append").parquet(dir)
+              .mode("overwrite").parquet(s"$dir/c$c")
             // reclaim the finished chunk's shuffle files before the next
             // pass needs the scratch — ContextCleaner is GC-driven AND
             // async: the gc queues the dead references, the pause lets
@@ -277,13 +266,11 @@ object Graph {
             System.err.println(s"[graph] edge chunk ${c + 1}/$chunks parked")
           }
         } finally li.unpersist(blocking = true)
-        java.nio.file.Files.createFile(doneMarker)
-        InferOps.registerScratch(doneMarker.toString)
       }
-      chunkDirOf.put(d, dir)
       // explicit schema: a pathological corpus could leave chunk files
       // empty and schema inference has nothing to read
-      s.read.schema("src BIGINT, dst BIGINT, c BIGINT").parquet(dir)
+      s.read.schema("src BIGINT, dst BIGINT, c BIGINT")
+        .option("recursiveFileLookup", "true").parquet(dir)
     }
   }
 
@@ -352,8 +339,10 @@ object Graph {
    *  of the call, and the only SQL it plans. It is built from the
    *  unpersisted `edges` through deterministic subplans, so it
    *  plan-matches across invocations in one JVM — min-of-N reuses it,
-   *  and q148 and q184 share it. One RDD job over its cached rows (the
-   *  prologue) collects every src's degree and the largest `c`; the
+   *  and q148 and q184 share it — until lineitem's content key changes
+   *  ([[CorpusArtifacts]] then refreshes it from the new files). One
+   *  RDD job over its cached rows (the prologue) collects every src's
+   *  degree and the largest `c`; the
    *  vertex count, the start vector, the rounds ([[driverRounds]]) and
    *  the readout are then all computed on the driver. None at the
    *  other tiers, and past the ceiling (reachable only with a forced
@@ -1383,7 +1372,8 @@ object Graph {
     // deployment would materialize once per corpus anyway.
     // RETENTION (advice round-15, documented as bench contract): the
     // entry is never unpersisted — ONE cached frame per corpus dir
-    // (plan-matched, closure-free), reclaimed at session stop. The
+    // (plan-matched, closure-free; refreshed when orders or lineitem
+    // changes content key), reclaimed at session stop. The
     // bench/verify drivers run one corpus dir per JVM; a long-lived
     // multi-corpus host should unpersist via the catalog between
     // corpora like the chunk eviction hook does for parquet.

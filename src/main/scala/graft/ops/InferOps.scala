@@ -235,15 +235,11 @@ object InferOps {
       .orderBy(col("lang"))
   }
 
-  /** Partitioned copy of documents, written once per JVM — the pid in
-    * the path prevents a concurrent process (or a stale prior run
-    * against regenerated source data) from serving its copy to us. */
-  def partitionedDocs(s: SparkSession, d: String): DataFrame = {
-    val dir = tmpPath("part_docs", d)
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS")))
-      documents(s, d).write.mode("overwrite").partitionBy("lang").parquet(dir)
-    s.read.parquet(dir)
-  }
+  /** Partitioned copy of documents, a derived dir of their content
+    * key ([[CorpusArtifacts]]). */
+  def partitionedDocs(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(CorpusArtifacts.dir(s, "part_docs", d, "documents")(
+      documents(s, d).write.mode("overwrite").partitionBy("lang").parquet(_)))
 
   val q57Sql: String =
     """SELECT lang, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS sum_chars

@@ -36,40 +36,23 @@ import org.apache.spark.sql.functions._
  */
 object RecallGates {
 
-  /** The exact ANN baseline (q26's ~50 (qid, nid) pairs) is a
-   *  deterministic artifact of the corpus, exactly like the IVF
-   *  codebook — memoized per corpus dir so the gate audits the
-   *  approximate operators against a once-materialized baseline
-   *  instead of re-running the brute-force scan it exists to make
-   *  unnecessary. Driver footprint: queries×k id pairs. Any caller
-   *  that rewrites a corpus dir in place within one JVM MUST call
-   *  [[invalidateBaseline]] before re-running the gate (mirror of
-   *  Similarity.invalidateCodebook — no current test rewrites a
-   *  q61 corpus, so nothing calls it yet). */
-  private val bruteCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Long)]]
+  /** Tags of the gate's per-corpus artifacts (Verify releases them
+   *  after the query). They are memoized ([[CorpusArtifacts]]) so the
+   *  gate audits the approximate operators against once-materialized
+   *  baselines instead of re-running the scans it exists to make
+   *  unnecessary; the sketches under audit re-run live every time.
+   *  - `brute`: the exact ANN baseline (q26's ~50 (qid, nid) pairs,
+   *    queries×k of driver footprint);
+   *  - `exact_pairs`: the exact-Jaccard pair baseline (q23's output
+   *    above the gate threshold, capped by [[capExactPairs]]);
+   *  - `shingles`: the checkpointed shingle frame, INPUT PREP shared
+   *    by every dedup leg, so a warm gate run doesn't re-materialize
+   *    millions of shingle rows it already holds. */
+  private[graft] val Artifacts = Seq("brute", "exact_pairs", "shingles")
 
-  /** Same artifact treatment for the dedup side's exact-Jaccard pair
-   *  baseline (q23's output above the gate threshold — single-digit
-   *  rows on real corpora): the approximate sketches re-run live on
-   *  every gate evaluation; the exact all-pairs baseline they must
-   *  cover does not. */
-  private val exactPairCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Long, Double)]]
-
-  /** The checkpointed shingle frame is INPUT PREP shared by every
-   *  dedup leg (the sketch operators under audit re-run live on top
-   *  of it) — memoized per corpus dir like the other deterministic
-   *  artifacts, so a warm gate run doesn't re-materialize millions of
-   *  shingle rows it already holds. */
-  private val shingleCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  private[graft] def invalidateBaseline(dir: String): Unit = {
-    bruteCache.remove(dir)
-    exactPairCache.remove(dir)
-    shingleCache.remove(dir)
-  }
+  private def shingleFrame(s: SparkSession, d: String): DataFrame =
+    CorpusArtifacts.memo(s, "shingles", d, "documents")(
+      Dedup.shingleRows(Tables.documents(s, d)).localCheckpoint(true))
 
   /** Pair budget for the exact dedup baseline's driver collect. The
    *  ANN brute baseline needs no cap — it is structurally ≤
@@ -112,17 +95,13 @@ object RecallGates {
     // changes; Bench's queries_run1 map now discloses the residual
     // cold cost per query.
     val (bruteSeq, exactSeq) = Par.run2(
-      () => bruteCache.getOrElseUpdate(d,
+      () => CorpusArtifacts.memo(s, "brute", d, "embeddings")(
         Similarity.q26KnnBrute(s, d).select(col("qid"), col("nid"))
           .as[(Long, Long)].collect().toIndexedSeq),
-      () => {
-        val sh = shingleCache.getOrElseUpdate(d,
-          Dedup.shingleRows(Tables.documents(s, d)).localCheckpoint(true))
-        exactPairCache.getOrElseUpdate(d,
-          capExactPairs(Dedup.jaccardPairsFromShingles(sh, 0.6)
-              .select(col("doc_a"), col("doc_b"), col("jaccard")))
-            .as[(Long, Long, Double)].collect().toIndexedSeq)
-      })
+      () => CorpusArtifacts.memo(s, "exact_pairs", d, "documents")(
+        capExactPairs(Dedup.jaccardPairsFromShingles(shingleFrame(s, d), 0.6)
+            .select(col("doc_a"), col("doc_b"), col("jaccard")))
+          .as[(Long, Long, Double)].collect().toIndexedSeq))
     val brute = bruteSeq.toDF("qid", "nid")
     val lsh = Similarity.q27KnnLsh(s, d)
       .select(col("qid"), col("nid"), lit(1).as("l"))
@@ -157,11 +136,11 @@ object RecallGates {
     // cache manager and the legs LAZY — the dedup and ANN stages of
     // the final union overlap inside one job instead of serializing
     // into a collect-then-evaluate sequence. The checkpointed blocks
-    // are PINNED for the corpus's lifetime by shingleCache above
-    // (released via invalidateBaseline, or when the JVM exits) —
-    // deliberate: the gate re-runs per suite, and re-materializing
-    // millions of shingle rows per run dwarfed the block footprint.
-    val shingles = shingleCache(d) // built by the overlapped leg above
+    // are PINNED while the documents keep their content key (or until
+    // Verify releases [[Artifacts]]) — deliberate: the gate re-runs
+    // per suite, and re-materializing millions of shingle rows per run
+    // dwarfed the block footprint.
+    val shingles = shingleFrame(s, d) // built by the overlapped leg above
     val exact = exactSeq.toDF("doc_a", "doc_b", "jaccard")
     val mh = Dedup.minhashEstPairs(shingles)
       .select(col("doc_a"), col("doc_b"), lit(1).as("m"))

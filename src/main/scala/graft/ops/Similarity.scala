@@ -107,24 +107,13 @@ object Similarity {
   private val KMeansIters = 12
 
   /** The fitted codebook is a MODEL ARTIFACT, not query state: for a
-   *  fixed (corpus dir, k) the seeded fit is deterministic, so it is
+   *  fixed (corpus, k) the seeded fit is deterministic, so it is
    *  memoized per corpus and reused by every probe (q37, the q61
    *  recall gate, the partitioned layout) instead of re-running the
    *  TakeOrdered+collect sample job per query. At 100 TB the same
-   *  artifact would be persisted alongside the layout. Re-fitting
-   *  after a corpus rewrite requires [[invalidateCodebook]] (tests
-   *  that overwrite a dir in place do this). */
-  private val codebookCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), Array[Array[Double]]]
-
-  private[graft] def invalidateCodebook(dir: String): Unit =
-    codebookCache.filterInPlace { case ((d, _), _) => d != dir }
-
-  private def codebook(e: DataFrame, dir: String): Array[Array[Double]] =
-    codebookCache.getOrElseUpdate((dir, IvfCells), fitCodebook(e, IvfCells))
-
-  private def codebookK(e: DataFrame, dir: String, k: Int): Array[Array[Double]] =
-    codebookCache.getOrElseUpdate((dir, k), fitCodebook(e, k))
+   *  artifact would be persisted alongside the layout. */
+  private def codebook(e: DataFrame, dir: String, k: Int = IvfCells): Array[Array[Double]] =
+    CorpusArtifacts.memo(e.sparkSession, s"codebook_$k", dir, "embeddings")(fitCodebook(e, k))
 
   /** Corpus-scaled coarse cell count for BLOCKING consumers (the q25
    *  contract: blocking-key cardinality must grow with the corpus so
@@ -226,7 +215,7 @@ object Similarity {
    *  size (the scaled blocking path). */
   private def centroids(s: SparkSession, d: String, k: Int = 0): Array[(Int, Seq[Double])] = {
     val e = vectors(embeddings(s, d))
-    val cb = if (k <= 0) codebook(e, d) else codebookK(e, d, k)
+    val cb = codebook(e, d, if (k <= 0) IvfCells else k)
     require(cb.nonEmpty, s"$d: empty corpus, nothing to lay out")
     cb.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
   }
@@ -250,11 +239,12 @@ object Similarity {
     DurableIndex.cells(b => vectors(b).withColumn("cell", cellAssign(cents)))
   }
 
-  /** The durable IVF layout for corpus `d`, written once per JVM per
-   *  source dir (the zorderedLineitem contract): q137 and any other
-   *  consumer of the cell-partitioned layout share one write. */
+  /** The durable IVF layout for corpus `d`, a derived dir of its
+   *  embeddings ([[CorpusArtifacts]]): q137 and any other consumer of
+   *  the cell-partitioned layout share one write. */
   def ivfLayoutDir(s: SparkSession, d: String): String =
-    DurableIndex.durableDir("ivf_layout", d)(ivfIndex(s, d).write(embeddings(s, d), _))
+    CorpusArtifacts.dir(s, "ivf_layout", d, "embeddings")(
+      ivfIndex(s, d).write(embeddings(s, d), _))
 
   /** The corpus with its IVF cell assignment — THE definition shared
    *  by the durable layout above and q137's layout-parity audit, so
@@ -521,7 +511,7 @@ object Similarity {
     * the query idempotent across bench repeats. */
   def q186StreamIvfIndex(s: SparkSession, d: String): DataFrame = {
     val e = embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val stage = DurableIndex.stage(s, "sivf_src", d, e)
+    val stage = DurableIndex.stage(s, "sivf_src", d, "embeddings", e)
     val layout = InferOps.tmpPath("sivf_layout", d)
     val gen2 = InferOps.tmpPath("sivf_gen2", d)
     val ref = InferOps.tmpPath("sivf_ref", d)
@@ -654,11 +644,6 @@ object Similarity {
   // documented boundedness trade, mirroring Dedup.HotBucketCap
   private val PqTieCap = 1000
 
-  private val pqCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Array[Double]]]]
-
-  private[graft] def invalidatePqCodebooks(dir: String): Unit = pqCache.remove(dir)
-
   private def l2(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0; var i = 0
     while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
@@ -706,7 +691,7 @@ object Similarity {
 
   /** Per-subspace PQ codebooks over the same bounded unit-normalized
     * sample as the IVF fit: m × k × (dim/m) doubles, corpus-size-
-    * independent driver cost, memoized per corpus dir. Unit-normalized
+    * independent driver cost, memoized per corpus. Unit-normalized
     * full vectors make squared L2 ≡ 2 − 2·cosine, so ADC distance
     * ordering matches cosine ordering. */
   private[ops] def fitPqCodebooks(e: DataFrame): Array[Array[Array[Double]]] = {
@@ -821,7 +806,7 @@ object Similarity {
     graft.functions.GraftFunctions.register(s)
     graft.functions.TopK.register(s)
     val e = embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val books = pqCache.getOrElseUpdate(d, fitPqCodebooks(e))
+    val books = CorpusArtifacts.memo(s, "pq", d, "embeddings")(fitPqCodebooks(e))
     if (books.isEmpty)
       return s.emptyDataset[(Long, Long, Long, Double)]
         .toDF("qid", "rnk", "nid", "sim")
@@ -858,7 +843,7 @@ object Similarity {
   def pqWriteCodes(s: SparkSession, d: String, out: String): Unit = {
     import s.implicits._
     val e = embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val books = pqCache.getOrElseUpdate(d, fitPqCodebooks(e))
+    val books = CorpusArtifacts.memo(s, "pq", d, "embeddings")(fitPqCodebooks(e))
     require(books.nonEmpty, s"$d: corpus not PQ-encodable (empty or dim % $PqM != 0)")
     val sub = books(0)(0).length
     val bBooks = s.sparkContext.broadcast(books)
@@ -881,7 +866,7 @@ object Similarity {
     graft.functions.GraftFunctions.register(s)
     graft.functions.TopK.register(s)
     val e = embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val books = pqCache.getOrElseUpdate(d, fitPqCodebooks(e))
+    val books = CorpusArtifacts.memo(s, "pq", d, "embeddings")(fitPqCodebooks(e))
     require(books.nonEmpty, s"$d: corpus not PQ-encodable")
     val luts = pqQueryLuts(e, books)
     val bLuts = s.sparkContext.broadcast(luts)
@@ -1308,7 +1293,7 @@ object Similarity {
   }
 
   /** The durable SCALED (two-level artifact) layout for corpus `d`,
-   *  written once per JVM per source dir — the scaled twin of
+   *  a derived dir of its embeddings — the scaled twin of
    *  [[ivfLayoutDir]], added for q190 (SemDeDup candidate generation
    *  over two-level cells, round-15): corpus-scaled cell count, both
    *  blocking levels persisted as the frozen sibling artifact, flat-
@@ -1316,7 +1301,7 @@ object Similarity {
    *  serves every octave and the two-level tier engages naturally at
    *  the 1000× dir's 2 M vectors. */
   def scaledLayoutDir(s: SparkSession, d: String): String =
-    DurableIndex.durableDir("ivf_scaled_layout", d) { dir =>
+    CorpusArtifacts.dir(s, "ivf_scaled_layout", d, "embeddings") { dir =>
       fitScaledIndex(s, d, dir)._1.write(embeddings(s, d), dir)
     }
 
@@ -1342,7 +1327,7 @@ object Similarity {
    *  scale gate there. */
   def q189StreamScaledIvf(s: SparkSession, d: String): DataFrame = {
     val e = embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val stage = DurableIndex.stage(s, "ssivf_src", d, e)
+    val stage = DurableIndex.stage(s, "ssivf_src", d, "embeddings", e)
     val layout = InferOps.tmpPath("ssivf_layout", d)
     val gen2 = InferOps.tmpPath("ssivf_gen2", d)
     // the layout starts empty, carrying only the artifact: the stream

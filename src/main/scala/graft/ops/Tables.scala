@@ -4,11 +4,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
-/** Loaders for the driver-provisioned parquet tables (TESTDATA.md). */
+/** Loaders for the driver-provisioned parquet tables (TESTDATA.md) —
+  * the only readers of them, so every read observes the table's
+  * content key ([[CorpusArtifacts]]). */
 object Tables {
 
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    CorpusArtifacts.observe(spark, dir, name)
     spark.read.parquet(s"$dir/$name.parquet")
+  }
 
   def lineitem(s: SparkSession, d: String): DataFrame = t(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame   = t(s, d, "orders")
@@ -44,11 +48,10 @@ object Tables {
     * (`spark.sql.legacy.parquet.nanosAsLong`, SPARK-34377) and
     * normalize via [[normalizeTs]]. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/events.parquet"
     // set preemptively: only affects TIMESTAMP(NANOS) parquet columns,
     // and avoids a noisy failed-job fallback cycle
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(spark.read.parquet(path))
+    normalizeTs(t(spark, dir, "events"))
   }
 
   /** Streaming twin of [[events]]: same nanos normalization over a
@@ -57,14 +60,14 @@ object Tables {
     * would silently pull in stray siblings like events.parquet.bak). */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = t(spark, dir, "events")
     normalizeTs(spark.readStream.schema(raw.schema).parquet(s"$dir/{events.parquet}"))
   }
 
   /** Streaming twin of [[documents]] — file source over the exact
     * parquet file (same glob trick as eventsStream). */
   def documentsStream(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/documents.parquet")
+    val raw = t(spark, dir, "documents")
     spark.readStream.schema(raw.schema).parquet(s"$dir/{documents.parquet}")
   }
 

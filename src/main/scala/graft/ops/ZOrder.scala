@@ -88,16 +88,13 @@ object ZOrder {
     filesForBytes(bytes)
   }
 
-  /** Z-ordered copy of lineitem by (l_partkey, l_suppkey), one per
-    * JVM per source dir (same contract as InferOps.partitionedDocs). */
-  def zorderedLineitem(s: SparkSession, d: String): DataFrame = {
-    val dir = InferOps.tmpPath("zorder_li", d)
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS"))) {
+  /** Z-ordered copy of lineitem by (l_partkey, l_suppkey), a derived
+    * dir of its content key ([[CorpusArtifacts]]). */
+  def zorderedLineitem(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(CorpusArtifacts.dir(s, "zorder_li", d, "lineitem") { dir =>
       val src = Tables.lineitem(s, d)
       writeZOrdered(src, "l_partkey", "l_suppkey", dir, autoNumFiles(src))
-    }
-    s.read.parquet(dir)
-  }
+    })
 
   /** q82: a 2-D box query answered FROM the z-ordered layout; the
     * oracle runs the identical predicate on the source table, so the

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.ops.{InferOps, Tables}
+import graft.ops.{DurableIndex, InferOps, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -563,13 +563,11 @@ object StreamingOps {
    *  + maxFilesPerTrigger=1 force a genuine multi-batch merge chain.
    *  Oracle: argmax per user over the batch table. */
   def q87StreamingUpsert(s: SparkSession, d: String): DataFrame = {
-    val stage = InferOps.tmpPath("upsert_src", d)
     val snapBase = InferOps.tmpPath("upsert_snap", d)
     val ev = Tables.events(s, d).select(col("user_id"),
       unix_micros(col("ts")).as("last_micros"),
       col("event_id").as("last_event_id"), col("event_type").as("last_type"))
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(stage, "_SUCCESS")))
-      ev.repartition(3).write.mode("overwrite").parquet(stage)
+    val stage = DurableIndex.stage(s, "upsert_src", d, "events", ev)
     val stream = s.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", 1).parquet(stage)
     // payload struct order (last_micros, last_event_id, last_type):

@@ -33,6 +33,19 @@ class EngineJdbcSpec extends AnyFunSuite with SparkSuite {
     } finally cn.close()
   }
 
+  test("a float column lands as DOUBLE and comes back from Derby exact") {
+    val csv = Files.createTempDirectory("graftfloat").resolve("prices.csv")
+    Files.write(csv, "price\n75462.67\n0.1\n".getBytes("UTF-8"))
+    assert(engine.importFile(csv.toString, "test...prices").contains(2L))
+    val back = JdbcIO.readTable(spark, url, "prices").collect().map(_.getDouble(0)).toSet
+    assert(back == Set(75462.67, 0.1))
+    val cn = java.sql.DriverManager.getConnection(url)
+    try {
+      val rs = cn.getMetaData.getColumns(null, null, "PRICES", "price")
+      assert(rs.next() && rs.getString("TYPE_NAME") == "DOUBLE")
+    } finally cn.close()
+  }
+
   test("zip import routes through scratch extraction into Derby (S3)") {
     import java.util.zip.{ZipEntry, ZipOutputStream}
     val p = Files.createTempDirectory("graftzipeng").resolve("zt.csv.zip")

@@ -1,11 +1,12 @@
 #!/bin/bash
 # Parallelism matrix: runs graft.Verify plus tools/selfcheck.py (the
 # DuckDB oracle) over a query list at SPARK_GRAFT_CPUS {1, 4} x
-# SPARK_GRAFT_SHUFFLE_PARTITIONS {1, 7}. For the default list, the
-# PageRank family (q148, q165, q184), it also runs once with the chunked
-# edge build forced (SPARK_GRAFT_EDGEBUILD_MAX_ROWS=1), whose stderr must
-# show the rescan tier for all three queries; that run pauses 2 s per
-# round and takes a few minutes.
+# SPARK_GRAFT_SHUFFLE_PARTITIONS {1, 7, 200} (200 is Spark's default:
+# far more partitions than rows in some round frames). For the default
+# list, the PageRank family (q148, q165, q184), it also runs once with
+# the chunked edge build forced (SPARK_GRAFT_EDGEBUILD_MAX_ROWS=1), whose
+# stderr must show the rescan tier for all three queries; that run
+# pauses 2 s per round and takes a few minutes.
 #
 # Usage: tools/rank_matrix.sh <sf_dir> [out_root] [queries]
 #   sf_dir    a provisioned dataset dir (sf0.01 is the intended size)
@@ -53,7 +54,7 @@ cell() {
 sbt -batch compile > "$OUT/compile.log" 2>&1 ||
   { echo "[FAIL] compile (see $OUT/compile.log)"; exit 1; }
 for cpus in 1 4; do
-  for parts in 1 7; do
+  for parts in 1 7 200; do
     cell "cpus${cpus}_parts${parts}" SPARK_GRAFT_CPUS=$cpus \
       SPARK_GRAFT_SHUFFLE_PARTITIONS=$parts
   done
