@@ -8,7 +8,10 @@ package graft
  *  shuffle WRITE volume (sum over completed stages — the round-13
  *  q114 ask needed "shuffle bytes materially down" to be a measured
  *  claim, not an inference; listener delivery is async, so the
- *  counter is read after a settle pause and labeled approximate).
+ *  counter is read after a settle pause and labeled approximate) and
+ *  the number of Spark jobs it started. After each query's runs one
+ *  more line gives the RDDs still cached (count and MiB, from
+ *  `getRDDStorageInfo` after a gc): what the query leaves behind.
  *  Usage: runMain graft.BenchOne <name> [sfDir] [runs]. */
 object BenchOne {
   def main(args: Array[String]): Unit = {
@@ -44,7 +47,10 @@ object BenchOne {
     // carries the rows — optimizing "the widest shuffle" starts from a
     // stage-level measurement, not a plan-shape guess
     val stageDump = sys.env.get("SPARK_GRAFT_STAGE_DUMP").contains("1")
+    val jobs = new java.util.concurrent.atomic.AtomicLong(0)
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
       override def onStageCompleted(
           e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
         val m = e.stageInfo.taskMetrics
@@ -86,17 +92,22 @@ object BenchOne {
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       (1 to runs).foreach { i =>
-        val w0 = shuffleWrite.get(); val r0 = shuffleRecords.get()
+        val w0 = shuffleWrite.get(); val r0 = shuffleRecords.get(); val j0 = jobs.get()
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val sec = (System.nanoTime() - t0) / 1e9
         Thread.sleep(1000) // listener bus settle
         println(f"[benchone] $name run$i $sec%.2f s " +
           f"shuffle_write~${(shuffleWrite.get() - w0) / (1 << 20)}%d MiB " +
-          f"(${shuffleRecords.get() - r0}%d rows) " +
+          f"(${shuffleRecords.get() - r0}%d rows) jobs=${jobs.get() - j0}%d " +
           f"widest_stage=${widestStage.get()}%d/${widestRows.get()}%,d rows")
       }
       System.gc() // the Bench inter-query hygiene (orphaned blocks)
+      Thread.sleep(1000) // let the ContextCleaner drop what the gc freed
+      // what the query leaves cached for the next one
+      val kept = spark.sparkContext.getRDDStorageInfo
+      println(f"[benchone] $name cached_rdds=${kept.length}%d " +
+        f"cached_mib=${kept.map(i => i.memSize + i.diskSize).sum / 1048576.0}%.1f")
     }
     graft.ops.InferOps.cleanupScratch()
     spark.stop()

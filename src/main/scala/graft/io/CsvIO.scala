@@ -19,9 +19,7 @@ import org.apache.spark.sql.types._
 object CsvIO {
 
   /** File-type dispatch (core.py:18-25). */
-  private val csvRe = ".*(\\.csv|\\.tab|\\.tsv|\\.txt)(\\.gz|\\.zip)?$".r
   private val excelRe = ".*(\\.xlsx|\\.xls)(\\.gz|\\.zip)?(\\$.*)?$".r
-  def isCsv(p: String): Boolean = csvRe.matches(p)
   def isExcel(p: String): Boolean = excelRe.matches(p)
 
   /** Delimiter by extension: `.tab`/`.tsv` → TAB (core.py:314-317). */

@@ -343,15 +343,6 @@ object XlsxIO {
     (CsvIO.castTo(raw, cols), cols)
   }
 
-  /** All sheets, one DataFrame per sheet named after it
-    * (core.py:165-173); per-sheet errors isolated (P4). */
-  def importAll(spark: SparkSession, path: String): Map[String, DataFrame] =
-    listSheets(path).flatMap { s =>
-      try Some(s -> importSheet(spark, path, s)._1)
-      catch { case e: Exception =>
-        System.err.println(s"[xlsx] trouble importing worksheet $s: ${e.getMessage}"); None }
-    }.toMap
-
   /** Parse the requested sheets of an in-memory workbook — pure over
     * bytes, so it runs on executors. */
   def sheetsFromBytes(bytes: Array[Byte], sheet: Option[String]): Seq[(String, Seq[Seq[Cell]])] = {

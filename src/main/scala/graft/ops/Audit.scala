@@ -461,7 +461,7 @@ object Audit {
    *
    *  Scale shape: candidates ride q122's PassJoin blocking (block
    *  key cardinality grows with the registry), the cluster step is
-   *  [[Curation.connectedComponents]] over link-sized edges (min-
+   *  [[Graph.connectedComponents]] over link-sized edges (min-
    *  label propagation, vertex-sized frames per round), the member
    *  join is key-equi, and the canonical window partitions by
    *  entity — nothing unpartitioned, nothing quadratic. */
@@ -471,7 +471,8 @@ object Audit {
         (col("ckey").cast("long") * 2).as("doc_a"),
         (col("skey").cast("long") * 2 + 1).as("doc_b"))
       .distinct()
-    val labels = Curation.connectedComponents(edges)
+    val labels = Graph.connectedComponents(Graph.undirected(edges, "doc_a", "doc_b"),
+      Curation.ClusterTier, Curation.ClusterRounds)
     val cm = collapsedRegistry(customer(s, d), "c_nationkey", "c_name",
         "c_acctbal")
       .select((col("k").cast("long") * 2).as("vid"),
@@ -483,7 +484,7 @@ object Audit {
         lit("supplier").as("registry"), col("k").as("entity_key"),
         col("bal"), col("w"))
     val mem = cm.unionByName(sm)
-      .join(labels, col("vid") === col("id"))
+      .join(labels, col("vid") === col("node"))
       .select(col("label").as("entity_id"), col("vid"), col("registry"),
         col("entity_key"), col("bal"), col("w"))
     val agg = mem.groupBy(col("entity_id")).agg(

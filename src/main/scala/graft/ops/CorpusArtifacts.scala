@@ -29,7 +29,9 @@ import org.apache.spark.sql.SparkSession
   * modification time goes undetected.
   */
 object CorpusArtifacts {
-  /** A derived dir: dropping its entry deletes it. */
+  /** A derived dir: dropping its entry deletes it and its `<dir>_*`
+    * siblings (files that must not sit inside it, such as the scaled
+    * IVF layout's codebook). */
   private final case class Derived(dir: String)
 
   /** Last key seen per (dir, table); guarded by `this`. */
@@ -68,7 +70,12 @@ object CorpusArtifacts {
   /** Drop the entries matching `p`; returns the derived dirs deleted. */
   private def drop(p: ((String, String, String, String)) => Boolean): Seq[String] =
     entries.keys.filter(p).toSeq.flatMap(entries.remove).collect {
-      case Derived(dir) => InferOps.deleteDir(dir); dir
+      case Derived(dir) =>
+        val at = Paths.get(dir)
+        val siblings = Option(at.getParent.toFile.listFiles()).toSeq.flatten
+          .filter(_.getName.startsWith(s"${at.getFileName}_"))
+        (dir +: siblings.map(_.getPath)).foreach(InferOps.deleteDir)
+        dir
     }
 
   /** `build`, computed once per content key of `table` in `d`. */
@@ -95,4 +102,8 @@ object CorpusArtifacts {
     * derived dirs deleted (returned). */
   def release(d: String, tags: String*): Seq[String] =
     drop { case (t, dd, _, _) => dd == d && tags.contains(t) }
+
+  /** Forget the artifacts tagged `tag` in every dir now. */
+  def releaseAll(tag: String): Unit =
+    drop { case (t, _, _, _) => t == tag }
 }

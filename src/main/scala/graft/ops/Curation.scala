@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /**
  * Corpus-curation operators a training-data pipeline runs between
@@ -188,64 +189,22 @@ object Curation {
       |  CAST(floor(weight * scale) AS BIGINT) * 1.0 / avail_tokens AS sample_frac
       |FROM avail, s ORDER BY source""".stripMargin
 
-  /** Connected components by iterative min-label propagation over an
-   *  undirected edge list: each round every node adopts the minimum
-   *  label in its closed neighborhood; converges in O(component
-   *  diameter) rounds. Near-dup clusters have tiny diameters (they
-   *  are dense blobs around a template), so 3-4 rounds close even
-   *  web-scale corpora; `maxIter` bounds the worst case and lineage
-   *  is cut per round with an eager localCheckpoint (ContextCleanup
-   *  frees the blocks; no cache-manager entry). An adversarial
-   *  path-shaped graph of diameter > maxIter terminates with a
-   *  partial labeling rather than spinning (OpsInvariantsSpec pins
-   *  both sides of the bound); near-dup edge sets never come close.
-   *  Input (doc_a, doc_b) pairs; output (id, label). */
-  private[ops] def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
-    val sym = edges
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(edges.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .localCheckpoint() // materialized once, re-read every round
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint()
-    // Convergence check: labels are monotonically non-increasing
-    // (each round takes a min over the closed neighborhood), so the
-    // component labeling is stable iff sum(label) is unchanged — a
-    // 1-row aggregate over the just-checkpointed frame instead of the
-    // former join+filter+count (which added a full extra shuffle per
-    // round; at web scale the rounds are the cost, so halving the
-    // per-round job count halves the operator). The sum runs in
-    // decimal(38,0): a billion 1e10-scale node ids overflow an int64
-    // sum (ANSI abort — the q72 hazard class), while 38 digits hold
-    // any realistic id·count product exactly. sum over zero rows is
-    // NULL → an empty edge set returns the empty labeling directly.
-    def labelSum(df: DataFrame): Option[java.math.BigDecimal] = {
-      val r = df.agg(sum(col("label").cast("decimal(38,0)"))).head
-      if (r.isNullAt(0)) None else Some(r.getDecimal(0))
-    }
-    var prevSum = labelSum(labels)
-    if (prevSum.isEmpty) return labels
-    var changed = true
-    var iter = 0
-    while (changed && iter < maxIter) {
-      // LAZY checkpoint (round 16, job-floor cut): the labelSum
-      // fixpoint probe right below materializes the round — one job
-      // per round instead of checkpoint-then-probe; lineage still
-      // cut on first compute
-      val next = sym
-        .join(labels.select(col("id").as("dst"), col("label")), "dst")
-        .select(col("src").as("id"), col("label"))
-        .union(labels)
-        .groupBy(col("id")).agg(min(col("label")).as("label"))
-        .localCheckpoint(eager = false)
-      val s = labelSum(next)
-      changed = s != prevSum
-      prevSum = s
-      labels = next
-      iter += 1
-    }
-    labels
-  }
+  /** The round bound of the near-dup clusters' connected components
+   *  ([[Graph.connectedComponents]] over the symmetrized pairs; q180's
+   *  entity links use it too). Near-dup clusters are dense blobs around
+   *  a template, so 3-4 rounds close even web-scale corpora; the bound
+   *  caps an adversarial path-shaped graph, which then ends with a
+   *  partial labeling rather than spinning (OpsInvariantsSpec pins both
+   *  sides of the bound). */
+  private[ops] val ClusterRounds = 20
+
+  /** Their edge tier: the rounds read the checkpointed link set
+   *  ([[Graph.undirected]]) in place and keep nothing past the call.
+   *  A link set is rebuilt on every call, and a persisted copy whose
+   *  plan the next call cannot match (the shingling closure of q76 and
+   *  q94 never matches) would stay cached once per call. There are no
+   *  co-purchase chunks to evict. */
+  private[ops] val ClusterTier = Graph.EdgeTier(StorageLevel.NONE)
 
   /** q76: dedup-cluster formation — group the exact-Jaccard near-dup
    *  pairs (q23's edges, threshold 0.6) into clusters; cluster id =
@@ -258,14 +217,15 @@ object Curation {
   def q76DedupClusters(s: SparkSession, d: String): DataFrame = {
     val edges = Dedup.jaccardPairs(documents(s, d), 0.6)
       .select(col("doc_a"), col("doc_b"))
-    val labels = connectedComponents(edges)
+    val labels = Graph.connectedComponents(Graph.undirected(edges, "doc_a", "doc_b"),
+      ClusterTier, ClusterRounds)
     // sizes is bounded by the cluster count — usually tiny, but a
     // pathological boilerplate-heavy corpus could make it large, so
     // no mandatory broadcast hint: AQE picks broadcast when the
     // materialized size permits, else a plain shuffle of tiny data
     val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("csize"))
     labels.join(sizes, "label")
-      .select(col("id").as("doc_id"), col("label").as("cluster"), col("csize"))
+      .select(col("node").as("doc_id"), col("label").as("cluster"), col("csize"))
       .orderBy(col("doc_id"))
   }
 
@@ -475,11 +435,12 @@ object Curation {
   private[ops] def clusterKeepBest(docs: DataFrame,
       threshold: Double = 0.6): DataFrame = {
     val edges = Dedup.jaccardPairs(docs, threshold).select(col("doc_a"), col("doc_b"))
-    val labels = connectedComponents(edges)
+    val labels = Graph.connectedComponents(Graph.undirected(edges, "doc_a", "doc_b"),
+      ClusterTier, ClusterRounds)
     val quality = docs.select(col("doc_id"),
       TextAnalysis.qualityScore(col("text")).cast("long").as("quality_score"))
     val clustered = quality
-      .join(labels.select(col("id").as("doc_id"), col("label")), Seq("doc_id"), "left")
+      .join(labels.select(col("node").as("doc_id"), col("label")), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("cluster"),
         col("quality_score"))
     val w = org.apache.spark.sql.expressions.Window

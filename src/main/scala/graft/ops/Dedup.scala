@@ -537,11 +537,6 @@ object Dedup {
       .write.mode("overwrite").bucketBy(buckets, "fp").sortBy("fp")
       .format("parquet").saveAsTable(table)
 
-  /** [[incrementalDedup]] against a [[writeFpIndex]] table. */
-  def incrementalDedupIndexed(s: SparkSession, batch: DataFrame,
-      table: String): DataFrame =
-    incrementalDedup(batch, s.table(table))
-
   /** q80: documents with doc_id < 400 play the already-ingested
    *  corpus, the rest arrive as the new batch. Oracle: the same
    *  split, keep-min, and NOT EXISTS in SQL. */

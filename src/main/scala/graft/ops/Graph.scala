@@ -46,6 +46,38 @@ import scala.jdk.CollectionConverters._
  * edge certifies both endpoints), so there are no dangling vertices
  * by construction and the iteration preserves the vertex row set;
  * parts never co-purchased simply aren't graph vertices.
+ *
+ * The round rule. Every SQL round loop — BFS, k-core, Bellman-Ford,
+ * connected components, label propagation, HITS and the SQL tiers of
+ * the rank core — runs through one driver ([[Rounds]]), which makes
+ * four decisions, the same way for each:
+ *  - Holding. The edge frame is persisted at the corpus tier's level
+ *    (`EdgeTier.level`). Persisted, not checkpointed: a persisted frame
+ *    keeps its partitioning, and it plan-matches later calls over the
+ *    same edges, which reuse it while the table keeps its content key
+ *    ([[CorpusArtifacts]]); it is never unpersisted. Two kinds of
+ *    edges are read in place instead: the chunk parquet of a chunked
+ *    corpus, which the rank core re-reads every round rather than
+ *    park a copy beside it (the rescan tier), and edges the caller
+ *    already checkpointed for the call, at a tier of level NONE (the
+ *    link sets of q76, q94 and q180: nothing about them should
+ *    outlive the call).
+ *  - Broadcast gate. One count of the loop's vertex-sized start frame
+ *    decides, against `EdgeTier.vertexCeiling`, whether the
+ *    vertex-sized sides (ranks, labels, frontiers, survivors, scores)
+ *    broadcast into the round joins, which leaves the edge side
+ *    unshuffled. Past the ceiling the edge frame is laid out for
+ *    sort-merge joins instead ([[roundEdges]]).
+ *  - Cut. Each round frame is localCheckpointed, so the next round
+ *    plans on a leaf, not on the whole chain ([[Rounds.cut]]).
+ *  - Bound. A loop runs at most its round bound and stops earlier when
+ *    its halt test says so. Once its own copy of the edges is
+ *    materialized, the chunk parquet it came from is evicted
+ *    ([[EdgeTier.evict]]); at chunked corpora every round ends with a
+ *    reclaim ([[EdgeTier.afterRound]]).
+ * Each loop keeps only its round body (exposed for the plan gates)
+ * and its halt test. The attach tier of the rank core
+ * ([[attachEdges]]) runs its rounds on the driver instead.
  */
 object Graph {
   import Tables._
@@ -134,17 +166,16 @@ object Graph {
    *  [[edgeTier]] and passed to every loop as one value. Tests build
    *  one directly to select a tier.
    *   - `level`: storage level of the persisted/checkpointed edge
-   *     frames ([[edgeLevel]]).
+   *     frames ([[edgeLevel]]); NONE holds no copy ([[Rounds]]).
    *   - `chunked`: the edge build came from the chunked assembly, the
    *     1000×-class cue. The rank core then re-scans the chunk parquet
    *     each round instead of persisting a copy (the rescan tier), and
-   *     the rank core and BFS reclaim scratch after every round
-   *     ([[afterRound]]).
+   *     every loop reclaims scratch after each round ([[afterRound]]).
    *     Never true at ≤100×, so the bench octaves keep a gc-free loop.
-   *   - `evict`: deletes the chunk parquet ([[evictEdgeChunks]]). The
-   *     rank core (outside its rescan tier) and BFS fire it once their
-   *     own copy of the edges is materialized; the other loops leave
-   *     the parquet to the queries after them.
+   *   - `evict`: deletes the chunk parquet ([[evictEdgeChunks]]),
+   *     fired once a loop's own copy of the edges is materialized
+   *     (never in the rescan tier, which reads the parquet every
+   *     round). A later query rebuilds the chunks.
    *   - `vertexCeiling`: the broadcast ceiling ([[BroadcastMaxVertices]]);
    *     0 forces the SMJ shapes. */
   final case class EdgeTier(level: StorageLevel = StorageLevel.DISK_ONLY,
@@ -167,40 +198,76 @@ object Graph {
   def edgeTier(s: SparkSession, d: String): EdgeTier =
     EdgeTier(edgeLevel(s, d), liCount(s, d) > EdgeBuildMaxRows, () => evictEdgeChunks(d))
 
-  /** The edge frame a round loop joins against: the persisted BARE
-   *  frame while the loop's vertex side broadcasts, else a copy
-   *  repartitioned + sorted by src and persisted DISK_ONLY (materialized
-   *  here, the bare frame released), so each SMJ round exchanges and
-   *  sorts only the vertex side. persist, not localCheckpoint: a
-   *  checkpoint forgets the layout — PlanQualitySpec's "q160/q171
-   *  pre-partitioned persisted edge frames" test pins both halves. */
-  private def roundEdges(bare: DataFrame, bcast: Boolean): DataFrame =
-    if (bcast) bare
-    else {
-      val prepped = bare.repartition(col("src")).sortWithinPartitions(col("src"))
-        .persist(StorageLevel.DISK_ONLY)
-      prepped.count()
-      bare.unpersist()
-      prepped
-    }
+  /** The SMJ layout of an edge frame: repartitioned + sorted by the
+   *  round join `key` and persisted DISK_ONLY (materialized here, the
+   *  held frame released), so each SMJ round exchanges and sorts only
+   *  the vertex side. Persisted, not checkpointed: a checkpoint forgets
+   *  the layout — PlanQualitySpec's "q160/q171 pre-partitioned
+   *  persisted edge frames" test pins both halves. */
+  private def roundEdges(held: DataFrame, key: String = "src"): DataFrame = {
+    val prepped = held.repartition(col(key)).sortWithinPartitions(col(key))
+      .persist(StorageLevel.DISK_ONLY)
+    prepped.count()
+    held.unpersist()
+    prepped
+  }
 
-  /** The checkpoint rule of the SQL round loops, stated once. Each
-   *  round frame is localCheckpointed so the next round plans on a
-   *  leaf, not on the whole chain. Eager (the default) runs the whole
-   *  round right here. LAZY is allowed only at the broadcast tier, and
-   *  only when exactly ONE action consumes the round frame — a second
-   *  consumer would compute the round again before its blocks land
-   *  (LPA's round frame has two; measured 2× slower lazy). What lazy
-   *  means under AQE (a job trace shows it): `localCheckpoint(eager =
-   *  false)` still plans the round into an RDD, and adaptive planning
-   *  runs the round's query stages to do so — its broadcast builds and
-   *  its shuffle-map stage execute in this call. Only the result stage
-   *  that writes the checkpoint blocks is deferred, to the next round
-   *  that reads them (or the final action). So a lazy round saves one
-   *  job, not the round's work. */
-  private def cutRound(round: DataFrame, broadcastTier: Boolean,
-      consumers: Int = 1): DataFrame =
-    round.localCheckpoint(eager = !(broadcastTier && consumers == 1))
+  /** The round driver: the round rule of the [[Graph]] header, written
+   *  once. Constructing it holds `edges` (or, with `rescan` or at level
+   *  NONE, reads them in place), checkpoints the loop's start frame — `vertices` of the held
+   *  edges — and counts it, which materializes both; the count is the
+   *  broadcast gate. Past the ceiling the rounds join `smj(held,
+   *  start)`, by default the held edges laid out by src. */
+  private final class Rounds(loop: String, edges: DataFrame, tier: EdgeTier,
+      vertices: DataFrame => DataFrame, rescan: Boolean = false,
+      smj: (DataFrame, DataFrame) => DataFrame = (held, _) => roundEdges(held)) {
+    private val held =
+      if (rescan) edges.coalesce(64)
+      else if (tier.level == StorageLevel.NONE) edges
+      else edges.persist(tier.level)
+    val start: DataFrame = vertices(held).localCheckpoint(eager = false)
+    val n: Long = start.count()
+    val bcast: Boolean = n <= tier.vertexCeiling
+    if (tier.chunked)
+      System.err.println(s"[graph] $loop tier: vertices=$n ceiling=${tier.vertexCeiling} -> " +
+        (if (!bcast) "smj" else if (rescan) "rescan" else "broadcast"))
+    /** The edge frame the rounds join. */
+    val e: DataFrame = if (bcast) held else smj(held, start)
+    if (!(rescan && bcast)) tier.evict()
+
+    /** A vertex-sized side of a round join: broadcast under the ceiling. */
+    def side(v: DataFrame): DataFrame = if (bcast) broadcast(v) else v
+
+    /** The per-round cut. Eager (the default) runs the whole round right
+     *  here. LAZY only at the broadcast tier of an unchunked corpus, and
+     *  only when ONE consumer inside a job reads the round frame — a
+     *  second would compute the round again before its blocks land
+     *  (LPA's round frame has two; measured 2× slower lazy); at chunked
+     *  corpora eager rounds let [[EdgeTier.afterRound]] free each
+     *  round's blocks on a fixed schedule. Under AQE a lazy
+     *  `localCheckpoint` still runs the round's query stages (broadcast
+     *  builds, shuffle-map stage) in this call; only the result stage
+     *  that writes the blocks waits for the next reader. So a lazy
+     *  round saves one job, not the round's work. */
+    def cut(round: DataFrame, consumers: Int = 1): DataFrame =
+      round.localCheckpoint(eager = !(bcast && !tier.chunked && consumers == 1))
+
+    /** Rounds 1..`maxRounds` from `s0`: `round(s, i)` is the next state,
+     *  or None when the loop halts (the state then stays `s`). */
+    def run[S](s0: S, maxRounds: Int)(round: (S, Int) => Option[S]): S = {
+      var s = s0
+      var i = 1
+      var halted = false
+      while (!halted && i <= maxRounds) round(s, i) match {
+        case Some(next) =>
+          s = next
+          tier.afterRound(loop, i, maxRounds)
+          i += 1
+        case None => halted = true
+      }
+      s
+    }
+  }
 
   /** Symmetric co-purchase edge frame with tie strength: (src, dst, c)
    *  where c = number of distinct orders containing both parts. One
@@ -300,21 +367,6 @@ object Graph {
   /** Teleport share of `k` vertices: floor(M·15 / (100·k)). */
   private def teleShare(k: Long): Long = (M * (100L - Damp)) / (100L * k)
 
-  /** The edge frame a PageRank variant's SQL tiers start from. At
-   *  chunked-build corpora it is the source itself — the zstd chunk
-   *  parquet, which the rescan tier re-reads every round instead of
-   *  persisting a corpus-sized copy next to it (47 GiB of blockmgr
-   *  beside 12 GiB of parquet was the round-14 ENOSPC, twice);
-   *  coalesced, because the dst partial aggregate's exchange volume is
-   *  (map tasks)×(vertex count) rows and fewer, larger map tasks make
-   *  the map-side combine actually combine. Elsewhere: the BARE frame
-   *  persisted at the tier's level; the tiers of [[massPush]] derive
-   *  their round frame from it once per call. The attach tier never
-   *  persists the bare frame: its one cached copy is the attached frame
-   *  ([[attachEdges]]). */
-  private def pushEdges(edges: DataFrame, tier: EdgeTier): DataFrame =
-    if (tier.chunked) edges.coalesce(64) else edges.persist(tier.level)
-
   /** The attach tier's cached edge frame and what one pass over it
    *  tells the driver: `rows` are the cached (src, dst, deg[, c]) rows,
    *  all long, hash-partitioned by dst, with `c` at index `iC` (-1
@@ -382,49 +434,44 @@ object Graph {
       }
     }
 
-  /** The mass-push core's SQL tiers, shared by [[pageRank]],
+  /** The SQL tiers of the rank core, shared by [[pageRank]],
    *  [[weightedPageRank]] and [[personalizedPageRank]] wherever
-   *  [[attachEdges]] declines: `iterations` rounds from `ranks0` over
-   *  `e` (from [[pushEdges]]), whose checkpointed per-src degree frame
-   *  `deg` has `n` rows; `tele` is the teleport share. Returns the
-   *  final (node, r). Two tiers, each exactly once:
-   *   - broadcast (rescan at chunked corpora, else the persisted
-   *     DISK_ONLY frame): each round is one [[pushRound]] that
-   *     broadcasts (node, r, deg); the edge side never shuffles, the
-   *     only exchange is the dst partial aggregate.
-   *   - SMJ (past the vertex ceiling): each [[pushRound]] joins a
-   *     deg-joined frame pre-partitioned + sorted by src
-   *     ([[roundEdges]]), so each round exchanges and sorts only the
-   *     ranks side.
-   *  Every round is checkpointed eagerly, so the chunked per-round
-   *  reclaim sees each round's blocks released on a fixed schedule.
+   *  [[attachEdges]] declines: the [[Rounds]] over `edges` whose start
+   *  frame is the per-src degree `push.deg` (plus the `extra`
+   *  aggregates). At chunked corpora the rounds rescan the zstd chunk
+   *  parquet rather than persist a corpus-sized copy next to it (47 GiB
+   *  of blockmgr beside 12 GiB of parquet was the round-14 ENOSPC,
+   *  twice), coalesced, because the dst partial aggregate's exchange
+   *  volume is (map tasks)×(vertex count) rows and fewer, larger map
+   *  tasks make the map-side combine actually combine. Past the ceiling
+   *  the SMJ layout is the deg-joined frame. */
+  private def pushRounds(edges: DataFrame, push: Push, tier: EdgeTier,
+      extra: Column*): Rounds =
+    new Rounds("mass-push", edges, tier,
+      _.groupBy(col("src")).agg(push.agg.as(push.deg), extra: _*),
+      rescan = tier.chunked,
+      smj = (held, deg) => roundEdges(held.join(deg.select(col("src"), col(push.deg)), "src")))
+
+  /** `iterations` rounds of [[pushRound]] from `ranks0` over `r`
+   *  ([[pushRounds]]), `tele` the teleport share; returns the final
+   *  (node, r). Under the ceiling each round broadcasts (node, r, deg)
+   *  against the coalesced edge frame — the edge side never shuffles,
+   *  the only exchange is the dst partial aggregate; past it each round
+   *  joins the deg-joined SMJ layout and exchanges only the ranks side.
    *  Arithmetic is the identical exact-integer protocol in every tier,
    *  the attach tier included ([[Push]]) — long sums are order-free, so
    *  no tier can move a rank unit. */
-  private def massPush(e: DataFrame, deg: DataFrame, n: Long,
-      ranks0: DataFrame, push: Push, tele: Long, tier: EdgeTier,
+  private def massPush(r: Rounds, ranks0: DataFrame, push: Push, tele: Long,
       iterations: Int): DataFrame = {
-    val bcast = n <= tier.vertexCeiling
-    if (tier.chunked)
-      System.err.println(s"[graph] mass-push tier: vertices=$n ceiling=" +
-        s"${tier.vertexCeiling} -> ${if (bcast) "rescan" else "smj"}")
-    val degSide = deg.select(col("src"), col(push.deg))
-    val re =
-      if (bcast) e.coalesce(64)
-      else roundEdges(e.join(degSide, "src"), bcast = false)
-    // every tier but the rescan one holds its own materialized copy
-    // of the edges by now; the source bytes can go
-    if (!(bcast && tier.chunked)) tier.evict()
-    var ranks = ranks0
-    for (i <- 1 to iterations) {
+    val degSide = r.start.select(col("src"), col(push.deg))
+    val e = if (r.bcast) r.e.coalesce(64) else r.e
+    r.run(ranks0, iterations) { (ranks, _) =>
       val side =
-        if (bcast) broadcast(ranks.join(degSide, col("node") === col("src"))
+        if (r.bcast) broadcast(ranks.join(degSide, col("node") === col("src"))
           .select(col("node"), col("r"), col(push.deg)))
         else ranks
-      ranks = pushRound(re, side, push.contrib, push.teleport(tele)).localCheckpoint()
-      tier.afterRound("mass-push", i, iterations)
+      Some(r.cut(pushRound(e, side, push.contrib, push.teleport(tele))))
     }
-    ranks
   }
 
   /** The attach tier's rounds. The rank vector is vertex-sized and
@@ -528,7 +575,7 @@ object Graph {
   /** Integer PageRank over a directed edge list (src, dst) — callers
    *  pass a symmetrized frame for undirected graphs. Returns
    *  (node, deg, rank_units, share) ordered by node; the rounds run at
-   *  the attach tier ([[attachEdges]]) or on [[massPush]], as `tier`
+   *  the attach tier ([[attachEdges]]) or in [[massPush]], as `tier`
    *  selects. */
   def pageRank(edges: DataFrame, iterations: Int = Iterations,
       tier: EdgeTier = EdgeTier()): DataFrame = {
@@ -536,18 +583,13 @@ object Graph {
       case Some(a) => return attachedRank(edges.sparkSession, a, UniformPush, "deg", iterations)
       case None =>
     }
-    val e = pushEdges(edges, tier)
-    // one vertex-sized pass yields deg and materializes a persisted e
-    val deg = e.groupBy(col("src")).agg(UniformPush.agg.as("deg"))
-      .localCheckpoint()
-    val n = deg.count()
-    if (n == 0)
-      return deg.select(col("src").as("node"), lit(0L).as("deg"),
+    val r = pushRounds(edges, UniformPush, tier)
+    if (r.n == 0)
+      return r.start.select(col("src").as("node"), lit(0L).as("deg"),
         lit(0L).as("rank_units"), lit(0.0).as("share"))
-    val ranks = massPush(e, deg, n,
-      deg.select(col("src").as("node"), lit(M / n).as("r")),
-      UniformPush, teleShare(n), tier, iterations)
-    rankReadout(ranks, deg, "deg", n <= tier.vertexCeiling)
+    val ranks = massPush(r, r.start.select(col("src").as("node"), lit(M / r.n).as("r")),
+      UniformPush, teleShare(r.n), iterations)
+    rankReadout(ranks, r.start, "deg", r.bcast)
   }
 
   /** q148: PageRank over the co-purchase part graph (10 integer
@@ -624,10 +666,10 @@ object Graph {
    *  for c ≤ MaxSafeEdgeStrength ≈ 1.08·10⁵ — far above any
    *  co-purchase multiplicity (ScaleGen copies shift into disjoint
    *  key spaces, leaving c unchanged at every octave). The bound is
-   *  CHECKED at runtime (one extra column in the aggregate that
-   *  already materializes the persisted frame): a corpus past it
-   *  fails loudly with a pre-scale-by-GCD hint instead of silently
-   *  wrapping in non-ANSI mode while the int128 oracle stays exact.
+   *  CHECKED at runtime (one extra column in the degree aggregate):
+   *  a corpus past it fails loudly with a pre-scale-by-GCD hint
+   *  instead of silently wrapping in non-ANSI mode while the int128
+   *  oracle stays exact.
    *  Returns (node, wdeg, rank_units, share). */
   def weightedPageRank(edges: DataFrame, iterations: Int = Iterations,
       tier: EdgeTier = EdgeTier()): DataFrame = {
@@ -643,22 +685,14 @@ object Graph {
         return attachedRank(edges.sparkSession, a, WeightedPush, "wdeg", iterations)
       case None =>
     }
-    // one vertex-sized aggregate materializes a persisted e, yields
-    // wdeg AND checks the int64 bound on the per-edge product r*Damp*c
-    val e = pushEdges(edges, tier)
-    val wdeg = e.groupBy(col("src"))
-      .agg(WeightedPush.agg.as("wdeg"), max(col("c")).as("cmax"))
-      .localCheckpoint()
-    val head = wdeg.agg(count(lit(1)), max(col("cmax"))).head()
-    val n = head.getLong(0)
-    if (n == 0)
-      return wdeg.select(col("src").as("node"), lit(0L).as("wdeg"),
+    val r = pushRounds(edges, WeightedPush, tier, max(col("c")).as("cmax"))
+    if (r.n == 0)
+      return r.start.select(col("src").as("node"), lit(0L).as("wdeg"),
         lit(0L).as("rank_units"), lit(0.0).as("share"))
-    checkC(head.getLong(1))
-    val ranks = massPush(e, wdeg, n,
-      wdeg.select(col("src").as("node"), lit(M / n).as("r")),
-      WeightedPush, teleShare(n), tier, iterations)
-    rankReadout(ranks, wdeg, "wdeg", n <= tier.vertexCeiling)
+    checkC(r.start.agg(max(col("cmax"))).head().getLong(0))
+    val ranks = massPush(r, r.start.select(col("src").as("node"), lit(M / r.n).as("r")),
+      WeightedPush, teleShare(r.n), iterations)
+    rankReadout(ranks, r.start, "wdeg", r.bcast)
   }
 
   /** q165: strength-weighted PageRank over the co-purchase graph —
@@ -702,47 +736,27 @@ object Graph {
 
   /** Distributed multi-source BFS: minimum hop count from any seed,
    *  capped at maxHops. The textbook frontier iteration — each round
-   *  is ONE equi-join of the (small) frontier against the checkpointed
-   *  edge frame plus one anti-join against the visited set; work per
-   *  round is O(edges incident to the frontier), total O(E) across all
-   *  rounds, and the loop exits early when a frontier empties (the
-   *  `isEmpty` probe reads one checkpointed partition head, not a full
-   *  scan). At 100 TB the edge frame bucket-partitions on src so the
-   *  per-round join is shuffle-free on the big side; frontiers are
-   *  vertex-sized and broadcast-eligible under AQE.
+   *  is ONE equi-join of the (small) frontier against the edge frame
+   *  plus one anti-join against the visited set; work per round is
+   *  O(edges incident to the frontier), total O(E) across all rounds,
+   *  and the loop halts early when a frontier empties (the frontier's
+   *  row count is the probe).
    *
    *  Returns (node, hops) — every node reachable within maxHops, seeds
    *  at 0. Hop counts are exact integers: no float anywhere, so the
    *  frame is bit-identical to the oracle's recursive-CTE replay. */
   def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int,
       tier: EdgeTier = EdgeTier()): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-      .localCheckpoint(eager = true, tier.level)
-    var dist = seeds.select(col("node"), lit(0L).as("hops"))
-      .distinct().localCheckpoint()
-    // e AND dist are materialized (seeds may read the same source
-    // frame as edges — q158's do); the source bytes can go
-    tier.evict()
-    var frontier = dist.select(col("node"))
-    // frontier and visited set are vertex-sized — broadcast them into
-    // the round joins while the visited count fits the tier's
-    // ceiling (round 15, guide §3.1): the checkpointed e has
-    // UnknownPartitioning, so the SMJ shape re-exchanged + re-sorted
-    // the DATA-sized edge frame every round. The count that gates the
-    // broadcast doubles as the emptiness probe.
-    var distRows = dist.count()
-    var frontierRows = distRows
-    var h = 1
-    while (h <= maxHops && frontierRows > 0) {
-      val bc = distRows <= tier.vertexCeiling
-      val next = bfsRound(e, dist, frontier, h, bcast = bc)
-        .localCheckpoint() // cut lineage: plan depth stays O(1) per round
-      frontierRows = next.count()
-      distRows += frontierRows
-      dist = dist.union(next).localCheckpoint()
-      frontier = next.select(col("node"))
-      tier.afterRound("bfs", h, maxHops)
-      h += 1
+    // materialized before the driver evicts the source the seeds may
+    // read (q158's do)
+    val dist0 = seeds.select(col("node"), lit(0L).as("hops")).distinct().localCheckpoint()
+    val r = new Rounds("bfs", edges.select(col("src"), col("dst")), tier,
+      _.select(col("src").as("node")).distinct())
+    val (dist, _, _) = r.run((dist0, dist0.select(col("node")), dist0.count()), maxHops) {
+      case ((_, _, 0L), _) => None
+      case ((dist, frontier, _), h) =>
+        val next = r.cut(bfsRound(r.e, dist, frontier, h, r.bcast))
+        Some((dist.union(next).localCheckpoint(), next.select(col("node")), next.count()))
     }
     dist
   }
@@ -939,31 +953,22 @@ object Graph {
    *  identically in both engines) certifies convergence row by row
    *  instead of leaving it an assumption.
    *
-   *  Shape per round: two semi-joins of the checkpointed DISK_ONLY
-   *  edge frame against the (vertex-sized, broadcast-eligible)
-   *  survivor set + one degree hash-aggregate — the q148/q160 shuffle
-   *  pair; survivor frames localCheckpoint each round to keep the
-   *  plan O(1) deep. Work per round is O(surviving edges), total
-   *  O(rounds·E); all counts exact integers. */
+   *  Shape per round: two semi-joins of the edge frame against the
+   *  vertex-sized survivor set + one degree hash-aggregate — the
+   *  q148/q160 shuffle pair. Work per round is O(surviving edges),
+   *  total O(rounds·E); all counts exact integers. */
   def kCorePeel(edges: DataFrame, k: Int, rounds: Int,
       tier: EdgeTier = EdgeTier()): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-      .localCheckpoint(eager = true, tier.level)
-    var surv = e.select(col("src").as("node")).distinct().localCheckpoint()
-    // survivor sets only shrink — gate the broadcast once on the
-    // initial vertex count (round 15, guide §3.1: the checkpointed e
-    // re-exchanged + re-sorted in both semi-joins every round)
-    val bc = surv.count() <= tier.vertexCeiling
-    var r = 0
-    while (r < rounds) {
-      surv = aliveEdges(e, surv, bcast = bc)
+    val r = new Rounds("k-core", edges.select(col("src"), col("dst")), tier,
+      _.select(col("src").as("node")).distinct())
+    val surv = r.run(r.start, rounds) { (surv, _) =>
+      // both semi-joins read the survivors
+      Some(r.cut(aliveEdges(r.e, surv, r.bcast)
         .groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
-        .select(col("src").as("node"))
-        .localCheckpoint()
-      r += 1
+        .select(col("src").as("node")), consumers = 2))
     }
-    aliveEdges(e, surv, bcast = bc)
+    aliveEdges(r.e, surv, r.bcast)
       .groupBy(col("src")).agg(count(lit(1)).as("core_deg"))
       .select(col("src").as("node"), col("core_deg"),
         (col("core_deg") >= k).as("is_stable"))
@@ -996,8 +1001,8 @@ object Graph {
    *  `KCoreRounds` (12) peeling rounds — (part_id, core_deg,
    *  is_stable). */
   def q168KCore(s: SparkSession, d: String): DataFrame = {
-    val strength = coPurchaseStrength(s, d)
-    kCorePeel(strength.filter(col("c") >= 2), KCoreK, KCoreRounds, edgeTier(s, d))
+    val e = coPurchaseStrength(s, d).filter(col("c") >= 2).select(col("src"), col("dst"))
+    kCorePeel(e, KCoreK, KCoreRounds, edgeTier(s, d))
       .select(col("node").as("part_id"), col("core_deg"), col("is_stable"))
       .orderBy(col("part_id"))
   }
@@ -1062,12 +1067,13 @@ object Graph {
     // and the moment join both read it, and the dual-subtree plan was
     // not guaranteed exchange reuse; the vertex-sized degree frame
     // checkpoints and broadcasts into both endpoint joins
+    val tier = edgeTier(s, d)
     val e = coPurchaseStrength(s, d).filter(col("c") >= 2)
       .select(col("src"), col("dst"))
-      .localCheckpoint(eager = true, edgeLevel(s, d))
+      .localCheckpoint(eager = true, tier.level)
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .localCheckpoint()
-    val bc = deg.count() <= BroadcastMaxVertices
+    val bc = deg.count() <= tier.vertexCeiling
     def side(v: DataFrame) = if (bc) broadcast(v) else v
     val dec = "decimal(38,0)"
     val ed = e
@@ -1235,33 +1241,18 @@ object Graph {
    *
    *  Shape per round: ONE dist⋈edges equi-join on the frontier key +
    *  one min hash-aggregate over (previous dist ∪ relaxed) — the
-   *  PageRank shuffle pair with min in place of sum; the weighted
-   *  edge frame is checkpointed DISK_ONLY once, per-round frames
-   *  localCheckpoint to keep the plan O(1) deep. At 100 TB the edge
-   *  frame bucket-partitions on src, making the per-round join
-   *  shuffle-free on the big side. */
+   *  PageRank shuffle pair with min in place of sum. The broadcast
+   *  gate reads the vertex count, which bounds every dist frame. */
   def cheapestPaths(edges: DataFrame, seeds: DataFrame,
       rounds: Int = BfRounds, tier: EdgeTier = EdgeTier()): DataFrame = {
-    // persist the BARE frame and broadcast the vertex-sized dist side
-    // into every relaxation (round 15, guide §3.1 — the
-    // connectedComponents rationale); past the broadcast ceiling fall
-    // back to the pre-partitioned SMJ layout ([[roundEdges]])
-    val bare = edges.select(col("src"), col("dst"), col("w"))
-      .persist(tier.level)
-    var dist = seeds.select(col("node"), lit(0L).as("dcost")).distinct()
+    // materialized before the driver evicts the source the seeds may
+    // read (q171's do)
+    val dist0 = seeds.select(col("node"), lit(0L).as("dcost")).distinct()
       .localCheckpoint()
-    // dist grows toward the vertex set; gate per round on its count
-    // (checkpointed, vertex-sized — the count is cheap)
-    var nd = dist.count()
-    val e = roundEdges(bare, nd <= tier.vertexCeiling)
-    var i = 0
-    while (i < rounds) {
-      dist = relaxRound(e, dist, bcast = nd <= tier.vertexCeiling)
-        .localCheckpoint()
-      nd = dist.count()
-      i += 1
-    }
-    dist
+    val r = new Rounds("bellman-ford", edges.select(col("src"), col("dst"), col("w")), tier,
+      _.select(col("src").as("node")).distinct())
+    // the join and the union both read dist
+    r.run(dist0, rounds)((dist, _) => Some(r.cut(relaxRound(r.e, dist, r.bcast), consumers = 2)))
   }
 
   /** One Bellman-Ford relaxation: dist equi-joins the edge frame on
@@ -1356,34 +1347,21 @@ object Graph {
    *  anywhere; the output `share` is ONE final division.
    *
    *  Scale: the edge frame (distinct customer→part purchase pairs) is
-   *  data-sized — checkpointed DISK_ONLY once, reused by all 8
-   *  half-rounds; score frames are vertex-sized. At 100 TB the edge
-   *  frame bucket-partitions on each join key exactly like the
-   *  PageRank resident. */
+   *  data-sized — held once by the round driver (the (cust, part)
+   *  build is one orders⋈lineitem SMJ + distinct, the single widest
+   *  stage of the 100× run, and the held frame plan-matches later
+   *  calls), reused by all 8 half-rounds and by the buyer count below;
+   *  score frames are vertex-sized. At 100 TB the edge frame
+   *  bucket-partitions on each join key exactly like the PageRank
+   *  resident. */
   def q176Hits(s: SparkSession, d: String): DataFrame = {
-    // persist, not localCheckpoint (round 15, session 2): the
-    // (cust, part) build is one orders⋈lineitem SMJ + distinct — the
-    // single widest stage of the 100× run (60 M rows, ~26 s warm) —
-    // and a checkpoint is invisible to the cache manager, so every
-    // bench invocation in one JVM rebuilt it from parquet. A persisted
-    // frame plan-matches across invocations (the co-purchase bare-
-    // frame pattern) and still feeds the rounds the same rows; at
-    // 100 TB the frame is the reusable bipartite projection a real
-    // deployment would materialize once per corpus anyway.
-    // RETENTION (advice round-15, documented as bench contract): the
-    // entry is never unpersisted — ONE cached frame per corpus dir
-    // (plan-matched, closure-free; refreshed when orders or lineitem
-    // changes content key), reclaimed at session stop. The
-    // bench/verify drivers run one corpus dir per JVM; a long-lived
-    // multi-corpus host should unpersist via the catalog between
-    // corpora like the chunk eviction hook does for parquet.
     val e = orders(s, d).select(col("o_orderkey").as("ok"),
         col("o_custkey").as("cust"))
       .join(lineitem(s, d).select(col("l_orderkey").as("ok"),
         col("l_partkey").as("part")), "ok")
       .select(col("cust"), col("part")).distinct()
-      .persist(edgeLevel(s, d))
-    val auths = hitsAuthorities(e, HitsRounds)
+    // these edges are not the co-purchase chunks: nothing to evict
+    val auths = hitsAuthorities(e, HitsRounds, edgeTier(s, d).copy(evict = () => ()))
     val nBuyers = e.groupBy(col("part")).agg(count(lit(1)).as("n_buyers"))
     auths.join(nBuyers, "part")
       .select(col("part").as("part_id"), col("n_buyers"),
@@ -1403,17 +1381,12 @@ object Graph {
    *  dup×HitsM. Spark 4's default ANSI mode aborts loudly (never
    *  wraps) if a caller ever violates this. */
   private[ops] def hitsAuthorities(e: DataFrame, rounds: Int,
-      wideSums: Boolean = false): DataFrame = {
+      tier: EdgeTier = EdgeTier(), wideSums: Boolean = false): DataFrame = {
     val dec = "decimal(38,0)"
-    var hubs = e.select(col("cust")).distinct()
-      .select(col("cust"), lit(HitsM).as("h"))
-      .localCheckpoint()
-    // both score frames are vertex-sized — broadcast them into every
-    // half-round join while they fit the vertex ceiling (round 15,
-    // guide §3.1: the checkpointed e otherwise re-exchanged and
-    // re-sorted in all 8 half-round SMJs)
-    val bc = hubs.count() <= BroadcastMaxVertices
-    def side(v: DataFrame) = if (bc) broadcast(v) else v
+    // past the ceiling the auth half-round's join key lays the edges out
+    val r = new Rounds("hits", e, tier,
+      _.select(col("cust")).distinct().select(col("cust"), lit(HitsM).as("h")),
+      smj = (held, _) => roundEdges(held, "cust"))
     // Size the round scans explicitly (round 15 session 2): a
     // PERSISTED edge frame's output partitioning is pinned (AQE
     // cached-plan coalescing is off by default —
@@ -1426,24 +1399,18 @@ object Graph {
     // measured sweet spots — ~6 tasks at sf0.1 (600 k edges), ~32 at
     // 100× (60 M) — are tasks ≈ rows/100k capped at the session's
     // parallelism (scale-adaptive: the cap follows the core budget,
-    // never a local[32] constant). One exact count (which also
-    // materializes the frame before the rounds) sizes it; coalesce on
-    // a cached frame is narrow — no shuffle, identical rows.
-    // advice round-15: the sizing count is only worth paying when `e`
-    // is persisted (q176's caller) — for a bare frame (the spec path)
-    // it would recompute the whole edge build once up front and again
-    // per coalesce read; those callers keep their frame untouched
+    // never a local[32] constant). One exact count of the held frame
+    // sizes it; coalesce on a cached frame is narrow — no shuffle,
+    // identical rows. The SMJ layout keeps its partitioning instead.
     val eR =
-      if (e.storageLevel == org.apache.spark.storage.StorageLevel.NONE) e
+      if (!r.bcast) r.e
       else {
-        val em = e.count()
+        val em = r.e.count()
         val cap = e.sparkSession.sparkContext.defaultParallelism.toLong
-        e.coalesce(
+        r.e.coalesce(
           math.max(1L, math.min(math.max(1L, cap), em / 100000L + 1L)).toInt)
       }
-    var auths: DataFrame = null
-    var r = 0
-    while (r < rounds) {
+    val (_, auths) = r.run((r.start, null: DataFrame), rounds) { case ((hubs, _), i) =>
       // Narrower sum carrier (round 15 session 2, guide §2.3): only
       // ROUND 0's auth sum can exceed int64 — h0 is the UN-normalized
       // M = 10¹² per hub, so a 10⁷-buyer vertex sums to 10¹⁹. Every
@@ -1456,16 +1423,15 @@ object Graph {
       // the 8 half-rounds, and ANSI mode would abort loudly (never
       // wrap) if this bound were ever wrong. `wideSums` forces the
       // all-decimal carrier so the spec can pin tier equality.
-      val aCast = if (wideSums || r == 0) dec else "bigint"
+      val aCast = if (wideSums || i == 1) dec else "bigint"
       val hCast = if (wideSums) dec else "bigint"
-      auths = cutRound(rescale(
-        eR.join(side(hubs), "cust").groupBy(col("part"))
-          .agg(sum(col("h").cast(aCast)).as("v")), "part"), bc)
-      hubs = cutRound(rescale(
-        eR.join(side(auths.select(col("part"), col("v"))), "part")
+      val auths = r.cut(rescale(
+        eR.join(r.side(hubs), "cust").groupBy(col("part"))
+          .agg(sum(col("h").cast(aCast)).as("v")), "part"))
+      Some((r.cut(rescale(
+        eR.join(r.side(auths.select(col("part"), col("v"))), "part")
           .groupBy(col("cust")).agg(sum(col("v").cast(hCast)).as("v")), "cust")
-        .select(col("cust"), col("v").as("h")), bc)
-      r += 1
+        .select(col("cust"), col("v").as("h"))), auths))
     }
     auths
   }
@@ -1599,54 +1565,46 @@ object Graph {
   // q160: connected components (min-label propagation to fixpoint)
   // ---------------------------------------------------------------
 
-  /** Distributed connected components by min-label propagation: every
-   *  vertex starts as its own label; each round a vertex takes the min
-   *  over its own and its neighbors' labels — ONE equi-join of labels
-   *  into the checkpointed edge frame plus one hash aggregate (the
-   *  same shuffle pair as a PageRank iteration), converging in
-   *  O(diameter) rounds like q76's cluster propagation. The fixpoint
-   *  probe is a 1-row aggregate: labels only ever decrease, so
-   *  Σlabel (exact decimal — order-free, overflow-free past 10³⁸)
-   *  strictly decreases until converged; no per-node diff join is
-   *  needed. Labels are exact longs (min node id per component), so
-   *  the result is bit-identical to the oracle's closure replay. */
-  def connectedComponents(edges: DataFrame,
-      tier: EdgeTier = EdgeTier()): DataFrame = {
-    // persist the BARE edge frame (round 15): with the vertex-sized
-    // label frame BROADCAST into every round (guide §3.1), the edge
-    // side streams untouched — so the old build-time
-    // repartition+sortWithinPartitions exchange (whose only purpose
-    // was to make the per-round SMJ exchange-free on e) is dead
-    // weight and is skipped below the broadcast ceiling. Past the
-    // ceiling: the pre-partitioned SMJ layout ([[roundEdges]]).
-    val bare = edges.select(col("src"), col("dst")).persist(tier.level)
-    var labels = bare.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node")).localCheckpoint()
-    val bc = labels.count() <= tier.vertexCeiling
-    val e = roundEdges(bare, bc)
-    def mass(l: DataFrame): java.math.BigDecimal = {
-      val r = l.agg(sum(col("label").cast("decimal(38,0)"))).head()
-      if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
-    }
-    var prev = mass(labels)
-    // probe emptiness directly: `mass == 0` conflates "no vertices"
-    // with "labels sum to zero", which would return unconverged labels
-    // for graphs whose node ids are not all non-negative (the
-    // sum-decrease fixpoint below is still fine — min-labels decrease
-    // monotonically regardless of sign, the sum strictly decreases
-    // until converged)
-    var converged = labels.isEmpty // empty graph: nothing to do
-    while (!converged) {
-      // the mass() fixpoint probe right below is the round's one
-      // consumer — lazy at the broadcast tier, one job per round
-      val next = cutRound(ccRound(e, labels, bcast = bc), bc)
+  /** Distributed connected components by min-label propagation over
+   *  a symmetric (src, dst) edge frame: every vertex starts as its own
+   *  label; each round a vertex takes the min over its own and its
+   *  neighbors' labels — ONE equi-join of labels into the edge frame
+   *  plus one hash aggregate (the same shuffle pair as a PageRank
+   *  iteration), converging in O(diameter) rounds. The fixpoint probe
+   *  is a 1-row aggregate: labels only ever decrease, so Σlabel (exact
+   *  decimal — order-free, overflow-free past 10³⁸) strictly decreases
+   *  until converged; no per-node diff join is needed. Labels are
+   *  exact longs (min node id per component), so the result is
+   *  bit-identical to the oracle's closure replay. At most `maxRounds`
+   *  rounds run, the converging one included: a graph whose diameter
+   *  needs more returns a complete, partially converged labeling.
+   *  Returns (node, label). */
+  def connectedComponents(edges: DataFrame, tier: EdgeTier = EdgeTier(),
+      maxRounds: Int = Int.MaxValue): DataFrame = {
+    val r = new Rounds("cc", edges.select(col("src"), col("dst")), tier,
+      _.select(col("src").as("node")).distinct().withColumn("label", col("node")))
+    def mass(l: DataFrame): java.math.BigDecimal = Option(
+      l.agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0))
+      .getOrElse(java.math.BigDecimal.ZERO)
+    // an empty graph has nothing to propagate (and a NULL mass)
+    if (r.n == 0) return r.start
+    var prev = mass(r.start)
+    r.run(r.start, maxRounds) { (labels, _) =>
+      // the mass probe is the round frame's one consumer
+      val next = r.cut(ccRound(r.e, labels, r.bcast))
       val cur = mass(next)
-      converged = cur.compareTo(prev) == 0
+      val moved = cur.compareTo(prev) != 0
       prev = cur
-      labels = next
+      if (moved) Some(next) else None
     }
-    labels
   }
+
+  /** The symmetric (src, dst) edge frame of undirected `a`–`b` pairs,
+   *  checkpointed: materialized once, re-read by every round. */
+  private[ops] def undirected(pairs: DataFrame, a: String, b: String): DataFrame =
+    pairs.select(col(a).as("src"), col(b).as("dst"))
+      .union(pairs.select(col(b).as("src"), col(a).as("dst")))
+      .localCheckpoint()
 
   /** One propagation round: push labels across edges, take the min of
    *  incoming and own label per vertex. Exposed for the plan gate.
@@ -1774,18 +1732,9 @@ object Graph {
    *  (node, community, comm_size, is_stable). */
   def labelPropagation(edges: DataFrame, rounds: Int = LpRounds,
       tier: EdgeTier = EdgeTier()): DataFrame = {
-    // persist the BARE frame and broadcast the vertex-sized label side
-    // into every vote round (round 15 — the connectedComponents
-    // rationale); past the broadcast ceiling fall back to the
-    // pre-partitioned SMJ layout ([[roundEdges]])
-    val bare = edges.select(col("src"), col("dst")).persist(tier.level)
-    var labels = bare.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node")).localCheckpoint()
-    val bc = labels.count() <= tier.vertexCeiling
-    val e = roundEdges(bare, bc)
-    var r = 0
-    while (r < rounds) {
-      r += 1
+    val r = new Rounds("lpa", edges.select(col("src"), col("dst")), tier,
+      _.select(col("src").as("node")).distinct().withColumn("label", col("node")))
+    val labels = r.run(r.start, rounds) { (labels, i) =>
       // round 15: vote ONLY the active parity class — the inactive
       // class's votes were computed and then discarded by the merge
       // below, so filtering n2 before the vote aggregates halves
@@ -1796,23 +1745,19 @@ object Graph {
       // shape at sf0.1 (the per-round broadcast build is a blocking
       // driver job; AQE already picks the right strategy from the
       // materialized checkpoint stats).
-      // the round frame has two consumers (the vote flow and the
-      // kept-label merge both read it), so its checkpoint stays eager
-      val voted = lpRound(e, labels, parity = Some(r % 2L))
-      labels = cutRound(voted
-        .union(labels.filter(pmod(col("node"), lit(2L)) =!= lit(r % 2L))),
-        bc, consumers = 2)
+      // the vote flow and the kept-label merge both read the labels
+      val voted = lpRound(r.e, labels, parity = Some(i % 2L))
+      Some(r.cut(voted.union(labels.filter(pmod(col("node"), lit(2L)) =!= lit(i % 2L))),
+        consumers = 2))
     }
     // fixpoint certificate: one more full synchronous vote — a node
     // is stable iff re-voting over the FINAL labels would not move it
-    val cert = lpRound(e, labels)
-    val stable = labels.as("a").join(
-        if (bc) broadcast(cert.as("b")) else cert.as("b"),
-        col("a.node") === col("b.node"))
+    val cert = lpRound(r.e, labels)
+    val stable = labels.as("a").join(r.side(cert.as("b")), col("a.node") === col("b.node"))
       .select(col("a.node").as("node"), col("a.label").as("community"),
         (col("a.label") === col("b.label")).as("is_stable"))
     val sizes = stable.groupBy(col("community")).agg(count(lit(1)).as("comm_size"))
-    stable.join(if (bc) broadcast(sizes) else sizes, "community")
+    stable.join(r.side(sizes), "community")
       .select(col("node"), col("community"), col("comm_size"), col("is_stable"))
   }
 
@@ -1842,8 +1787,8 @@ object Graph {
    *  EXOGENOUS brand partition) and q160 (which reports mere
    *  connectivity). */
   def q181Communities(s: SparkSession, d: String): DataFrame = {
-    val strength = coPurchaseStrength(s, d)
-    labelPropagation(strength.filter(col("c") >= 2), tier = edgeTier(s, d))
+    val e = coPurchaseStrength(s, d).filter(col("c") >= 2).select(col("src"), col("dst"))
+    labelPropagation(e, tier = edgeTier(s, d))
       .select(col("node").as("part_id"), col("community"),
         col("comm_size"), col("is_stable"))
       .orderBy(col("part_id"))
@@ -1925,7 +1870,8 @@ object Graph {
   def q182LpaModularity(s: SparkSession, d: String): DataFrame = {
     val e = coPurchaseStrength(s, d).filter(col("c") >= 2)
       .select(col("src"), col("dst"))
-    val comm = labelPropagation(e, tier = edgeTier(s, d))
+    // the modularity readout re-reads e: keep the chunks it reads
+    val comm = labelPropagation(e, tier = edgeTier(s, d).copy(evict = () => ()))
       .select(col("node"), col("community"))
     labeledModularity(e
       .join(comm.select(col("node").as("src"), col("community").as("b_src")),
@@ -2014,27 +1960,24 @@ object Graph {
     // seedSet is vertex-bounded (one brand's parts) — checkpoint it
     // once so its consumers below don't re-run its distinct
     val seedSet = seeds.select(col("pk")).distinct().localCheckpoint()
-    val e = pushEdges(edges
+    val r = pushRounds(edges
       .join(broadcast(seedSet.withColumn("dst_seed", lit(1L))),
         col("dst") === col("pk"), "left")
       .select(col("src"), col("dst"),
-        coalesce(col("dst_seed"), lit(0L)).as("dst_seed")), tier)
-    val deg = e.groupBy(col("src")).agg(UniformPush.agg.as("deg"))
-      .localCheckpoint()
-    val n = deg.count()
+        coalesce(col("dst_seed"), lit(0L)).as("dst_seed")), SeededPush, tier)
+    val deg = r.start
     val ns = deg.join(seedSet, col("src") === col("pk"), "left_semi")
       .count()
     if (ns == 0)
       return deg.select(col("src").as("part_id"), col("deg"),
         lit(0L).as("rank_units"), lit(0.0).as("share"),
         lit(0L).as("is_seed")).limit(0)
-    val ranks = massPush(e, deg, n,
+    val ranks = massPush(r,
       deg.join(seedSet, col("src") === col("pk"), "left")
         .select(col("src").as("node"),
           when(col("pk").isNotNull, lit(M / ns)).otherwise(lit(0L)).as("r")),
-      SeededPush, teleShare(ns), tier, iterations)
-    ranks.join(if (n <= tier.vertexCeiling) broadcast(deg) else deg,
-        col("node") === col("src"))
+      SeededPush, teleShare(ns), iterations)
+    ranks.join(r.side(deg), col("node") === col("src"))
       .join(broadcast(seedSet), col("node") === col("pk"), "left")
       .select(col("node").as("part_id"), col("deg"),
         col("r").as("rank_units"), (col("r") / (M * 1.0)).as("share"),

@@ -1272,6 +1272,8 @@ object Similarity {
    *  SemDeDup does per-cell work bounded by [[ScaledCellPop]]² and
    *  TOTAL work linear in the corpus), persist it beside `layout` and
    *  register that sibling as scratch (it is not tmpPath-tracked).
+   *  Beside a registry dir ([[scaledLayoutDir]]) it also goes when
+   *  the layout does ([[CorpusArtifacts]]).
    *  Returns the index the artifact defines and the requested k. */
   private[ops] def fitScaledIndex(s: SparkSession, d: String,
       layout: String): (DurableIndex, Int) = {

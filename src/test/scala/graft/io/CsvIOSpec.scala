@@ -16,9 +16,6 @@ class CsvIOSpec extends AnyFunSuite with SparkSuite {
   private val fixture = getClass.getResource("/fixtures/basic.csv").getPath
 
   test("file-type dispatch regexes (core.py:18-25)") {
-    assert(CsvIO.isCsv("a.csv") && CsvIO.isCsv("a.tsv") && CsvIO.isCsv("a.txt.gz"))
-    assert(CsvIO.isCsv("a.tab") && CsvIO.isCsv("b.csv.zip"))
-    assert(!CsvIO.isCsv("a.xlsx") && !CsvIO.isCsv("a.parquet"))
     assert(CsvIO.isExcel("a.xlsx") && CsvIO.isExcel("a.xls$Sheet1"))
     assert(!CsvIO.isExcel("a.csv"))
   }

@@ -105,6 +105,21 @@ class EngineJdbcSpec extends AnyFunSuite with SparkSuite {
     assert(JdbcIO.readTable(spark, url, "fromxlsx").count() == 3)
   }
 
+  test("whole-workbook xlsx import: one table per sheet") {
+    // no $SHEET and no table: every sheet lands in a table named after
+    // it (core.py:165-173); an empty workbook's sheets have no data
+    // and are swallowed one by one, so nothing is created
+    val db = s"jdbc:derby:${Files.createTempDirectory("graftwb")}/db;create=true"
+    val wb = new Engine(spark, ServerRegistry(Map("wb" -> db)))
+    val xlsx = getClass.getResource("/fixtures/excel.xlsx").getPath
+    assert(wb.importFile(xlsx, "wb").contains(12L))
+    assert(JdbcIO.readTable(spark, db, "basic").count() == 9)
+    assert(JdbcIO.readTable(spark, db, "basic2").count() == 3)
+    val empty = getClass.getResource("/fixtures/empty.xlsx").getPath
+    assert(wb.importFile(empty, "wb").contains(0L))
+    assert(XlsxIO.listSheets(empty).forall(sheet => !JdbcIO.tableExists(db, sheet)))
+  }
+
   test("4-part address qualifies the schema (srv.db.schema.table)") {
     // Derby's default schema is APP — create/read through it explicitly
     val n = engine.importFile(fixture, "test..app.qualified")

@@ -57,12 +57,6 @@ class XlsxIOSpec extends AnyFunSuite with SparkSuite {
     assert(rows(2).isNullAt(rows(2).fieldIndex("datetime")))
   }
 
-  test("importAll yields one DataFrame per sheet; empty workbook yields none") {
-    val all = XlsxIO.importAll(spark, refXlsx)
-    assert(all.keySet == Set("basic", "basic2"))
-    assert(XlsxIO.importAll(spark, refEmpty).isEmpty)
-  }
-
   test("the repeated-rows sheet imports all 9 data rows") {
     val (df, _) = XlsxIO.importSheet(spark, refXlsx, "basic")
     assert(df.count() == 9)

@@ -194,7 +194,7 @@ class BucketingSpec extends AnyFunSuite with SparkSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       try {
-        val out = Dedup.incrementalDedupIndexed(spark, batch, "graft_fpi.fp_index")
+        val out = Dedup.incrementalDedup(batch, spark.table("graft_fpi.fp_index"))
         val smj = out.queryExecution.executedPlan
           .collect { case j: SortMergeJoinExec => j }
         assert(smj.nonEmpty && smj.head.joinType.toString.startsWith("LeftAnti"),

@@ -119,6 +119,66 @@ class GraphBfsTriangleSpec extends AnyFunSuite with SparkSuite {
     assert(Graph.connectedComponents(e).collect().isEmpty)
   }
 
+  // The broadcast-versus-SMJ tier table: each SQL loop answers the
+  // same at the default tier and with the vertex ceiling forced to 0,
+  // where the vertex-sized sides stop broadcasting and the rounds
+  // sort-merge-join a src-partitioned edge frame.
+  private val tiers = Seq(
+    "broadcast" -> Graph.EdgeTier(),
+    "SMJ" -> Graph.EdgeTier(vertexCeiling = 0L))
+
+  for ((tierName, tier) <- tiers) {
+    test(s"bfsHops in the $tierName tier: multi-source distances, cap and early exit") {
+      val e = sym((1L to 7L).map(i => (i, i + 1))).toDF("src", "dst")
+      val out = Graph.bfsHops(e, Seq(1L, 8L).toDF("node"), maxHops = 4, tier)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(out == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L,
+        5L -> 3L, 6L -> 2L, 7L -> 1L, 8L -> 0L))
+      val split = sym(Seq((1L, 2L), (3L, 4L))).toDF("src", "dst")
+      val out2 = Graph.bfsHops(split, Seq(1L).toDF("node"), maxHops = 6, tier)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(out2 == Map(1L -> 0L, 2L -> 1L))
+    }
+
+    test(s"kCorePeel in the $tierName tier: the pendant chain peels, the triangle core survives") {
+      val edges = sym(Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L)))
+        .toDF("src", "dst")
+      val out = Graph.kCorePeel(edges, k = 2, rounds = 4, tier)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
+      assert(out.toSet == Set((1L, 2L, true), (2L, 2L, true), (3L, 2L, true)))
+      val early = Graph.kCorePeel(edges, k = 2, rounds = 1, tier)
+        .collect().map(r => (r.getLong(0), r.getBoolean(2))).toMap
+      assert(early(4L) == false && early(1L) == true)
+    }
+
+    test(s"connectedComponents in the $tierName tier: min labels, a long path, an empty frame") {
+      val e = sym(Seq((5L, 2L), (2L, 9L), (7L, 8L), (11L, 11L))).toDF("src", "dst")
+      val out = Graph.connectedComponents(e, tier)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(out == Map(5L -> 2L, 2L -> 2L, 9L -> 2L, 7L -> 7L, 8L -> 7L, 11L -> 11L))
+      val path = sym((1L to 15L).map(i => (i, i + 1))).toDF("src", "dst")
+      val labels = Graph.connectedComponents(path, tier)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(labels.size == 16 && labels.values.forall(_ == 1L))
+      assert(Graph.connectedComponents(Seq.empty[(Long, Long)].toDF("src", "dst"), tier)
+        .collect().isEmpty)
+    }
+
+    test(s"labelPropagation in the $tierName tier: bridged triangles and the 4-cycle settle") {
+      val e = sym(Seq((1L, 2L), (2L, 3L), (1L, 3L),
+        (10L, 11L), (11L, 12L), (10L, 12L), (3L, 10L))).toDF("src", "dst")
+      val out = Graph.labelPropagation(e, tier = tier).collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getBoolean(3)))).toMap
+      assert(Seq(1L, 2L, 3L).forall(n => out(n) == ((1L, 3L, true))), out.toString)
+      assert(Seq(10L, 11L, 12L).forall(n => out(n) == ((10L, 3L, true))), out.toString)
+      val cycle = sym(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L))).toDF("src", "dst")
+      val c = Graph.labelPropagation(cycle, tier = tier).collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getBoolean(3)))).toMap
+      assert(c == Map(1L -> ((1L, 2L, true)), 4L -> ((1L, 2L, true)),
+        2L -> ((2L, 2L, true)), 3L -> ((2L, 2L, true))), c.toString)
+    }
+  }
+
   /** Runs q159's oriented wedge-closure core on an explicit symmetric
     * edge list (the production query builds its edges from lineitem). */
   test("labelPropagation: bridged triangles split into two communities where CC sees one") {

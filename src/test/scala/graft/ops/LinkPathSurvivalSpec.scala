@@ -85,6 +85,41 @@ class LinkPathSurvivalSpec extends AnyFunSuite with SparkSuite {
     assert(out == Map(1L -> 0L, 2L -> 3L, 3L -> 6L, 4L -> 3L, 5L -> 0L))
   }
 
+  for ((tierName, tier) <- Seq("broadcast" -> Graph.EdgeTier(),
+      "SMJ" -> Graph.EdgeTier(vertexCeiling = 0L))) {
+    test(s"cheapestPaths in the $tierName tier: shortcut, round bound and multi-seed") {
+      val e = (sym(Seq((1L, 2L), (2L, 3L))).map { case (a, b) => (a, b, 5L) } ++
+        sym(Seq((1L, 3L))).map { case (a, b) => (a, b, 12L) })
+        .toDF("src", "dst", "w")
+      val out = Graph.cheapestPaths(e, Seq(1L).toDF("node"), rounds = 6, tier)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(out == Map(1L -> 0L, 2L -> 5L, 3L -> 10L))
+      val path = sym((1L to 7L).map(i => (i, i + 1))).map { case (a, b) => (a, b, 1L) }
+        .toDF("src", "dst", "w")
+      val near = Graph.cheapestPaths(path, Seq(1L).toDF("node"), rounds = 2, tier)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(near == Map(1L -> 0L, 2L -> 1L, 3L -> 2L))
+      val both = Graph.cheapestPaths(path, Seq(1L, 8L).toDF("node"), rounds = 6, tier)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(both == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L,
+        5L -> 3L, 6L -> 2L, 7L -> 1L, 8L -> 0L))
+    }
+
+    test(s"hitsAuthorities in the $tierName tier: a hand-replayed round, equal carriers") {
+      val e = Seq((1L, 1L), (1L, 2L), (2L, 2L)).toDF("cust", "part")
+      val one = Graph.hitsAuthorities(e, rounds = 1, tier).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(one == Map(1L -> 333333333333L, 2L -> 666666666666L))
+      val skew = (1L to 50L).map(c => (c, if (c % 5 == 0) 2L else 1L))
+        .toDF("cust", "part")
+      val narrow = Graph.hitsAuthorities(skew, rounds = 4, tier).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val wide = Graph.hitsAuthorities(skew, rounds = 4, tier, wideSums = true).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(narrow == wide && narrow.size == 2, s"$narrow vs $wide")
+    }
+  }
+
   // ----------------------------------------------------------------
   // q173 kmLifeTable
   // ----------------------------------------------------------------

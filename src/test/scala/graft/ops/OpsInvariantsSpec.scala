@@ -235,27 +235,33 @@ class OpsInvariantsSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  /** Components of undirected (doc_a, doc_b) pairs, as q76, q94 and
+    * q180 compute them. */
+  private def cc(pairs: org.apache.spark.sql.DataFrame,
+      maxRounds: Int = Curation.ClusterRounds) =
+    Graph.connectedComponents(Graph.undirected(pairs, "doc_a", "doc_b"),
+      Curation.ClusterTier, maxRounds)
+
   test("connected components: chains collapse to min label, components stay disjoint") {
     import spark.implicits._
     // chain 1-2-3-4 (diameter 3 → needs multiple propagation rounds),
     // triangle 10-11-12, isolated edge 20-21
     val edges = Seq((2L, 1L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L),
       (10L, 12L), (20L, 21L)).toDF("doc_a", "doc_b")
-    val labels = Curation.connectedComponents(edges)
+    val labels = cc(edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))
-    // maxIter bound cuts propagation early but must still return a
+    // the round bound cuts propagation early but must still return a
     // labeling over every node (partial convergence, not a crash)
-    val partial = Curation.connectedComponents(edges, maxIter = 1)
+    val partial = cc(edges, maxRounds = 1)
     assert(partial.count() == 9)
     // an empty edge set yields an empty labeling, not an NPE from the
     // NULL sum in the convergence check
-    val none = Curation.connectedComponents(
-      Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"))
+    val none = cc(Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"))
     assert(none.count() == 0)
     // q76's real near-dup edge set yields a non-empty labeling
-    val real = Curation.connectedComponents(Dedup.jaccardPairs(
+    val real = cc(Dedup.jaccardPairs(
       Tables.documents(spark, "/root/testdata/sf0.001"), 0.6)
       .select(col("doc_a"), col("doc_b")))
     assert(real.count() > 0)
@@ -265,20 +271,20 @@ class OpsInvariantsSpec extends AnyFunSuite with SparkSuite {
     import spark.implicits._
     // a path 0-1-…-19 has diameter 19 — the adversarial shape for
     // 1-hop min-label flow (label 0 moves one hop per round); the
-    // default maxIter=20 is exactly enough: 19 propagation rounds +
-    // the unchanged-sum round that detects convergence
+    // default bound of 20 rounds is exactly enough: 19 propagation
+    // rounds + the unchanged-sum round that detects convergence
     val path = (0L until 19L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val labels = Curation.connectedComponents(path)
+    val labels = cc(path)
       .collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(labels.length == 20 && labels.forall(_._2 == 0L))
     // a diameter BEYOND the bound terminates with a complete-but-
     // partially-converged labeling instead of spinning — a regime
     // near-dup edge sets never reach
     val long = (0L until 30L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val partial = Curation.connectedComponents(long, maxIter = 5)
+    val partial = cc(long, maxRounds = 5)
       .collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(partial.length == 31)
-    assert(partial.exists(_._2 != 0L), "maxIter=5 cannot fully converge diameter 30")
+    assert(partial.exists(_._2 != 0L), "5 rounds cannot fully converge diameter 30")
   }
 
   test("incremental dedup admits only fingerprints unseen in the corpus index") {

@@ -72,6 +72,21 @@ class RewriteInPlaceSpec extends AnyFunSuite with SparkSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("the scaled IVF layout's codebook sibling goes with its layout") {
+    val a = Files.createTempDirectory("graft-rewrite-sivf")
+    try {
+      copyTree(src, a)
+      val old = Similarity.scaledLayoutDir(spark, a.toString)
+      assert(Files.isDirectory(Paths.get(s"${old}_codebook")))
+      rewriteInPlace(a)
+      val cur = Similarity.scaledLayoutDir(spark, a.toString)
+      assert(cur != old, "a rewritten embeddings table keys a new layout")
+      assert(!Files.exists(Paths.get(old)) && !Files.exists(Paths.get(s"${old}_codebook")),
+        s"the old layout or its codebook sibling outlived the key change: $old")
+      assert(Files.isDirectory(Paths.get(s"${cur}_codebook")))
+    } finally InferOps.deleteDir(a.toString)
+  }
+
   private def rows(q: String, dir: Path): Seq[String] =
     SparkEntry.queries(q)(spark, dir.toString).collect().map(_.toString).toSeq.sorted
 
