@@ -8,10 +8,12 @@ package graft
  *  shuffle WRITE volume (sum over completed stages — the round-13
  *  q114 ask needed "shuffle bytes materially down" to be a measured
  *  claim, not an inference; listener delivery is async, so the
- *  counter is read after a settle pause and labeled approximate) and
- *  the number of Spark jobs it started. After each query's runs one
- *  more line gives the RDDs still cached (count and MiB, from
- *  `getRDDStorageInfo` after a gc): what the query leaves behind.
+ *  counter is read after a settle pause and labeled approximate), the
+ *  number of Spark jobs it started and its task time (`task_s`, the
+ *  summed executor run time of its completed stages). After each
+ *  query's runs one more line gives the RDDs still cached (count and
+ *  MiB, from `getRDDStorageInfo` after a gc): what the query leaves
+ *  behind.
  *  Usage: runMain graft.BenchOne <name> [sfDir] [runs]. */
 object BenchOne {
   def main(args: Array[String]): Unit = {
@@ -48,6 +50,9 @@ object BenchOne {
     // stage-level measurement, not a plan-shape guess
     val stageDump = sys.env.get("SPARK_GRAFT_STAGE_DUMP").contains("1")
     val jobs = new java.util.concurrent.atomic.AtomicLong(0)
+    // summed executor run time of completed stages (ms): a run's task
+    // time, apart from its scheduling and driver time
+    val taskMs = new java.util.concurrent.atomic.AtomicLong(0)
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
@@ -57,6 +62,7 @@ object BenchOne {
         if (m != null) {
           shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
           shuffleRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
+          taskMs.addAndGet(m.executorRunTime)
           val rw = m.shuffleWriteMetrics.recordsWritten
           if (rw > widestRows.get()) {
             widestRows.set(rw); widestStage.set(e.stageInfo.stageId.toLong)
@@ -93,6 +99,7 @@ object BenchOne {
       val fn = SparkEntry.queries(name)
       (1 to runs).foreach { i =>
         val w0 = shuffleWrite.get(); val r0 = shuffleRecords.get(); val j0 = jobs.get()
+        val k0 = taskMs.get()
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val sec = (System.nanoTime() - t0) / 1e9
@@ -100,6 +107,7 @@ object BenchOne {
         println(f"[benchone] $name run$i $sec%.2f s " +
           f"shuffle_write~${(shuffleWrite.get() - w0) / (1 << 20)}%d MiB " +
           f"(${shuffleRecords.get() - r0}%d rows) jobs=${jobs.get() - j0}%d " +
+          f"task_s=${(taskMs.get() - k0) / 1000.0}%.2f " +
           f"widest_stage=${widestStage.get()}%d/${widestRows.get()}%,d rows")
       }
       System.gc() // the Bench inter-query hygiene (orphaned blocks)

@@ -26,9 +26,11 @@ import scala.jdk.CollectionConverters._
  * tier. Under the vertex ceiling on memory-backed corpora
  * ([[attachEdges]]) the vertex state is driver-sized, as in Pregel:
  * one cached dst-partitioned edge frame is the only distributed
- * object, the degrees, the start vector and the readout are computed
- * on the driver, and each round is one Spark job whose per-dst sums
- * the driver combines. Elsewhere ([[massPush]]) every round is one
+ * object kept, each call holds its partitions as primitive edge blocks
+ * ([[EdgeBlock]]), the degrees, the start vector and the readout are
+ * computed on the driver, and each round is one Spark job of array
+ * loops whose per-dst sums the driver combines. Elsewhere
+ * ([[massPush]]) every round is one
  * ranks⋈edges equi-join on src plus one hash aggregate on dst — the
  * shuffle pair a 1000-executor PageRank runs. At 100 TB both sides
  * pre-partition on the join key (bucketing the edge table by src
@@ -217,7 +219,13 @@ object Graph {
    *  NONE, reads them in place), checkpoints the loop's start frame — `vertices` of the held
    *  edges — and counts it, which materializes both; the count is the
    *  broadcast gate. Past the ceiling the rounds join `smj(held,
-   *  start)`, by default the held edges laid out by src. */
+   *  start)`, by default the held edges laid out by src.
+   *  The held frame is never unpersisted: a later call reuses it only
+   *  when its edges plan-match. Edges that carry a Scala closure (a
+   *  typed `map`/`flatMap`) never plan-match, so each such call leaves
+   *  one more cached frame for the rest of the session, until frames are
+   *  released at query exit (ROADMAP item 4). GraphBfsTriangleSpec pins
+   *  that the loops over plain relational frames leave none. */
   private final class Rounds(loop: String, edges: DataFrame, tier: EdgeTier,
       vertices: DataFrame => DataFrame, rescan: Boolean = false,
       smj: (DataFrame, DataFrame) => DataFrame = (held, _) => roundEdges(held)) {
@@ -346,41 +354,185 @@ object Graph {
    *  group), the per-edge contribution that divides by it, and where
    *  the teleport share lands — on every reached vertex, or (`seeded`)
    *  only at `dst`s whose 0/1 `dst_seed` edge column is set. The round
-   *  arithmetic is written twice, side by side: in SQL (`contrib`,
-   *  [[teleport]]) for the SQL-round tiers and in Scala (`share`) for
-   *  the attach tier's driver rounds, whose seeded teleport is a
-   *  lookup in the driver's seed array ([[personalizedPageRank]]).
-   *  Both are the same floored exact-integer expressions and both
-   *  throw on int64 overflow (ANSI SQL; `Math.*Exact`). `share` takes
-   *  (r, deg, c); the uniform variants ignore c. */
+   *  arithmetic is written twice: in SQL (`contrib`, [[teleport]]) for
+   *  the SQL-round tiers and in Scala ([[EdgeBlock.push]]) for the
+   *  attach tier, whose seeded teleport is a lookup in the driver's
+   *  seed array ([[personalizedPageRank]]). Both are the same floored
+   *  exact-integer expressions and both throw on int64 overflow (ANSI
+   *  SQL; `Math.*Exact`). A `weighted` variant multiplies each share by
+   *  the edge's `c`, which the attach tier then carries per edge. */
   private[ops] final case class Push(deg: String, agg: Column, contrib: String,
-      share: (Long, Long, Long) => Long, seeded: Boolean = false) {
+      weighted: Boolean = false, seeded: Boolean = false) {
     def teleport(tele: Long): Column =
       if (seeded) max(col("dst_seed")) * lit(tele) else lit(tele)
   }
-  private[ops] val UniformPush = Push("deg", count(lit(1)), s"r * $Damp div (100 * deg)",
-    (r, deg, _) => multiplyExact(r, Damp) / multiplyExact(100L, deg))
+  private[ops] val UniformPush = Push("deg", count(lit(1)), s"r * $Damp div (100 * deg)")
   private[ops] val WeightedPush = Push("wdeg", sum(col("c")), s"r * $Damp * c div (100 * wdeg)",
-    (r, wdeg, c) => multiplyExact(multiplyExact(r, Damp), c) / multiplyExact(100L, wdeg))
+    weighted = true)
   private val SeededPush = UniformPush.copy(seeded = true)
 
   /** Teleport share of `k` vertices: floor(M·15 / (100·k)). */
   private def teleShare(k: Long): Long = (M * (100L - Damp)) / (100L * k)
 
-  /** The attach tier's cached edge frame and what one pass over it
-   *  tells the driver: `rows` are the cached (src, dst, deg[, c]) rows,
-   *  all long, hash-partitioned by dst, with `c` at index `iC` (-1
-   *  without it); `nodes` holds every src in ascending order with its
-   *  degree at the same index of `degs`; `maxC` is the largest `c`. */
-  private final case class Attached(rows: RDD[InternalRow], iC: Int,
-      nodes: Array[Long], degs: Array[Long], maxC: Long) {
-    /** (node, deg, r) for each final (node, r) that is a src — the
-     *  inner join of the SQL readout — in the order of `ns`. */
-    def withDeg(ns: Array[Long], rs: Array[Long]): Array[(Long, Long, Long)] =
-      ns.indices.flatMap { i =>
-        val at = java.util.Arrays.binarySearch(nodes, ns(i))
-        if (at >= 0) Some((ns(i), degs(at), rs(i))) else None
-      }.toArray
+  /** The rank core's edge rule, the same at every tier: an edge with a
+   *  NULL endpoint is dropped before any tier reads the edges. */
+  private def rankEdges(edges: DataFrame): DataFrame =
+    edges.filter(col("src").isNotNull && col("dst").isNotNull)
+
+  /** Local integer ids for `vs`: its distinct values ascending, and the
+   *  index of each value of `vs` into them. Hashing, so only the
+   *  distinct values are sorted. */
+  private def localIds(vs: Array[Long]): (Array[Long], Array[Int]) = {
+    val id = mutable.LongMap.empty[Int]
+    var k = 0
+    while (k < vs.length) { id(vs(k)) = 0; k += 1 }
+    val keys = id.keys.toArray
+    java.util.Arrays.sort(keys)
+    var i = 0
+    while (i < keys.length) { id(keys(i)) = i; i += 1 }
+    val at = new Array[Int](vs.length)
+    k = 0
+    while (k < vs.length) { at(k) = id(vs(k)); k += 1 }
+    (keys, at)
+  }
+
+  /** (key, value) runs merged on the driver: the distinct keys
+   *  ascending, each with its values folded from 0 by `combine`. */
+  private def mergeRuns(runs: Array[(Array[Long], Array[Long])],
+      combine: (Long, Long) => Long): (Array[Long], Array[Long]) = {
+    val all = new Array[Long](runs.map(_._1.length).sum)
+    var p = 0
+    runs.foreach { case (ks, _) => System.arraycopy(ks, 0, all, p, ks.length); p += ks.length }
+    val (keys, at) = localIds(all)
+    val vals = new Array[Long](keys.length)
+    p = 0
+    runs.foreach { case (_, vs) =>
+      var j = 0
+      while (j < vs.length) {
+        vals(at(p)) = combine(vals(at(p)), vs(j))
+        j += 1
+        p += 1
+      }
+    }
+    (keys, vals)
+  }
+
+  /** One dst partition of the attach tier's cached edge frame as
+   *  primitive arrays, with local integer vertex ids — the layout of
+   *  GraphX's `EdgePartition` (Gonzalez et al., OSDI 2014). `srcs` holds
+   *  the partition's distinct srcs ascending, each src's degree at the
+   *  same index of `degs`; the edges of local src i are the positions
+   *  `off(i) until off(i + 1)` (CSR); edge k lands at `dsts(dstAt(k))`,
+   *  `dsts` the partition's distinct dsts ascending; `c(k)` is its
+   *  strength, carried by weighted variants only (else null). */
+  private final case class EdgeBlock(srcs: Array[Long], degs: Array[Long], off: Array[Int],
+      dstAt: Array[Int], dsts: Array[Long], c: Array[Long]) {
+    /** The largest `c`; Long.MinValue without any. */
+    def maxC: Long = {
+      var m = Long.MinValue
+      var k = 0
+      while (c != null && k < c.length) { m = math.max(m, c(k)); k += 1 }
+      m
+    }
+
+    /** One round over the block: every local src that holds a rank in
+     *  (`ns`, `rs`), `ns` ascending, is looked up once and pushes its
+     *  floored share floor(r·85·c / (100·deg)) (c = 1 uniform, so one
+     *  share per src) along its edges into a per-dst sum. Returns the
+     *  reached dsts ascending with their sums: a dst is reached when an
+     *  edge from a ranked src lands on it, even with a zero share — the
+     *  SQL round's inner join. */
+    def push(ns: Array[Long], rs: Array[Long]): (Array[Long], Array[Long]) = {
+      val sums = new Array[Long](dsts.length)
+      val reached = new java.util.BitSet(dsts.length)
+      var lo = 0
+      var i = 0
+      while (i < srcs.length) {
+        val at = java.util.Arrays.binarySearch(ns, lo, ns.length, srcs(i))
+        lo = if (at >= 0) at + 1 else -at - 1
+        if (at >= 0) {
+          val pushed = multiplyExact(rs(at), Damp)
+          val per = multiplyExact(100L, degs(i))
+          val uniform = if (c == null) pushed / per else 0L
+          var k = off(i)
+          while (k < off(i + 1)) {
+            val d = dstAt(k)
+            sums(d) = addExact(sums(d), if (c == null) uniform else multiplyExact(pushed, c(k)) / per)
+            reached.set(d)
+            k += 1
+          }
+        }
+        i += 1
+      }
+      val keys = new Array[Long](reached.cardinality)
+      val vals = new Array[Long](keys.length)
+      var j = 0
+      var d = reached.nextSetBit(0)
+      while (d >= 0) {
+        keys(j) = dsts(d); vals(j) = sums(d)
+        j += 1
+        d = reached.nextSetBit(d + 1)
+      }
+      (keys, vals)
+    }
+  }
+
+  private object EdgeBlock {
+    /** The block of one partition's cached (src, dst, deg[, c]) rows,
+     *  all long, `c` at index `iC` (-1: none). */
+    def apply(rows: Iterator[InternalRow], iC: Int): EdgeBlock = {
+      val (src, dst, deg, cs) = (new mutable.ArrayBuilder.ofLong, new mutable.ArrayBuilder.ofLong,
+        new mutable.ArrayBuilder.ofLong, new mutable.ArrayBuilder.ofLong)
+      rows.foreach { r =>
+        src += r.getLong(0); dst += r.getLong(1); deg += r.getLong(2)
+        if (iC >= 0) cs += r.getLong(iC)
+      }
+      val (es, eg, ec) = (src.result(), deg.result(), cs.result())
+      val (srcs, srcAt) = localIds(es)
+      val (dsts, dstOf) = localIds(dst.result())
+      // a counting sort of the edges by local src gives the CSR offsets
+      val off = new Array[Int](srcs.length + 1)
+      var k = 0
+      while (k < es.length) { off(srcAt(k) + 1) += 1; k += 1 }
+      var i = 0
+      while (i < srcs.length) { off(i + 1) += off(i); i += 1 }
+      val next = off.clone()
+      val degs = new Array[Long](srcs.length)
+      val dstAt = new Array[Int](es.length)
+      val c = if (iC >= 0) new Array[Long](es.length) else null
+      k = 0
+      while (k < es.length) {
+        val at = next(srcAt(k))
+        next(srcAt(k)) += 1
+        degs(srcAt(k)) = eg(k)
+        dstAt(at) = dstOf(k)
+        if (c != null) c(at) = ec(k)
+        k += 1
+      }
+      EdgeBlock(srcs, degs, off, dstAt, dsts, c)
+    }
+  }
+
+  /** The attach tier's state for one call: `blocks` are the cached edge
+   *  frame's partitions as [[EdgeBlock]]s, persisted for the call only;
+   *  `nodes` holds every src ascending, its degree at the same index of
+   *  `degs`; `maxC` is the largest `c`. */
+  private final case class Attached(blocks: RDD[EdgeBlock], nodes: Array[Long],
+      degs: Array[Long], maxC: Long) {
+    /** The final (node, r) arrays, `ns` ascending, narrowed to the srcs
+     *  — the inner join of the SQL readout: (node, deg, r), ascending. */
+    def withDeg(ns: Array[Long], rs: Array[Long]): (Array[Long], Array[Long], Array[Long]) = {
+      val (vs, ds, us) = (new mutable.ArrayBuilder.ofLong, new mutable.ArrayBuilder.ofLong,
+        new mutable.ArrayBuilder.ofLong)
+      var j = 0
+      var i = 0
+      while (i < ns.length) {
+        while (j < nodes.length && nodes(j) < ns(i)) j += 1
+        if (j < nodes.length && nodes(j) == ns(i)) { vs += ns(i); ds += degs(j); us += rs(i) }
+        i += 1
+      }
+      (vs.result(), ds.result(), us.result())
+    }
   }
 
   /** The attach tier of the rank core: memory-backed, unchunked
@@ -388,50 +540,44 @@ object Graph {
    *  round-invariant degree `push.agg` is attached to the edge rows
    *  through a broadcast join, and the result is cast to long,
    *  hash-partitioned by dst and persisted: the ONE cached edge frame
-   *  of the call, and the only SQL it plans. It is built from the
-   *  unpersisted `edges` through deterministic subplans, so it
+   *  of the corpus, and the only SQL the tier plans. It is built from
+   *  the unpersisted `edges` through deterministic subplans, so it
    *  plan-matches across invocations in one JVM — min-of-N reuses it,
    *  and q148 and q184 share it — until lineitem's content key changes
-   *  ([[CorpusArtifacts]] then refreshes it from the new files). One
-   *  RDD job over its cached rows (the prologue) collects every src's
-   *  degree and the largest `c`; the
-   *  vertex count, the start vector, the rounds ([[driverRounds]]) and
-   *  the readout are then all computed on the driver. None at the
-   *  other tiers, and past the ceiling (reachable only with a forced
-   *  ceiling): the frame is released and the caller runs the SQL tiers
-   *  of [[massPush]]. */
-  private def attachEdges(edges: DataFrame, push: Push,
-      tier: EdgeTier): Option[Attached] =
+   *  ([[CorpusArtifacts]] then refreshes it from the new files).
+   *  One RDD job over its cached rows (the prologue) turns each
+   *  partition into one [[EdgeBlock]], persisted at `tier.level`, and
+   *  collects every src's degree and the largest `c`. `use` then runs
+   *  the rounds ([[driverRounds]]) and the readout on the driver; the
+   *  blocks live for that call only and are released before this
+   *  returns, so the cached frame is all the tier leaves behind. None
+   *  at the other tiers, and past the ceiling (reachable only with a
+   *  forced ceiling): the frame is released and the caller runs the
+   *  SQL tiers of [[massPush]]. */
+  private def attachEdges[T](edges: DataFrame, push: Push, tier: EdgeTier)(
+      use: Attached => T): Option[T] =
     if (tier.chunked || tier.level != StorageLevel.MEMORY_AND_DISK) None
     else {
-      val cols = Seq("src", "dst", push.deg) ++ Seq("c").filter(edges.columns.contains)
+      val cols = Seq("src", "dst", push.deg) ++ (if (push.weighted) Seq("c") else Nil)
       val re = edges.join(broadcast(edges.groupBy(col("src")).agg(push.agg.as(push.deg))), "src")
         .select(cols.map(c => col(c).cast("long")): _*)
         .repartition(col("dst")).persist(tier.level)
-      val rows = re.queryExecution.toRdd
       val iC = cols.indexOf("c")
-      // a src's edges spread over the dst partitions, each carrying the
-      // same attached degree
-      val parts = rows.mapPartitions { it =>
-        val deg = mutable.LongMap.empty[Long]
-        var maxC = Long.MinValue
-        it.foreach { row =>
-          deg(row.getLong(0)) = row.getLong(2)
-          if (iC >= 0) maxC = math.max(maxC, row.getLong(iC))
+      val blocks = re.queryExecution.toRdd
+        .mapPartitions(rows => Iterator.single(EdgeBlock(rows, iC))).persist(tier.level)
+      try {
+        // a src's edges spread over the dst partitions, each block
+        // holding the same attached degree
+        val parts = blocks.map(b => ((b.srcs, b.degs), b.maxC)).collect()
+        val (nodes, degs) = mergeRuns(parts.map(_._1), (_, d) => d)
+        if (nodes.length > tier.vertexCeiling) {
+          re.unpersist()
+          None
+        } else {
+          tier.evict()
+          Some(use(Attached(blocks, nodes, degs, parts.map(_._2).maxOption.getOrElse(Long.MinValue))))
         }
-        Iterator.single((deg.toArray, maxC))
-      }.collect()
-      val degOf = mutable.LongMap.empty[Long]
-      parts.foreach(_._1.foreach { case (v, d) => degOf(v) = d })
-      val byNode = degOf.toArray.sortBy(_._1)
-      if (byNode.length > tier.vertexCeiling) {
-        re.unpersist()
-        None
-      } else {
-        tier.evict()
-        Some(Attached(rows, iC, byNode.map(_._1), byNode.map(_._2),
-          parts.map(_._2).maxOption.getOrElse(Long.MinValue)))
-      }
+      } finally blocks.unpersist(blocking = true)
     }
 
   /** The SQL tiers of the rank core, shared by [[pageRank]],
@@ -477,44 +623,34 @@ object Graph {
   /** The attach tier's rounds. The rank vector is vertex-sized and
    *  already crosses the driver every round (that is what broadcasting
    *  it means), so the driver also combines it: each round is ONE job
-   *  over the cached blocks of the attached frame `a`, starting from
-   *  `r0` (aligned with `a.nodes`).
-   *  Every task looks each edge's src up in the broadcast (node, r)
-   *  arrays sorted by node and sums the floored contributions per dst;
-   *  the driver collects the per-dst sums, adds `teleAt(dst)` and
-   *  broadcasts the next vector. The semantics are those of the SQL
+   *  over the call's [[EdgeBlock]]s `a.blocks`, starting from `r0`
+   *  (aligned with `a.nodes`). The round broadcasts the (node, r)
+   *  arrays, node ascending; every task pushes its block
+   *  ([[EdgeBlock.push]]) and returns the reached dsts with their sums
+   *  as two primitive arrays; the driver merges them, adds `teleAt(dst)`
+   *  and broadcasts the next vector. The semantics are those of the SQL
    *  round's inner join plus `groupBy(dst)`: an edge whose src holds no
    *  rank contributes nothing, and the next vector holds exactly the
    *  dsts that were reached. Each round's broadcast is destroyed once
    *  its job is done. Returns the final (node, r) arrays, sorted by
    *  node. */
-  private def driverRounds(a: Attached, r0: Array[Long],
-      share: (Long, Long, Long) => Long, teleAt: Long => Long,
+  private def driverRounds(a: Attached, r0: Array[Long], teleAt: Long => Long,
       iterations: Int): (Array[Long], Array[Long]) = {
-    val rows = a.rows
-    val iC = a.iC
     var nodes = a.nodes
     var rs = r0
     for (_ <- 1 to iterations) {
-      val bc = rows.sparkContext.broadcast((nodes, rs))
-      val reached = rows.mapPartitions { it =>
+      val bc = a.blocks.sparkContext.broadcast((nodes, rs))
+      val reached = a.blocks.map { b =>
         val (ns, rv) = bc.value
-        val in = mutable.LongMap.empty[Long]
-        it.foreach { row =>
-          val at = java.util.Arrays.binarySearch(ns, row.getLong(0))
-          if (at >= 0) {
-            val dst = row.getLong(1)
-            val c = if (iC < 0) 1L else row.getLong(iC)
-            in(dst) = addExact(in.getOrElse(dst, 0L), share(rv(at), row.getLong(2), c))
-          }
-        }
-        in.iterator
+        b.push(ns, rv)
       }.collect()
       bc.destroy()
-      // a dst's edges share one partition; adding still merges any split
-      val next = reached.groupMapReduce(_._1)(_._2)(addExact).toArray.sortBy(_._1)
-      nodes = next.map(_._1)
-      rs = next.map { case (dst, sum) => addExact(sum, teleAt(dst)) }
+      // a dst's edges share one block; the merge still adds any split
+      val (next, sums) = mergeRuns(reached, addExact)
+      var i = 0
+      while (i < next.length) { sums(i) = addExact(sums(i), teleAt(next(i))); i += 1 }
+      nodes = next
+      rs = sums
     }
     (nodes, rs)
   }
@@ -535,16 +671,16 @@ object Graph {
   /** pageRank and weightedPageRank at the attach tier: the uniform
    *  start vector, the rounds, and [[rankReadout]]'s rows (node,
    *  <degCol>, rank_units, share) ordered by node, built on the driver. */
-  private def attachedRank(s: SparkSession, a: Attached, push: Push,
-      degCol: String, iterations: Int): DataFrame = {
+  private def attachedRank(s: SparkSession, a: Attached, degCol: String,
+      iterations: Int): DataFrame = {
     val n = a.nodes.length.toLong
     val rows =
       if (n == 0) Seq.empty[Row]
       else {
         val tele = teleShare(n)
-        val (ns, rs) = driverRounds(a, Array.fill(a.nodes.length)(M / n), push.share,
-          _ => tele, iterations)
-        a.withDeg(ns, rs).toSeq.map { case (v, d, r) => Row(v, d, r, shareOf(r)) }
+        val (ns, rs) = driverRounds(a, Array.fill(a.nodes.length)(M / n), _ => tele, iterations)
+        val (vs, ds, us) = a.withDeg(ns, rs)
+        vs.indices.map(i => Row(vs(i), ds(i), us(i), shareOf(us(i))))
       }
     localRanks(s, Seq("node", degCol, "rank_units", "share"), rows)
   }
@@ -573,17 +709,20 @@ object Graph {
   }
 
   /** Integer PageRank over a directed edge list (src, dst) — callers
-   *  pass a symmetrized frame for undirected graphs. Returns
+   *  pass a symmetrized frame for undirected graphs. An edge with a NULL
+   *  src or dst is dropped at every tier ([[rankEdges]]; the same holds
+   *  for [[weightedPageRank]] and [[personalizedPageRank]]). Returns
    *  (node, deg, rank_units, share) ordered by node; the rounds run at
    *  the attach tier ([[attachEdges]]) or in [[massPush]], as `tier`
    *  selects. */
   def pageRank(edges: DataFrame, iterations: Int = Iterations,
       tier: EdgeTier = EdgeTier()): DataFrame = {
-    attachEdges(edges, UniformPush, tier) match {
-      case Some(a) => return attachedRank(edges.sparkSession, a, UniformPush, "deg", iterations)
+    val e = rankEdges(edges)
+    attachEdges(e, UniformPush, tier)(attachedRank(e.sparkSession, _, "deg", iterations)) match {
+      case Some(ranked) => return ranked
       case None =>
     }
-    val r = pushRounds(edges, UniformPush, tier)
+    val r = pushRounds(e, UniformPush, tier)
     if (r.n == 0)
       return r.start.select(col("src").as("node"), lit(0L).as("deg"),
         lit(0L).as("rank_units"), lit(0.0).as("share"))
@@ -679,13 +818,15 @@ object Graph {
           s"bound $MaxSafeEdgeStrength for the per-edge product r*$Damp*c " +
           "(r can reach the 1e12 mass scale); pre-scale c by its GCD or " +
           "carry contributions in decimal(38,0)")
-    attachEdges(edges, WeightedPush, tier) match {
-      case Some(a) =>
-        if (a.nodes.nonEmpty) checkC(a.maxC)
-        return attachedRank(edges.sparkSession, a, WeightedPush, "wdeg", iterations)
+    val e = rankEdges(edges)
+    attachEdges(e, WeightedPush, tier) { a =>
+      if (a.nodes.nonEmpty) checkC(a.maxC)
+      attachedRank(e.sparkSession, a, "wdeg", iterations)
+    } match {
+      case Some(ranked) => return ranked
       case None =>
     }
-    val r = pushRounds(edges, WeightedPush, tier, max(col("c")).as("cmax"))
+    val r = pushRounds(e, WeightedPush, tier, max(col("c")).as("cmax"))
     if (r.n == 0)
       return r.start.select(col("src").as("node"), lit(0L).as("wdeg"),
         lit(0L).as("rank_units"), lit(0.0).as("share"))
@@ -1938,29 +2079,31 @@ object Graph {
    *  copies keep brand values). */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
       iterations: Int = Iterations, tier: EdgeTier = EdgeTier()): DataFrame = {
-    attachEdges(edges, UniformPush, tier) match {
-      case Some(a) =>
-        val seedArr = seeds.select(col("pk").cast("long")).distinct().collect()
-          .collect { case r if !r.isNullAt(0) => r.getLong(0) }.sorted
-        def isSeed(v: Long) = java.util.Arrays.binarySearch(seedArr, v) >= 0
-        val ns = a.nodes.count(isSeed).toLong
-        val rows =
-          if (ns == 0) Seq.empty[Row]
-          else {
-            val tele = teleShare(ns)
-            val (nodes, rs) = driverRounds(a, a.nodes.map(v => if (isSeed(v)) M / ns else 0L),
-              UniformPush.share, v => if (isSeed(v)) tele else 0L, iterations)
-            a.withDeg(nodes, rs).sortBy { case (v, _, r) => (-r, v) }.take(PprTopK).toSeq
-              .map { case (v, d, r) => Row(v, d, r, shareOf(r), if (isSeed(v)) 1L else 0L) }
-          }
-        return localRanks(edges.sparkSession,
-          Seq("part_id", "deg", "rank_units", "share", "is_seed"), rows)
+    val e = rankEdges(edges)
+    attachEdges(e, UniformPush, tier) { a =>
+      val seedArr = seeds.select(col("pk").cast("long")).distinct().collect()
+        .collect { case r if !r.isNullAt(0) => r.getLong(0) }.sorted
+      def isSeed(v: Long) = java.util.Arrays.binarySearch(seedArr, v) >= 0
+      val ns = a.nodes.count(isSeed).toLong
+      val rows =
+        if (ns == 0) Seq.empty[Row]
+        else {
+          val tele = teleShare(ns)
+          val (nodes, rs) = driverRounds(a, a.nodes.map(v => if (isSeed(v)) M / ns else 0L),
+            v => if (isSeed(v)) tele else 0L, iterations)
+          val (vs, ds, us) = a.withDeg(nodes, rs)
+          us.indices.sortBy(i => (-us(i), vs(i))).take(PprTopK).map(i =>
+            Row(vs(i), ds(i), us(i), shareOf(us(i)), if (isSeed(vs(i))) 1L else 0L))
+        }
+      localRanks(e.sparkSession, Seq("part_id", "deg", "rank_units", "share", "is_seed"), rows)
+    } match {
+      case Some(ranked) => return ranked
       case None =>
     }
     // seedSet is vertex-bounded (one brand's parts) — checkpoint it
     // once so its consumers below don't re-run its distinct
     val seedSet = seeds.select(col("pk")).distinct().localCheckpoint()
-    val r = pushRounds(edges
+    val r = pushRounds(e
       .join(broadcast(seedSet.withColumn("dst_seed", lit(1L))),
         col("dst") === col("pk"), "left")
       .select(col("src"), col("dst"),

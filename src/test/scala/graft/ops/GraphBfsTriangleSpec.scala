@@ -179,6 +179,37 @@ class GraphBfsTriangleSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("a third call of each SQL loop over the same frames leaves the persisted set of the first") {
+    // one frame per loop, built once: every call plan-matches the frame
+    // Rounds persisted on the first, as a production caller's does
+    val e = sym(Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L))).toDF("src", "dst")
+    val w = sym(Seq((1L, 2L), (2L, 3L), (3L, 4L))).map { case (a, b) => (a, b, a + b) }
+      .toDF("src", "dst", "w")
+    val bip = Seq((1L, 1L), (1L, 2L), (2L, 2L), (3L, 2L)).toDF("cust", "part")
+    val seeds = Seq(1L).toDF("node")
+    val sc = spark.sparkContext
+    // RDDs holding cached blocks, local checkpoints excluded: round
+    // frames are dropped by the ContextCleaner on its own schedule
+    def persisted(): Set[Int] = {
+      val rdds = sc.getPersistentRDDs
+      sc.getRDDStorageInfo.map(_.id).filter(id => rdds.get(id).exists(!_.isCheckpointed)).toSet
+    }
+    val loops: Seq[(String, () => Unit)] = Seq(
+      "bfsHops" -> (() => Graph.bfsHops(e, seeds, maxHops = 4).collect()),
+      "kCorePeel" -> (() => Graph.kCorePeel(e, k = 2, rounds = 4).collect()),
+      "cheapestPaths" -> (() => Graph.cheapestPaths(w, seeds, rounds = 4).collect()),
+      "connectedComponents" -> (() => Graph.connectedComponents(e).collect()),
+      "labelPropagation" -> (() => Graph.labelPropagation(e).collect()),
+      "hitsAuthorities" -> (() => Graph.hitsAuthorities(bip, rounds = 4).collect()))
+    for ((loop, call) <- loops) {
+      call()
+      val first = persisted()
+      call()
+      call()
+      assert(persisted() == first, loop)
+    }
+  }
+
   /** Runs q159's oriented wedge-closure core on an explicit symmetric
     * edge list (the production query builds its edges from lineitem). */
   test("labelPropagation: bridged triangles split into two communities where CC sees one") {

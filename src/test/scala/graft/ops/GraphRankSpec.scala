@@ -218,15 +218,53 @@ class GraphRankSpec extends AnyFunSuite with SparkSuite {
       assert(run(tier) == want)
     }
 
-  test("the attach tier matches the replays at 1 and 7 shuffle partitions") {
+  // NULL endpoints beside a real vertex 0: a NULL dst must not land on
+  // 0, and a NULL src must not count as a vertex; every tier drops both
+  // edges, so each variant answers as over the edges without them
+  private val nullEnds: Seq[(Option[Long], Option[Long])] =
+    (mixed ++ Seq((0L, 1L), (1L, 0L))).map { case (a, b) => (Some(a), Some(b)) } ++
+      Seq((Some(2L), None), (None, Some(1L)))
+  private val nullEndsW: Seq[(Option[Long], Option[Long], Long)] =
+    nullEnds.map { case (a, b) => (a, b, 1L + (a.getOrElse(3L) * b.getOrElse(4L)) % 5L) }
+  private val realEnds: Seq[(Long, Long)] =
+    nullEnds.collect { case (Some(a), Some(b)) => (a, b) }
+  private val realEndsW: Seq[(Long, Long, Long)] =
+    nullEndsW.collect { case (Some(a), Some(b), c) => (a, b, c) }
+  private val nullSeeds = Set(0L, 5L)
+
+  for ((tierName, tier) <- tiers.filterNot(_._1 == "rescan"))
+    test(s"every PageRank variant in the $tierName tier drops edges with a NULL endpoint") {
+      assert(rankUnits(Graph.pageRank(nullEnds.toDF("src", "dst"), matrixIters, tier)) ==
+        replay(realEnds, matrixIters))
+      assert(rankUnits(Graph.weightedPageRank(nullEndsW.toDF("src", "dst", "c"),
+        matrixIters, tier)) == replayW(realEndsW, matrixIters))
+      assert(rankUnits(Graph.personalizedPageRank(nullEnds.toDF("src", "dst"),
+        nullSeeds.toSeq.toDF("pk"), matrixIters, tier)) ==
+        replayP(realEnds, nullSeeds, matrixIters))
+    }
+
+  test("an edge strength one past the int64-safe bound fails with one message at every tier") {
+    val e = (mixedW :+ ((1L, 2L, Graph.MaxSafeEdgeStrength + 1))).toDF("src", "dst", "c")
+    val messages = tiers.map { case (tierName, tier) =>
+      tierName -> intercept[IllegalArgumentException] {
+        Graph.weightedPageRank(e, matrixIters, tier).collect()
+      }.getMessage
+    }
+    assert(messages.map(_._2).distinct.size == 1, messages)
+    assert(messages.head._2.contains(s"max edge strength ${Graph.MaxSafeEdgeStrength + 1} "),
+      messages.head._2)
+  }
+
+  test("the attach tier matches the replays at 1, 7 and 200 shuffle partitions") {
     val conf = spark.conf
     val keys = Seq("spark.sql.shuffle.partitions",
       "spark.sql.adaptive.coalescePartitions.enabled")
     val saved = keys.map(k => k -> conf.getOption(k))
     try {
-      for (parts <- Seq(1, 7)) {
+      // at 200 most dst partitions, and so most edge blocks, are empty
+      for (parts <- Seq(1, 7, 200)) {
         conf.set("spark.sql.shuffle.partitions", parts.toLong)
-        // keep all 7 dst partitions of the tiny attached frame
+        // keep every dst partition of the tiny attached frame
         conf.set("spark.sql.adaptive.coalescePartitions.enabled", false)
         // the attached frame plan-matches across calls: drop the cached
         // copies so this partition count builds its own
