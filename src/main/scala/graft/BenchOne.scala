@@ -13,7 +13,8 @@ package graft
  *  summed executor run time of its completed stages). After each
  *  query's runs one more line gives the RDDs still cached (count and
  *  MiB, from `getRDDStorageInfo` after a gc): what the query leaves
- *  behind.
+ *  behind; then one `held` line per RDD the corpus registry holds
+ *  ([[graft.ops.CorpusArtifacts.held]]: tag, corpus dir, MiB).
  *  Usage: runMain graft.BenchOne <name> [sfDir] [runs]. */
 object BenchOne {
   def main(args: Array[String]): Unit = {
@@ -116,6 +117,11 @@ object BenchOne {
       val kept = spark.sparkContext.getRDDStorageInfo
       println(f"[benchone] $name cached_rdds=${kept.length}%d " +
         f"cached_mib=${kept.map(i => i.memSize + i.diskSize).sum / 1048576.0}%.1f")
+      // of those, what the corpus registry holds across queries
+      val mib = kept.map(i => i.id -> (i.memSize + i.diskSize) / 1048576.0).toMap
+      graft.ops.CorpusArtifacts.held.foreach { case (tag, dir, id) =>
+        println(f"[benchone] $name held tag=$tag dir=$dir mib=${mib.getOrElse(id, 0.0)}%.1f")
+      }
     }
     graft.ops.InferOps.cleanupScratch()
     spark.stop()

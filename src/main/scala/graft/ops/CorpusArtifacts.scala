@@ -6,12 +6,18 @@ import scala.collection.concurrent.TrieMap
 import scala.util.hashing.MurmurHash3
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 
-/** The one registry of per-corpus artifacts: memoized values (codebooks,
-  * exact baselines, row counts, checkpointed frames) and derived dirs
-  * (partitioned and z-ordered copies, index layouts, stream stages,
-  * chunk-built edges), each derived from ONE provisioned table.
+/** The one registry of per-corpus artifacts, each derived from ONE
+  * provisioned table. Three kinds of entry:
+  *  - memoized values (codebooks, exact baselines, row counts,
+  *    checkpointed frames), [[memo]];
+  *  - derived dirs (partitioned and z-ordered copies, index layouts,
+  *    stream stages, chunk-built edges), [[dir]];
+  *  - held RDDs (the attach tier's edge blocks), [[hold]]: a value
+  *    together with the persisted RDD it reads, which stays in the block
+  *    manager while the entry lives and is unpersisted when it drops.
   *
   * Validity rule: an artifact is valid exactly while the table it was
   * derived from has the same content key. The key of table `t` in
@@ -21,9 +27,9 @@ import org.apache.spark.sql.SparkSession
   * costs metadata calls and no Spark job. [[Tables]] observes the key on
   * every read; when it differs from the last key seen for that table,
   * the registry, once, drops the table's memo entries, deletes its
-  * derived dirs and calls `refreshByPath` on the table, so cached
-  * frames that plan-match a scan of it rebuild from the new files.
-  * Within one key every memo and derived dir is reused.
+  * derived dirs, unpersists its held RDDs and calls `refreshByPath` on
+  * the table, so cached frames that plan-match a scan of it rebuild
+  * from the new files. Within one key every entry is reused.
   *
   * Limit: a rewrite that keeps every file's name, length and
   * modification time goes undetected.
@@ -33,10 +39,12 @@ object CorpusArtifacts {
     * siblings (files that must not sit inside it, such as the scaled
     * IVF layout's codebook). */
   private final case class Derived(dir: String)
+  /** A held RDD: dropping its entry unpersists `rdd`. */
+  private final case class Held(value: Any, rdd: RDD[_])
 
   /** Last key seen per (dir, table); guarded by `this`. */
   private val seen = scala.collection.mutable.HashMap.empty[(String, String), String]
-  /** Memo values and [[Derived]] dirs by (tag, dir, table, key). */
+  /** Memo values, [[Derived]] dirs and [[Held]] RDDs by (tag, dir, table, key). */
   private val entries = TrieMap.empty[(String, String, String, String), Any]
 
   private def path(d: String, table: String): String = s"$d/$table.parquet"
@@ -67,20 +75,46 @@ object CorpusArtifacts {
     k
   }
 
-  /** Drop the entries matching `p`; returns the derived dirs deleted. */
+  /** Drop the entries matching `p`, unpersisting held RDDs; returns the
+    * derived dirs deleted. */
   private def drop(p: ((String, String, String, String)) => Boolean): Seq[String] =
-    entries.keys.filter(p).toSeq.flatMap(entries.remove).collect {
+    entries.keys.filter(p).toSeq.flatMap(entries.remove).flatMap {
       case Derived(dir) =>
         val at = Paths.get(dir)
         val siblings = Option(at.getParent.toFile.listFiles()).toSeq.flatten
           .filter(_.getName.startsWith(s"${at.getFileName}_"))
         (dir +: siblings.map(_.getPath)).foreach(InferOps.deleteDir)
-        dir
+        Some(dir)
+      case Held(_, rdd) =>
+        rdd.unpersist(blocking = true)
+        None
+      case _ => None
     }
 
   /** `build`, computed once per content key of `table` in `d`. */
   def memo[T](s: SparkSession, tag: String, d: String, table: String)(build: => T): T =
     entries.getOrElseUpdate((tag, d, table, observe(s, d, table)), build).asInstanceOf[T]
+
+  /** `build`'s value and the persisted RDD it reads, built once per
+    * content key of `table` in `d`; the RDD stays persisted until the
+    * entry drops (a key change, [[release]] or [[releaseAll]]). Of two
+    * concurrent first builds one is kept, the other unpersisted. */
+  def hold[T](s: SparkSession, tag: String, d: String, table: String)(build: => T)
+      (rdd: T => RDD[_]): T = {
+    val k = (tag, d, table, observe(s, d, table))
+    val held = entries.getOrElse(k, {
+      val fresh = { val v = build; Held(v, rdd(v)) }
+      entries.putIfAbsent(k, fresh).fold[Any](fresh) { won =>
+        fresh.rdd.unpersist(blocking = true)
+        won
+      }
+    })
+    held.asInstanceOf[Held].value.asInstanceOf[T]
+  }
+
+  /** The held RDDs as (tag, corpus dir, RDD id). */
+  def held: Seq[(String, String, Int)] =
+    entries.toSeq.collect { case ((tag, d, _, _), Held(_, rdd)) => (tag, d, rdd.id) }.sorted
 
   /** The scratch dir `tag` derived from `table` in `d`: a path suffixed
     * by the table's key, written by `write` while its `_SUCCESS` marker
@@ -99,7 +133,7 @@ object CorpusArtifacts {
   }
 
   /** Forget `d`'s artifacts tagged `tags` now: memo entries dropped,
-    * derived dirs deleted (returned). */
+    * held RDDs unpersisted, derived dirs deleted (returned). */
   def release(d: String, tags: String*): Seq[String] =
     drop { case (t, dd, _, _) => dd == d && tags.contains(t) }
 

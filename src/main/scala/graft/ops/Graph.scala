@@ -3,6 +3,9 @@ package graft.ops
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -25,11 +28,14 @@ import scala.jdk.CollectionConverters._
  * ONCE and reused by all iterations. How a round runs depends on the
  * tier. Under the vertex ceiling on memory-backed corpora
  * ([[attachEdges]]) the vertex state is driver-sized, as in Pregel:
- * one cached dst-partitioned edge frame is the only distributed
- * object kept, each call holds its partitions as primitive edge blocks
- * ([[EdgeBlock]]), the degrees, the start vector and the readout are
- * computed on the driver, and each round is one Spark job of array
- * loops whose per-dst sums the driver combines. Elsewhere
+ * the only distributed object is the dst-partitioned edge set held as
+ * primitive edge blocks ([[EdgeBlock]]), persisted with their lineage
+ * cut — the cached, lineage-truncated `EdgePartition`s of GraphX
+ * (Gonzalez et al., OSDI 2014) — and kept across calls in the corpus
+ * registry ([[CorpusArtifacts]]) while lineitem keeps its content key;
+ * the degrees, the start vector and the readout are computed on the
+ * driver, and each round is one single-stage Spark job of array loops
+ * whose per-dst sums the driver combines. Elsewhere
  * ([[massPush]]) every round is one
  * ranks⋈edges equi-join on src plus one hash aggregate on dst — the
  * shuffle pair a 1000-executor PageRank runs. At 100 TB both sides
@@ -79,7 +85,8 @@ import scala.jdk.CollectionConverters._
  *    reclaim ([[EdgeTier.afterRound]]).
  * Each loop keeps only its round body (exposed for the plan gates)
  * and its halt test. The attach tier of the rank core
- * ([[attachEdges]]) runs its rounds on the driver instead.
+ * ([[attachEdges]]) runs its rounds on the driver instead, and holds
+ * its edge blocks in the registry, not in the cache manager.
  */
 object Graph {
   import Tables._
@@ -179,10 +186,12 @@ object Graph {
    *     (never in the rescan tier, which reads the parquet every
    *     round). A later query rebuilds the chunks.
    *   - `vertexCeiling`: the broadcast ceiling ([[BroadcastMaxVertices]]);
-   *     0 forces the SMJ shapes. */
+   *     0 forces the SMJ shapes.
+   *   - `hold`: where the attach tier keeps its edge blocks across calls
+   *     ([[Hold]]); without one they live for the call only. */
   final case class EdgeTier(level: StorageLevel = StorageLevel.DISK_ONLY,
       chunked: Boolean = false, evict: () => Unit = () => (),
-      vertexCeiling: Long = BroadcastMaxVertices) {
+      vertexCeiling: Long = BroadcastMaxVertices, hold: Option[Hold] = None) {
     /** Reclaim the finished round's shuffle files and dropped
      *  checkpoint blocks NOW at chunked-build scale: ContextCleaner is
      *  GC-driven AND async — the gc queues the dead references, the
@@ -199,6 +208,18 @@ object Graph {
   /** Corpus `d`'s [[EdgeTier]]. */
   def edgeTier(s: SparkSession, d: String): EdgeTier =
     EdgeTier(edgeLevel(s, d), liCount(s, d) > EdgeBuildMaxRows, () => evictEdgeChunks(d))
+
+  /** The registry entry ([[CorpusArtifacts.hold]]) that holds the attach
+   *  tier's edge blocks of edge set `edgeSet` over corpus `dir` across
+   *  calls, one per variant (uniform or weighted), while the corpus's
+   *  lineitem keeps its content key. The name must identify the edge
+   *  set: calls that name one set over one dir share its blocks. */
+  final case class Hold(s: SparkSession, dir: String, edgeSet: String)
+
+  /** Corpus `d`'s tier for the co-purchase edges of the rank queries,
+   *  holding their attach-tier blocks as edge set `copurchase`. */
+  private def coPurchaseTier(s: SparkSession, d: String): EdgeTier =
+    edgeTier(s, d).copy(hold = Some(Hold(s, d, "copurchase")))
 
   /** The SMJ layout of an edge frame: repartitioned + sorted by the
    *  round join `key` and persisted DISK_ONLY (materialized here, the
@@ -417,7 +438,7 @@ object Graph {
     (keys, vals)
   }
 
-  /** One dst partition of the attach tier's cached edge frame as
+  /** One dst partition of the attach tier's edge frame as
    *  primitive arrays, with local integer vertex ids — the layout of
    *  GraphX's `EdgePartition` (Gonzalez et al., OSDI 2014). `srcs` holds
    *  the partition's distinct srcs ascending, each src's degree at the
@@ -478,7 +499,7 @@ object Graph {
   }
 
   private object EdgeBlock {
-    /** The block of one partition's cached (src, dst, deg[, c]) rows,
+    /** The block of one partition's (src, dst, deg[, c]) rows,
      *  all long, `c` at index `iC` (-1: none). */
     def apply(rows: Iterator[InternalRow], iC: Int): EdgeBlock = {
       val (src, dst, deg, cs) = (new mutable.ArrayBuilder.ofLong, new mutable.ArrayBuilder.ofLong,
@@ -513,12 +534,12 @@ object Graph {
     }
   }
 
-  /** The attach tier's state for one call: `blocks` are the cached edge
-   *  frame's partitions as [[EdgeBlock]]s, persisted for the call only;
-   *  `nodes` holds every src ascending, its degree at the same index of
-   *  `degs`; `maxC` is the largest `c`. */
-  private final case class Attached(blocks: RDD[EdgeBlock], nodes: Array[Long],
-      degs: Array[Long], maxC: Long) {
+  /** The attach tier's state: `blocks` are the attached edge frame's
+   *  partitions as [[EdgeBlock]]s, persisted and lineage-cut; `nodes`
+   *  holds every src ascending, its degree at the same index of `degs`;
+   *  `maxC` is the largest `c`; `s` builds the readout frames. */
+  private final case class Attached(s: SparkSession, blocks: RDD[EdgeBlock],
+      nodes: Array[Long], degs: Array[Long], maxC: Long) {
     /** The final (node, r) arrays, `ns` ascending, narrowed to the srcs
      *  — the inner join of the SQL readout: (node, deg, r), ascending. */
     def withDeg(ns: Array[Long], rs: Array[Long]): (Array[Long], Array[Long], Array[Long]) = {
@@ -535,49 +556,75 @@ object Graph {
     }
   }
 
+  /** Destroys the broadcasts the executed plan of `qe` built (the
+   *  attach tier's degree table among them), once the blocks read from
+   *  it are materialized with their lineage cut. Spark's ContextCleaner
+   *  frees them only after some later GC finds the plan unreachable, so
+   *  the relation, a few MiB on the driver, would stay live for a time
+   *  that depends on when the collector runs. */
+  private[ops] def releaseBroadcasts(qe: QueryExecution): Unit =
+    new AdaptiveSparkPlanHelper {}.collect(qe.executedPlan) { case b: BroadcastExchangeLike => b }
+      .foreach(_.relationFuture.get().destroy())
+
   /** The attach tier of the rank core: memory-backed, unchunked
-   *  corpora under the vertex ceiling — every octave up to 10×. The
-   *  round-invariant degree `push.agg` is attached to the edge rows
-   *  through a broadcast join, and the result is cast to long,
-   *  hash-partitioned by dst and persisted: the ONE cached edge frame
-   *  of the corpus, and the only SQL the tier plans. It is built from
-   *  the unpersisted `edges` through deterministic subplans, so it
-   *  plan-matches across invocations in one JVM — min-of-N reuses it,
-   *  and q148 and q184 share it — until lineitem's content key changes
-   *  ([[CorpusArtifacts]] then refreshes it from the new files).
-   *  One RDD job over its cached rows (the prologue) turns each
-   *  partition into one [[EdgeBlock]], persisted at `tier.level`, and
-   *  collects every src's degree and the largest `c`. `use` then runs
-   *  the rounds ([[driverRounds]]) and the readout on the driver; the
-   *  blocks live for that call only and are released before this
-   *  returns, so the cached frame is all the tier leaves behind. None
-   *  at the other tiers, and past the ceiling (reachable only with a
-   *  forced ceiling): the frame is released and the caller runs the
-   *  SQL tiers of [[massPush]]. */
-  private def attachEdges[T](edges: DataFrame, push: Push, tier: EdgeTier)(
+   *  corpora under the vertex ceiling — every octave up to 10×. Its one
+   *  distributed object is the edge blocks ([[Attached]]). To build them
+   *  the round-invariant degree `push.agg` is attached to the edge rows
+   *  through a broadcast join, the result cast to long and
+   *  hash-partitioned by dst — the only SQL the tier plans, never
+   *  persisted — and one RDD job (the prologue) turns each partition
+   *  into one [[EdgeBlock]], persisted at `tier.level` and
+   *  localCheckpointed, and collects every src's degree and the largest
+   *  `c`. The cut lineage makes each round job one stage whose task
+   *  reads a block and nothing under it, and nothing needs the build's
+   *  broadcasts after the prologue: they are destroyed then
+   *  ([[releaseBroadcasts]]).
+   *  With a `tier.hold` the blocks are built once per lineitem content
+   *  key and kept in the registry ([[CorpusArtifacts.hold]]) under the
+   *  edge set's name and the variant: a warm call evaluates no `edges`,
+   *  plans no SQL and runs only its round jobs; a key change, `release`
+   *  or `releaseAll` unpersists them. Without one they are built for
+   *  the call and unpersisted before this returns, leaving nothing
+   *  persisted. `use` runs the rounds ([[driverRounds]]) and the
+   *  readout on the driver. None at the other tiers, and past the
+   *  ceiling (reachable only with a forced ceiling): the blocks are
+   *  released and the caller runs the SQL tiers of [[massPush]]. */
+  private def attachEdges[T](edges: => DataFrame, push: Push, tier: EdgeTier)(
       use: Attached => T): Option[T] =
     if (tier.chunked || tier.level != StorageLevel.MEMORY_AND_DISK) None
     else {
-      val cols = Seq("src", "dst", push.deg) ++ (if (push.weighted) Seq("c") else Nil)
-      val re = edges.join(broadcast(edges.groupBy(col("src")).agg(push.agg.as(push.deg))), "src")
-        .select(cols.map(c => col(c).cast("long")): _*)
-        .repartition(col("dst")).persist(tier.level)
-      val iC = cols.indexOf("c")
-      val blocks = re.queryExecution.toRdd
-        .mapPartitions(rows => Iterator.single(EdgeBlock(rows, iC))).persist(tier.level)
-      try {
+      def build(): Attached = {
+        val e = edges
+        val cols = Seq("src", "dst", push.deg) ++ (if (push.weighted) Seq("c") else Nil)
+        val iC = cols.indexOf("c")
+        val qe = e.join(broadcast(e.groupBy(col("src")).agg(push.agg.as(push.deg))), "src")
+          .select(cols.map(c => col(c).cast("long")): _*)
+          .repartition(col("dst")).queryExecution
+        val blocks = qe.toRdd.mapPartitions(rows => Iterator.single(EdgeBlock(rows, iC)))
+          .persist(tier.level).localCheckpoint()
         // a src's edges spread over the dst partitions, each block
         // holding the same attached degree
-        val parts = blocks.map(b => ((b.srcs, b.degs), b.maxC)).collect()
+        val parts = try blocks.map(b => ((b.srcs, b.degs), b.maxC)).collect()
+        catch { case t: Throwable => blocks.unpersist(); throw t }
+        releaseBroadcasts(qe)
+        tier.evict()
         val (nodes, degs) = mergeRuns(parts.map(_._1), (_, d) => d)
-        if (nodes.length > tier.vertexCeiling) {
-          re.unpersist()
-          None
-        } else {
-          tier.evict()
-          Some(use(Attached(blocks, nodes, degs, parts.map(_._2).maxOption.getOrElse(Long.MinValue))))
-        }
-      } finally blocks.unpersist(blocking = true)
+        Attached(e.sparkSession, blocks, nodes, degs,
+          parts.map(_._2).maxOption.getOrElse(Long.MinValue))
+      }
+      tier.hold match {
+        case Some(h) =>
+          val tag = s"attach:${h.edgeSet}/${if (push.weighted) "weighted" else "uniform"}"
+          val a = CorpusArtifacts.hold(h.s, tag, h.dir, "lineitem")(build())(_.blocks)
+          if (a.nodes.length > tier.vertexCeiling) {
+            CorpusArtifacts.release(h.dir, tag)
+            None
+          } else Some(use(a))
+        case None =>
+          val a = build()
+          try if (a.nodes.length > tier.vertexCeiling) None else Some(use(a))
+          finally a.blocks.unpersist(blocking = true)
+      }
     }
 
   /** The SQL tiers of the rank core, shared by [[pageRank]],
@@ -623,7 +670,7 @@ object Graph {
   /** The attach tier's rounds. The rank vector is vertex-sized and
    *  already crosses the driver every round (that is what broadcasting
    *  it means), so the driver also combines it: each round is ONE job
-   *  over the call's [[EdgeBlock]]s `a.blocks`, starting from `r0`
+   *  over the [[EdgeBlock]]s `a.blocks`, starting from `r0`
    *  (aligned with `a.nodes`). The round broadcasts the (node, r)
    *  arrays, node ascending; every task pushes its block
    *  ([[EdgeBlock.push]]) and returns the reached dsts with their sums
@@ -671,8 +718,7 @@ object Graph {
   /** pageRank and weightedPageRank at the attach tier: the uniform
    *  start vector, the rounds, and [[rankReadout]]'s rows (node,
    *  <degCol>, rank_units, share) ordered by node, built on the driver. */
-  private def attachedRank(s: SparkSession, a: Attached, degCol: String,
-      iterations: Int): DataFrame = {
+  private def attachedRank(a: Attached, degCol: String, iterations: Int): DataFrame = {
     val n = a.nodes.length.toLong
     val rows =
       if (n == 0) Seq.empty[Row]
@@ -682,7 +728,7 @@ object Graph {
         val (vs, ds, us) = a.withDeg(ns, rs)
         vs.indices.map(i => Row(vs(i), ds(i), us(i), shareOf(us(i))))
       }
-    localRanks(s, Seq("node", degCol, "rank_units", "share"), rows)
+    localRanks(a.s, Seq("node", degCol, "rank_units", "share"), rows)
   }
 
   /** One mass-push round, the round body of every variant in the SQL
@@ -714,11 +760,12 @@ object Graph {
    *  for [[weightedPageRank]] and [[personalizedPageRank]]). Returns
    *  (node, deg, rank_units, share) ordered by node; the rounds run at
    *  the attach tier ([[attachEdges]]) or in [[massPush]], as `tier`
-   *  selects. */
-  def pageRank(edges: DataFrame, iterations: Int = Iterations,
+   *  selects. `edges` is evaluated only when a tier builds from it: a
+   *  warm attach-tier call with a `tier.hold` never does. */
+  def pageRank(edges: => DataFrame, iterations: Int = Iterations,
       tier: EdgeTier = EdgeTier()): DataFrame = {
-    val e = rankEdges(edges)
-    attachEdges(e, UniformPush, tier)(attachedRank(e.sparkSession, _, "deg", iterations)) match {
+    lazy val e = rankEdges(edges)
+    attachEdges(e, UniformPush, tier)(attachedRank(_, "deg", iterations)) match {
       case Some(ranked) => return ranked
       case None =>
     }
@@ -743,8 +790,8 @@ object Graph {
    *  hash-PASS on the exact 1000× code path, 1000× rows-PASS, and
    *  the rescan-tier spec pins. */
   def q148PageRank(s: SparkSession, d: String): DataFrame = {
-    val edges = coPurchaseStrength(s, d).select(col("src"), col("dst"))
-    pageRank(edges, tier = edgeTier(s, d))
+    pageRank(coPurchaseStrength(s, d).select(col("src"), col("dst")),
+        tier = coPurchaseTier(s, d))
       .select(col("node").as("part_id"), col("deg"), col("rank_units"), col("share"))
   }
 
@@ -809,8 +856,10 @@ object Graph {
    *  a corpus past it fails loudly with a pre-scale-by-GCD hint
    *  instead of silently wrapping in non-ANSI mode while the int128
    *  oracle stays exact.
+   *  At the attach tier the check reads the `maxC` of the blocks, held
+   *  or not, so a warm call checks too.
    *  Returns (node, wdeg, rank_units, share). */
-  def weightedPageRank(edges: DataFrame, iterations: Int = Iterations,
+  def weightedPageRank(edges: => DataFrame, iterations: Int = Iterations,
       tier: EdgeTier = EdgeTier()): DataFrame = {
     def checkC(maxC: Long): Unit =
       require(maxC <= MaxSafeEdgeStrength,
@@ -818,10 +867,10 @@ object Graph {
           s"bound $MaxSafeEdgeStrength for the per-edge product r*$Damp*c " +
           "(r can reach the 1e12 mass scale); pre-scale c by its GCD or " +
           "carry contributions in decimal(38,0)")
-    val e = rankEdges(edges)
+    lazy val e = rankEdges(edges)
     attachEdges(e, WeightedPush, tier) { a =>
       if (a.nodes.nonEmpty) checkC(a.maxC)
-      attachedRank(e.sparkSession, a, "wdeg", iterations)
+      attachedRank(a, "wdeg", iterations)
     } match {
       case Some(ranked) => return ranked
       case None =>
@@ -839,8 +888,7 @@ object Graph {
   /** q165: strength-weighted PageRank over the co-purchase graph —
    *  the full (src, dst, c) frame q148 truncates. */
   def q165WeightedPageRank(s: SparkSession, d: String): DataFrame = {
-    val edges = coPurchaseStrength(s, d)
-    weightedPageRank(edges, tier = edgeTier(s, d))
+    weightedPageRank(coPurchaseStrength(s, d), tier = coPurchaseTier(s, d))
       .select(col("node").as("part_id"), col("wdeg"), col("rank_units"),
         col("share"))
   }
@@ -2061,11 +2109,11 @@ object Graph {
    *  global). The same rounds as [[pageRank]], with the teleport share
    *  landing only at seed dsts. At the attach tier the vertex-bounded
    *  seed set is collected once per call into a sorted array that the
-   *  driver consults where it adds the teleport, so q148's cached frame
-   *  serves unchanged and no seed marker enters its lineage. The SQL
-   *  tiers carry a 0/1 seed indicator on the edge rows instead
-   *  ([[Push]] `seeded`), attached through a broadcast of the seed set,
-   *  so the build never shuffles edges.
+   *  driver consults where it adds the teleport, so q148's uniform edge
+   *  blocks serve unchanged (one held entry for both) and no seed marker
+   *  enters them. The SQL tiers carry a 0/1 seed indicator on the edge
+   *  rows instead ([[Push]] `seeded`), attached through a broadcast of
+   *  the seed set, so the build never shuffles edges.
    *  Vertices of the symmetric graph all have in-edges, so the rank
    *  frame stays complete across rounds even though non-seeds start
    *  at zero mass.
@@ -2077,9 +2125,9 @@ object Graph {
    *  integer ties. Seeds = graph vertices of the lexicographically
    *  smallest p_brand (data-derived, octave-stable: ScaleGen part
    *  copies keep brand values). */
-  def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
+  def personalizedPageRank(edges: => DataFrame, seeds: DataFrame,
       iterations: Int = Iterations, tier: EdgeTier = EdgeTier()): DataFrame = {
-    val e = rankEdges(edges)
+    lazy val e = rankEdges(edges)
     attachEdges(e, UniformPush, tier) { a =>
       val seedArr = seeds.select(col("pk").cast("long")).distinct().collect()
         .collect { case r if !r.isNullAt(0) => r.getLong(0) }.sorted
@@ -2095,7 +2143,7 @@ object Graph {
           us.indices.sortBy(i => (-us(i), vs(i))).take(PprTopK).map(i =>
             Row(vs(i), ds(i), us(i), shareOf(us(i)), if (isSeed(vs(i))) 1L else 0L))
         }
-      localRanks(e.sparkSession, Seq("part_id", "deg", "rank_units", "share", "is_seed"), rows)
+      localRanks(a.s, Seq("part_id", "deg", "rank_units", "share", "is_seed"), rows)
     } match {
       case Some(ranked) => return ranked
       case None =>
@@ -2133,12 +2181,12 @@ object Graph {
    *  at the smallest brand's parts — the top-100 "related to this
    *  brand" parts with exact integer ranks. */
   def q184PersonalizedPageRank(s: SparkSession, d: String): DataFrame = {
-    val edges = coPurchaseStrength(s, d).select(col("src"), col("dst"))
     val p = part(s, d)
     val minBrand = p.agg(min(col("p_brand"))).head().getString(0)
     val seeds = p.filter(col("p_brand") === lit(minBrand))
       .select(col("p_partkey").as("pk"))
-    personalizedPageRank(edges, seeds, tier = edgeTier(s, d))
+    personalizedPageRank(coPurchaseStrength(s, d).select(col("src"), col("dst")), seeds,
+      tier = coPurchaseTier(s, d))
   }
 
   /** Oracle: the identical seeded integer iteration as a grouped

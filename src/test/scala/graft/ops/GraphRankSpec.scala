@@ -1,7 +1,15 @@
 package graft.ops
 
-import graft.SparkSuite
+import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
+import graft.{SparkEntry, SparkSuite}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.storage.StorageLevel
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Fixture coverage for the integer PageRank family (q148/q165/q184):
@@ -9,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * provisioned graph; these pin every variant in every tier of the
   * shared mass-push core against an independent in-spec replay on
   * hand-sized graphs, plus the distribution-independence invariant. */
-class GraphRankSpec extends AnyFunSuite with SparkSuite {
+class GraphRankSpec extends AnyFunSuite with SparkSuite with BeforeAndAfterAll {
   import spark.implicits._
 
   private val M = 1000000000000L
@@ -151,6 +159,28 @@ class GraphRankSpec extends AnyFunSuite with SparkSuite {
     "rescan" -> Graph.EdgeTier(chunked = true),
     "SMJ" -> Graph.EdgeTier(vertexCeiling = 0L))
 
+  /** A corpus dir whose one-row lineitem gives the held tiers a content
+    * key; its held entries are released and the dir deleted at the end. */
+  private lazy val corpus: String = {
+    val d = Files.createTempDirectory("graft-rank-held").toString
+    spark.range(1).write.parquet(s"$d/lineitem.parquet")
+    d
+  }
+
+  /** The attach tier holding its blocks as edge set `edgeSet` of [[corpus]]. */
+  private def held(edgeSet: String): Graph.EdgeTier =
+    attach.copy(hold = Some(Graph.Hold(spark, corpus, edgeSet)))
+
+  /** The registry's held entries of `dir`: tag -> RDD id. */
+  private def heldIn(dir: String): Map[String, Int] =
+    CorpusArtifacts.held.collect { case (tag, `dir`, id) => tag -> id }.toMap
+
+  override def afterAll(): Unit = {
+    CorpusArtifacts.release(corpus, heldIn(corpus).keys.toSeq: _*)
+    InferOps.deleteDir(corpus)
+    super.afterAll()
+  }
+
   // 3 rounds: mass crosses the whole triangle-and-tail component, and
   // the rescan tier's per-round reclaim pause stays short
   private val matrixIters = 3
@@ -245,12 +275,15 @@ class GraphRankSpec extends AnyFunSuite with SparkSuite {
 
   test("an edge strength one past the int64-safe bound fails with one message at every tier") {
     val e = (mixedW :+ ((1L, 2L, Graph.MaxSafeEdgeStrength + 1))).toDF("src", "dst", "c")
-    val messages = tiers.map { case (tierName, tier) =>
+    // the held tier twice: the warm call checks the held blocks' maxC
+    val heldTwice = Seq("held", "held warm").map(_ -> held("overflow"))
+    val messages = (tiers ++ heldTwice).map { case (tierName, tier) =>
       tierName -> intercept[IllegalArgumentException] {
         Graph.weightedPageRank(e, matrixIters, tier).collect()
       }.getMessage
     }
     assert(messages.map(_._2).distinct.size == 1, messages)
+    assert(heldIn(corpus).contains("attach:overflow/weighted"), "the warm call ran held")
     assert(messages.head._2.contains(s"max edge strength ${Graph.MaxSafeEdgeStrength + 1} "),
       messages.head._2)
   }
@@ -266,9 +299,6 @@ class GraphRankSpec extends AnyFunSuite with SparkSuite {
         conf.set("spark.sql.shuffle.partitions", parts.toLong)
         // keep every dst partition of the tiny attached frame
         conf.set("spark.sql.adaptive.coalescePartitions.enabled", false)
-        // the attached frame plan-matches across calls: drop the cached
-        // copies so this partition count builds its own
-        spark.catalog.clearCache()
         for ((variant, run, want) <- variants ++ directedVariants)
           assert(run(attach) == want, s"$variant at $parts partitions")
       }
@@ -284,19 +314,19 @@ class GraphRankSpec extends AnyFunSuite with SparkSuite {
       assert(run(forced) == want, variant)
   }
 
-  /** Jobs started by `call`, counted up to a marker job: the listener
-    * bus delivers events in order, so every earlier job is counted once
-    * the marker's start arrives. */
-  private def jobsOf(call: => Unit): Int = {
+  /** The stage count of each job started by `call`, counted up to a
+    * marker job: the listener bus delivers events in order, so every
+    * earlier job is counted once the marker's start arrives. */
+  private def stagesOf(call: => Unit): Seq[Int] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
-    val started = new java.util.concurrent.atomic.AtomicInteger
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[Int]
     val marked = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         if (Option(j.properties).exists(_.getProperty("spark.job.description") == "marker"))
           marked.countDown()
-        else started.incrementAndGet()
+        else started.add(j.stageInfos.size)
     }
     sc.addSparkListener(listener)
     try {
@@ -304,53 +334,108 @@ class GraphRankSpec extends AnyFunSuite with SparkSuite {
       sc.setJobDescription("marker")
       try sc.parallelize(Seq(1)).count() finally sc.setJobDescription(null)
       assert(marked.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      started.get
+      started.asScala.toSeq
     } finally sc.removeSparkListener(listener)
   }
 
   test("attach-tier pageRank runs one Spark job per round") {
     val df = mixed.toDF("src", "dst")
-    def jobs(rounds: Int): Int = jobsOf(Graph.pageRank(df, rounds, attach).collect())
-    jobs(1) // builds and caches the edge frame the counted calls reuse
+    def jobs(rounds: Int): Int = stagesOf(Graph.pageRank(df, rounds, attach).collect()).size
     assert(jobs(6) - jobs(3) == 3)
   }
 
-  test("a warm attach-tier call runs the prologue job, one job per round and no other SQL job") {
+  test("a held warm attach-tier call runs only its round jobs, one stage each") {
     val rounds = 4
     // the personalized call's per-call seed-set collect: the distinct's
     // shuffle-map stage and its result stage
     val seedCollectJobs = 2
-    val calls: Seq[(String, Int => Unit)] = Seq(
-      "uniform" -> (k => Graph.pageRank(mixed.toDF("src", "dst"), k, attach).collect()),
-      "weighted" -> (k => Graph.weightedPageRank(mixedW.toDF("src", "dst", "c"), k, attach)
-        .collect()),
-      "seeded" -> (k => Graph.personalizedPageRank(mixed.toDF("src", "dst"),
-        mixedSeeds.toSeq.toDF("pk"), k, attach).collect()))
+    // a warm call must not evaluate its edges
+    def unbuilt: org.apache.spark.sql.DataFrame = sys.error("a warm call built its edges")
+    val calls: Seq[(String, (Int, => org.apache.spark.sql.DataFrame) => Unit)] = Seq(
+      "uniform" -> ((k, e) => Graph.pageRank(e, k, held("mixed")).collect()),
+      "weighted" -> ((k, e) => Graph.weightedPageRank(e, k, held("mixed")).collect()),
+      "seeded" -> ((k, e) => Graph.personalizedPageRank(e, mixedSeeds.toSeq.toDF("pk"), k,
+        held("mixed")).collect()))
     for ((variant, call) <- calls) {
-      call(1) // builds and caches the attached frame
-      val n = jobsOf(call(rounds))
+      call(1, if (variant == "weighted") mixedW.toDF("src", "dst", "c")
+        else mixed.toDF("src", "dst"))
+      val stages = stagesOf(call(rounds, unbuilt))
       // the collected readout is a local frame: collecting it starts no job
-      val want = if (variant == "seeded") rounds + 1 + seedCollectJobs else rounds + 1
-      assert(n == want, s"$variant: $n jobs for $rounds rounds")
+      val want = if (variant == "seeded") rounds + seedCollectJobs else rounds
+      assert(stages.size == want, s"$variant: ${stages.size} jobs for $rounds rounds")
+      if (variant != "seeded") assert(stages.forall(_ == 1), s"$variant: stages per job $stages")
     }
   }
 
-  test("three personalized calls leave one persisted attach frame, shared with pageRank") {
+  test("an unheld attach-tier call leaves the block manager as it found it") {
     val sc = spark.sparkContext
-    spark.catalog.clearCache()
-    val before = sc.getRDDStorageInfo.map(_.id).toSet
-    // RDDs persisted since `before`, with their cached bytes
-    def added(): Map[Int, Long] = sc.getRDDStorageInfo.filterNot(i => before(i.id))
-      .map(i => i.id -> (i.memSize + i.diskSize)).toMap
-    val after = (1 to 3).map { _ =>
-      Graph.personalizedPageRank(mixed.toDF("src", "dst"), mixedSeeds.toSeq.toDF("pk"),
-        matrixIters, attach).collect()
-      added()
+    def stored(): Map[Int, Long] =
+      sc.getRDDStorageInfo.map(i => i.id -> (i.memSize + i.diskSize)).toMap
+    // what earlier tests left may be cleaned meanwhile: nothing is added
+    def added(before: (Map[Int, Long], collection.Set[Int])): Map[Int, Long] =
+      stored().filter { case (id, _) => !before._1.contains(id) } ++
+        (sc.getPersistentRDDs.keySet -- before._2).map(_ -> -1L)
+    for ((variant, run, want) <- variants) {
+      val before = (stored(), sc.getPersistentRDDs.keySet)
+      assert(run(attach) == want, variant)
+      assert(added(before).isEmpty, variant)
     }
-    assert(after.head.size == 1, after.head)
-    assert(after.forall(_ == after.head), after)
-    Graph.pageRank(mixed.toDF("src", "dst"), matrixIters, attach).collect()
-    assert(added() == after.head)
+  }
+
+  test("the attach build's broadcasts are destroyed once its blocks exist") {
+    // the build's degree join, as attachEdges plans it; what the
+    // ContextCleaner would free only after some later GC
+    val e = mixed.toDF("src", "dst")
+    val qe = e.join(broadcast(e.groupBy("src").count()), "src")
+      .repartition(col("dst")).queryExecution
+    qe.toRdd.count()
+    val built = new AdaptiveSparkPlanHelper {}.collect(qe.executedPlan) {
+      case b: BroadcastExchangeLike => b.relationFuture.get()
+    }
+    assert(built.nonEmpty, qe.executedPlan)
+    Graph.releaseBroadcasts(qe)
+    built.foreach(b => intercept[org.apache.spark.SparkException](b.value))
+  }
+
+  test("two edge sets held over one corpus dir each return their own replay") {
+    for (_ <- 1 to 2) { // cold, then warm
+      assert(rankUnits(Graph.pageRank(mixed.toDF("src", "dst"), matrixIters,
+        held("two-mixed"))) == replay(mixed, matrixIters))
+      assert(rankUnits(Graph.pageRank(directed.toDF("src", "dst"), matrixIters,
+        held("two-directed"))) == replayJoin(directedW, weighted = false, None, matrixIters))
+    }
+    val ids = heldIn(corpus)
+    val both = Seq("attach:two-mixed/uniform", "attach:two-directed/uniform").map(ids)
+    assert(both.distinct.size == 2 && both.forall(spark.sparkContext.getPersistentRDDs.contains),
+      ids)
+    // past a forced ceiling a held entry is released and the SQL tiers answer
+    assert(rankUnits(Graph.pageRank(mixed.toDF("src", "dst"), matrixIters,
+      held("two-mixed").copy(vertexCeiling = 0L))) == replay(mixed, matrixIters))
+    assert(!heldIn(corpus).contains("attach:two-mixed/uniform"))
+    assert(!spark.sparkContext.getPersistentRDDs.contains(both.head))
+  }
+
+  test("q148 and q184 share one held entry") {
+    val d = Files.createTempDirectory("graft-rank-shop").toString
+    val sc = spark.sparkContext
+    try {
+      // one order per undirected edge of `mixed`, so the co-purchase
+      // graph is `mixed`; the smallest brand's parts are q184's seeds
+      mixed.filter { case (a, b) => a < b }.zipWithIndex
+        .flatMap { case ((a, b), o) => Seq((o.toLong, a), (o.toLong, b)) }
+        .toDF("l_orderkey", "l_partkey").write.parquet(s"$d/lineitem.parquet")
+      (1L to 7L).map(p => (p, if (mixedSeeds(p)) "Brand#1" else "Brand#2"))
+        .toDF("p_partkey", "p_brand").write.parquet(s"$d/part.parquet")
+      assert(rankUnits(SparkEntry.queries("q148_pagerank")(spark, d)) ==
+        replay(mixed, Graph.Iterations))
+      val after148 = (heldIn(d), sc.getPersistentRDDs.keySet)
+      assert(after148._1.keySet == Set("attach:copurchase/uniform"), after148._1)
+      SparkEntry.queries("q184_personalized_pagerank")(spark, d).collect()
+      assert((heldIn(d), sc.getPersistentRDDs.keySet) == after148)
+    } finally {
+      CorpusArtifacts.release(d, heldIn(d).keys.toSeq: _*)
+      InferOps.deleteDir(d)
+    }
   }
 
   test("the eviction hook fires once the rounds stop reading the source, never in the rescan tier") {

@@ -90,9 +90,20 @@ class RewriteInPlaceSpec extends AnyFunSuite with SparkSuite {
   private def rows(q: String, dir: Path): Seq[String] =
     SparkEntry.queries(q)(spark, dir.toString).collect().map(_.toString).toSeq.sorted
 
+  /** The registry's held RDDs over `dir`: tag -> RDD id. */
+  private def heldIn(dir: Path): Map[String, Int] =
+    CorpusArtifacts.held.collect { case (tag, d, id) if d == dir.toString => tag -> id }.toMap
+
+  /** Delete `dirs`, releasing what the registry holds over them. */
+  private def discard(dirs: Path*): Unit = dirs.foreach { d =>
+    CorpusArtifacts.release(d.toString, heldIn(d).keys.toSeq: _*)
+    InferOps.deleteDir(d.toString)
+  }
+
   Seq("q57_partition_prune", "q61_approx_recall", "q82_zorder_layout",
     "q87_streaming_upsert", "q94_cluster_keep_best", "q137_semdedup_cell",
-    "q148_pagerank", "q176_hits").foreach { q =>
+    "q148_pagerank", "q165_weighted_pagerank", "q176_hits",
+    "q184_personalized_pagerank").foreach { q =>
     test(s"$q answers from the rewritten files (same JVM, same dir)") {
       val a = Files.createTempDirectory("graft-rewrite-a")
       val b = a.resolveSibling(s"${a.getFileName}-copy")
@@ -106,7 +117,38 @@ class RewriteInPlaceSpec extends AnyFunSuite with SparkSuite {
         val same = onA == onB // compared outside assert: the answers are long
         assert(same, s"$q on the rewritten dir: ${onA.diff(onB).take(3)} stale, " +
           s"${onB.diff(onA).take(3)} missing (pre-rewrite answer had ${before.size} rows)")
-      } finally Seq(a, b).foreach(p => InferOps.deleteDir(p.toString))
+      } finally discard(a, b)
     }
+  }
+
+  test("a lineitem rewrite unpersists the held edge blocks of the old key") {
+    val a = Files.createTempDirectory("graft-rewrite-held")
+    val b = a.resolveSibling(s"${a.getFileName}-copy")
+    val sc = spark.sparkContext
+    // held RDD ids -> cached bytes
+    def bytes(ids: Iterable[Int]): Map[Int, Long] = sc.getRDDStorageInfo
+      .filter(i => ids.exists(_ == i.id)).map(i => i.id -> (i.memSize + i.diskSize)).toMap
+    try {
+      copyTree(src, a)
+      rows("q148_pagerank", a)
+      val old = heldIn(a)
+      assert(old.keySet == Set("attach:copurchase/uniform"), old)
+      rewriteInPlace(a)
+      copyTree(a, b)
+      // the RDDs a q148 call on `dir` adds to the persisted set
+      def adds(dir: Path): Set[Int] = {
+        val before = sc.getPersistentRDDs.keySet
+        rows("q148_pagerank", dir)
+        (sc.getPersistentRDDs.keySet -- before).toSet
+      }
+      val rerun = adds(a)
+      assert(!old.values.exists(sc.getPersistentRDDs.contains), s"old blocks $old still persisted")
+      val fresh = adds(b)
+      // the rerun leaves the persisted set a fresh run leaves
+      assert(rerun == heldIn(a).values.toSet && fresh == heldIn(b).values.toSet,
+        (rerun, fresh, CorpusArtifacts.held))
+      assert(heldIn(a).keySet == heldIn(b).keySet)
+      assert(bytes(rerun).values.toSeq == bytes(fresh).values.toSeq)
+    } finally discard(a, b)
   }
 }
